@@ -21,13 +21,13 @@ import org.apache.spark.sql.SparkSession
   * Also prints a `__job_floor` row first: min time of a trivial
   * 1-row noop job — the irreducible per-job scheduling constant.
   *
-  * Usage: BenchPhases <sfDir> <q1,q2,...|slowest:N>  (env: SPARK_GRAFT_RUNS)
+  * Usage: BenchPhases <sfDir> <q1,q2,...|all>  (env: SPARK_GRAFT_RUNS)
   */
 object BenchPhases {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: BenchPhases <sfDir> <q1,q2,...|all>")
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus()
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
     val spark = GraftSession.tune(
       SparkSession.builder()

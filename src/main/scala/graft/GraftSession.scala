@@ -33,25 +33,17 @@ object GraftSession {
     // driver's core-scaling runs. Deferring to the cpus env restores
     // the documented contract without depending on config order.
     .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
-    // Scan-split sizing lever: Spark's 128m default gives a 1.3 GB
-    // single-file fact table only ~11 scan partitions — a third of
-    // local[32]'s cores sit idle through every sf10 table scan. The
-    // A/B lever for measuring split size against core count; see
-    // BENCH_NOTES round 14 for the measured decision.
-    .config("spark.sql.files.maxPartitionBytes",
-      sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"))
-    // ContextCleaner-starvation A/B lever (BENCH_NOTES round 14): the
-    // hypothesis was that GC-driven broadcast/shuffle cleanup starves
-    // on a large heap and inflates long sweeps. MEASURED at sf1, full
-    // 259-query sweep: forcing 1min periodic GC is a 1.08× net LOSS
-    // (795.6 s vs 739.7 s) — the r13 in-suite spikes were execution-
-    // memory pressure from repeated pair-kernel+CC recomputes, fixed
-    // by DedupArtifacts, not cleaner debt. Default stays at Spark's
-    // 30min; the env var remains for re-testing on other heap sizes.
-    .config("spark.cleaner.periodicGC.interval",
-      sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "30min"))
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus().toString))
+
+  /** Local core count for the entry points' `local[N]` master:
+    * `SPARK_GRAFT_CPUS`, default 32. Fails fast unless it is a positive
+    * Int — the value also lands in shuffle partitions and bench JSON. */
+  def cpus(env: Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_CPUS").fold(32) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
 
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
     val spark = tune(

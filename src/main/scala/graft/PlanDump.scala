@@ -14,7 +14,7 @@ object PlanDump {
     val sfDir = args(0)
     val outDir = java.nio.file.Paths.get(args(1))
     java.nio.file.Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus()
     val spark = GraftSession.tune(
       SparkSession.builder()
         .master(s"local[$cpus]")

@@ -65,10 +65,10 @@ object AsOfJoinStrategy extends SparkStrategy {
 /** Two-pointer as-of merge over co-partitioned, (key, time)-sorted
   * children.
   *
-  * CODEGEN DECISION (measured, [[AsOfMicroBench]] at 5M x 5M rows,
-  * 50k keys, local[32], min-of-5): native interpreted exec 0.87 s;
-  * the exchange+sort scaffolding alone (fully codegen'd) 0.80 s; the
-  * window-composed equivalent (fully WholeStageCodegen'd running
+  * CODEGEN DECISION (measured at 5M x 5M rows, 50k keys, local[32],
+  * min-of-5; BENCH_NOTES "Round 10: as-of codegen decision"): native
+  * interpreted exec 0.87 s; the exchange+sort scaffolding alone (fully
+  * codegen'd) 0.80 s; the window-composed equivalent (fully WholeStageCodegen'd running
   * struct-max) 1.07 s. The row-at-a-time merge adds ~8% on top of the
   * sorts that any as-of plan needs, and the whole native plan beats
   * the codegen'd composition by ~20% (it never unions the right rows

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types._
@@ -335,7 +335,15 @@ object NozzlePipeline {
   /** Kafka-sink fault handling (O9/O10): per record, bounded retry up
     * to `repartitionMax` (kafka.go:230-275, default 5); exhausted
     * records land in the DLQ path with `publish_fail` accounting
-    * instead of being silently dropped. */
+    * instead of being silently dropped.
+    *
+    * One publish pass per micro-batch. The retry pass is observed
+    * (`ok`/`failed` counts) and only its failed rows are kept, by one
+    * eager `localCheckpoint`, so a batch costs one Spark job when
+    * nothing fails and two otherwise (the second is the DLQ append).
+    * The counts are exact: observed metrics come from that one action,
+    * and the DLQ write reads the kept rows, never the publish pass.
+    * The DLQ path is touched only when a record failed. */
   def startDlq(
       routed: DataFrame,
       checkpoint: String,
@@ -349,7 +357,8 @@ object NozzlePipeline {
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val spark = batch.sparkSession
         import spark.implicits._
-        val attempts = batch.select("event_id", "topic", "payload")
+        val outcome = new Observation()
+        val failed = batch.select("event_id", "topic", "payload")
           .as[(Long, String, String)]
           .mapPartitions { it =>
             it.map { case (id, topic, payload) =>
@@ -363,17 +372,15 @@ object NozzlePipeline {
             }
           }
           .toDF("event_id", "topic", "payload", "ok")
-          .cache()
-        try {
-          val okN = attempts.filter(col("ok")).count()
-          val failed = attempts.filter(!col("ok"))
-          val failN = failed.count()
-          if (failN > 0)
-            failed.drop("ok").write.mode("append").parquet(dlqPath)
-          stats.publish.addAndGet(okN)
-          stats.publishFail.addAndGet(failN)
-          ()
-        } finally attempts.unpersist()
+          .observe(outcome, count_if(col("ok")).as("ok"),
+            count_if(!col("ok")).as("failed"))
+          .filter(!col("ok")).drop("ok")
+          .localCheckpoint()
+        val counts = outcome.get
+        val failN = counts("failed").asInstanceOf[Long]
+        if (failN > 0) failed.write.mode("append").parquet(dlqPath)
+        stats.publish.addAndGet(counts("ok").asInstanceOf[Long])
+        stats.publishFail.addAndGet(failN)
         ()
       }
       .start()

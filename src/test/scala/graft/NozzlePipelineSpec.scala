@@ -4,7 +4,9 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{NozzlePipeline, Stats}
@@ -30,6 +32,41 @@ class FlakyPublisher(flaky: Set[String], dead: Set[String], failFirst: Int)
     if (flaky.contains(topic) && n <= failFirst)
       throw new RuntimeException("transient")
     TestPublishLog.delivered.put(topic + "|" + payload.hashCode, topic)
+  }
+}
+
+/** Counts Spark jobs per streaming micro-batch, keyed by the local
+  * properties every job of a micro-batch carries (query id, batch id).
+  * A marker job submitted after the query ends fences the listener bus:
+  * once it is seen, every earlier job has been seen too. */
+class StreamJobCounter extends SparkListener {
+  private val jobs = new ConcurrentHashMap[(String, String), AtomicInteger]()
+  @volatile private var marks = Set.empty[String]
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    Option(e.properties).foreach { p =>
+      Option(p.getProperty("graft.test.mark")).foreach(m => marks += m)
+      val q = p.getProperty("sql.streaming.queryId")
+      if (q != null)
+        jobs.computeIfAbsent((q, p.getProperty("streaming.sql.batchId")),
+          _ => new AtomicInteger).incrementAndGet()
+    }
+
+  /** Jobs started by each data micro-batch of `q`'s latest run. */
+  def perDataBatch(spark: org.apache.spark.sql.SparkSession,
+      q: StreamingQuery): Seq[Int] = {
+    val mark = java.util.UUID.randomUUID.toString
+    spark.sparkContext.setLocalProperty("graft.test.mark", mark)
+    try spark.range(1).count() finally
+      spark.sparkContext.setLocalProperty("graft.test.mark", null)
+    val deadline = System.currentTimeMillis() + 10000
+    while (!marks(mark) && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    assert(marks(mark), "listener bus did not deliver the marker job")
+    val batches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId)
+    assert(batches.nonEmpty)
+    batches.toSeq.map { b =>
+      Option(jobs.get((q.id.toString, b.toString))).fold(0)(_.get)
+    }
   }
 }
 
@@ -97,23 +134,36 @@ class NozzlePipelineSpec extends AnyFunSuite {
     spark.streams.addListener(listener)
     val dlqPath = tmp("nozzle-dlq-r") + "/dlq"
     val alwaysOk = new FlakyPublisher(Set.empty, Set.empty, 0)
+    val jobs = new StreamJobCounter
+    spark.sparkContext.addSparkListener(jobs)
     try {
       // memory sink can't recover from a checkpoint; the foreachBatch
       // sink (the real O9/O10 path) can.
       val routed = NozzlePipeline.build(NozzlePipeline.source(spark, srcDir), cfg)
-      NozzlePipeline.startDlq(routed, ckpt, alwaysOk, 5, stats, dlqPath)
-        .awaitTermination()
+      val q1 = NozzlePipeline.startDlq(routed, ckpt, alwaysOk, 5, stats, dlqPath)
+      q1.awaitTermination()
+      // one publish pass per batch and no DLQ touch when nothing fails
+      val perBatch1 = jobs.perDataBatch(spark, q1)
+      assert(perBatch1.forall(_ <= 1), s"jobs per micro-batch: $perBatch1")
       val total = Tables.events(spark, sf).count()
       eventually(stats.consume.get() === total)
 
       // new file arrives; restart from the same checkpoint
       stageEventsFile(srcDir, "part-1.parquet")
       val routed2 = NozzlePipeline.build(NozzlePipeline.source(spark, srcDir), cfg)
-      NozzlePipeline.startDlq(routed2, ckpt, alwaysOk, 5, stats, dlqPath)
-        .awaitTermination()
+      val q2 = NozzlePipeline.startDlq(routed2, ckpt, alwaysOk, 5, stats, dlqPath)
+      q2.awaitTermination()
+      val perBatch2 = jobs.perDataBatch(spark, q2)
+      assert(perBatch2.forall(_ <= 1), s"jobs per micro-batch: $perBatch2")
       // only the new file was consumed — 2×total, not 3×total
       eventually(stats.consume.get() === 2 * total)
-    } finally spark.streams.removeListener(listener)
+      eventually(stats.publish.get() === stats.forwarded.get())
+      assert(stats.publishFail.get() === 0)
+      assert(!new java.io.File(dlqPath).exists())
+    } finally {
+      spark.streams.removeListener(listener)
+      spark.sparkContext.removeSparkListener(jobs)
+    }
   }
 
   test("DLQ: bounded retry recovers transients, exhausted records land in DLQ (O10)") {
@@ -127,9 +177,16 @@ class NozzlePipelineSpec extends AnyFunSuite {
     // recovers (inside repartitionMax=5, kafka.go:20-26)
     val publisher = new FlakyPublisher(
       flaky = Set("counter-topic"), dead = Set("metric-topic"), failFirst = 2)
-    val q = NozzlePipeline.startDlq(routed, tmp("nozzle-ckpt3"), publisher,
-      repartitionMax = 5, stats, dlqPath)
-    q.awaitTermination()
+    val jobs = new StreamJobCounter
+    spark.sparkContext.addSparkListener(jobs)
+    val perBatch = try {
+      val q = NozzlePipeline.startDlq(routed, tmp("nozzle-ckpt3"), publisher,
+        repartitionMax = 5, stats, dlqPath)
+      q.awaitTermination()
+      jobs.perDataBatch(spark, q)
+    } finally spark.sparkContext.removeSparkListener(jobs)
+    // the publish pass plus the DLQ append, nothing else
+    assert(perBatch.forall(_ <= 2), s"jobs per micro-batch: $perBatch")
 
     val batch = Tables.events(spark, sf)
     val views = batch.filter("event_type = 'view'").count()
