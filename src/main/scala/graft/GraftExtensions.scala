@@ -29,9 +29,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // experimental.extraStrategies for ad-hoc driver sessions)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     // semantics-preserving native-kernel substitution for the spelled
-    // portable hash (see Md5PrefixFold's scaladoc); the kill switch
-    // must hold on THIS path too, not just GraftSession's
-    if (!sys.env.contains("SPARK_GRAFT_NO_MD5FOLD"))
-      ext.injectOptimizerRule(_ => graft.plans.Md5PrefixFold)
+    // portable hash (see Md5PrefixFold's scaladoc)
+    ext.injectOptimizerRule(_ => graft.plans.Md5PrefixFold)
   }
 }

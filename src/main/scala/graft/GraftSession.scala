@@ -66,10 +66,8 @@ object GraftSession {
     Functions.register(spark)
     // native-kernel substitutions (semantics-preserving): the spelled
     // portable hash fuses to Md5Prefix60 (GraftExtensions installs the
-    // same rule cluster-wide); SPARK_GRAFT_NO_MD5FOLD=1 is the kill
-    // switch (and the A/B lever for measuring the rewrite)
-    if (!sys.env.contains("SPARK_GRAFT_NO_MD5FOLD") &&
-        !spark.experimental.extraOptimizations.contains(graft.plans.Md5PrefixFold))
+    // same rule cluster-wide)
+    if (!spark.experimental.extraOptimizations.contains(graft.plans.Md5PrefixFold))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.Md5PrefixFold
     spark

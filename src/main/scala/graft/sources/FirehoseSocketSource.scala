@@ -19,12 +19,15 @@ import graft.streaming.{Connector, NozzleReader}
 
 /** `graft-firehose-socket` — the NETWORK-backed variant of the
   * firehose source: a DataSource V2 micro-batch stream whose rows are
-  * raw frames pulled by [[NozzleReader]] over a live TCP connection
-  * (dial → AUTH via TokenFetcher → idle-deadline reads → backoff
-  * re-dial → refresh-on-401), the lifecycle of the reference consumer
-  * (noaa async.go:228-351, 372-406). Downstream applies
-  * `envelope_decode` (O2) exactly where the reference applies
-  * proto.Unmarshal — malformed frames become NULL rows to drop.
+  * raw frames pulled by [[NozzleReader]] over a live RFC-6455
+  * connection (dial → upgrade with the TokenFetcher token →
+  * idle-deadline reads → backoff re-dial → refresh-on-401), the
+  * lifecycle of the reference consumer (noaa async.go:228-351,
+  * 372-406). Downstream applies `envelope_decode` (O2) exactly where
+  * the reference applies proto.Unmarshal — malformed frames become
+  * NULL rows to drop. A 1008 close bumps the process-wide
+  * [[FirehoseSocketSource.slowConsumerAlerts]] counter — the O4 side
+  * channel, go-nozzle detector.go:70-90 — and re-dials.
   *
   * Design mirrors Spark's own TextSocketMicroBatchStream: a
   * driver-side daemon thread appends frames to a buffer; offsets are
@@ -36,15 +39,13 @@ import graft.streaming.{Connector, NozzleReader}
   *
   * Options: `host`, `port`, `idleTimeoutMs`, `rowsPerBatch`
   * (admission control), `backoffMinMs`/`backoffMaxMs`/`maxRetries`,
-  * `uaa.addr`/`uaa.username`/`uaa.password` (AUTH token source),
-  * `protocol` — `lines` (default, the loopback-testable line framing)
-  * or `ws` (RFC-6455 frames via [[NozzleReader.runWs]], the
-  * reference's real transport; a 1008 close bumps the process-wide
-  * [[FirehoseSocketSource.slowConsumerAlerts]] counter — the O4 side
-  * channel, go-nozzle detector.go:70-90 — and re-dials), `filterType`
-  * — `logs` or `metrics` appends `?filter-type=...` to the ws dial
-  * path for server-side filtering (noaa consumer/filter.go:3-20,
-  * firehose.go:42-44; unset = all envelopes, no query string).
+  * `uaa.addr`/`uaa.username`/`uaa.password` (token source),
+  * `subscriptionId` (dial path `/firehose/<subscriptionId>`,
+  * firehose.go:42-44), `filterType` — `logs` or `metrics` appends
+  * `?filter-type=...` for server-side filtering (noaa
+  * consumer/filter.go:3-20; unset = all envelopes, no query string).
+  * WebSocket is the only transport: a `protocol` option other than
+  * `ws` fails at stream creation.
   */
 class FirehoseSocketSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-firehose-socket"
@@ -75,7 +76,12 @@ private class FirehoseSocketTable extends Table with SupportsRead {
     new ScanBuilder with Scan {
       override def build(): Scan = this
       override def readSchema(): StructType = FirehoseSocketSource.schema
-      override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
+      override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
+        // fail here, not after an upgrade against a non-ws server has
+        // spent the whole backoff budget
+        val protocol = options.getOrDefault("protocol", "ws")
+        require(protocol == "ws",
+          s"option 'protocol': only 'ws' is supported, got '$protocol'")
         new FirehoseSocketMicroBatchStream(
           host = options.getOrDefault("host", "127.0.0.1"),
           port = options.getInt("port", 0),
@@ -87,11 +93,11 @@ private class FirehoseSocketTable extends Table with SupportsRead {
           uaaAddr = options.getOrDefault("uaa.addr", "uaa.local"),
           username = options.getOrDefault("uaa.username", "anonymous"),
           password = options.getOrDefault("uaa.password", "anonymous"),
-          protocol = options.getOrDefault("protocol", "lines"),
           // reference default: cli.go:44-46 DefaultSubscriptionID
           subscriptionId = options.getOrDefault("subscriptionId",
             "debug-kafka-firehose-nozzle"),
           filterType = options.getOrDefault("filterType", ""))
+      }
     }
 }
 
@@ -99,13 +105,9 @@ private class FirehoseSocketMicroBatchStream(
     host: String, port: Int, idleTimeoutMs: Int, rowsPerBatch: Long,
     backoffMinMs: Long, backoffMaxMs: Long, maxRetries: Long,
     uaaAddr: String, username: String, password: String,
-    protocol: String = "lines",
-    subscriptionId: String = "debug-kafka-firehose-nozzle",
-    filterType: String = "")
+    subscriptionId: String, filterType: String)
     extends MicroBatchStream with SupportsAdmissionControl {
 
-  require(protocol == "lines" || protocol == "ws",
-    s"option 'protocol' must be 'lines' or 'ws', got '$protocol'")
   // noaa's EnvelopeFilter enum: LogMessages | Metrics | allEnvelopes
   require(filterType == "" || filterType == "logs" || filterType == "metrics",
     s"option 'filterType' must be 'logs' or 'metrics', got '$filterType'")
@@ -152,28 +154,17 @@ private class FirehoseSocketMicroBatchStream(
         // anything escaping the reader must surface as a query error,
         // never a silent idle stream
         try {
-          val r =
-            if (protocol == "ws")
-              NozzleReader.runWs(host, port, fetcher, backoff, idleTimeoutMs,
-                Long.MaxValue,
-                f => frames.synchronized { frames += f; () },
-                _ => { FirehoseSocketSource.slowConsumerAlerts.incrementAndGet(); () },
-                () => stopped,
-                s => liveSocket.set(s),
-                // the reference's stream path (firehose.go:42-44) +
-                // optional server-side filter (filter.go:10-20)
-                path = s"/firehose/$subscriptionId" +
-                  (if (filterType.nonEmpty) s"?filter-type=$filterType" else ""))
-            else
-              NozzleReader.run(host, port, fetcher, backoff, idleTimeoutMs,
-                Long.MaxValue,
-                f => frames.synchronized { frames += f; () },
-                () => stopped,
-                s => liveSocket.set(s))
-          r match {
-            case Left(e) => readerError = e
-            case Right(_) => ()
-          }
+          NozzleReader.run(host, port, fetcher, backoff, idleTimeoutMs,
+            Long.MaxValue,
+            f => frames.synchronized { frames += f; () },
+            _ => { FirehoseSocketSource.slowConsumerAlerts.incrementAndGet(); () },
+            () => stopped,
+            s => liveSocket.set(s),
+            // the reference's stream path (firehose.go:42-44) +
+            // optional server-side filter (filter.go:10-20)
+            path = s"/firehose/$subscriptionId" +
+              (if (filterType.nonEmpty) s"?filter-type=$filterType" else ""))
+            .left.foreach(e => readerError = e)
         } catch {
           case _: InterruptedException if stopped => ()
           case t: Throwable => if (!stopped) readerError = t.toString

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types._
@@ -80,7 +80,10 @@ object NozzlePipeline {
         val s = spark.read.parquet(
           if (ev.exists()) ev.getPath else dir).schema
         if (s.fieldNames.contains("ts")) s else eventsSchema
-      } catch { case _: Throwable => eventsSchema } // empty dir: replay layout
+      } catch { // empty dir: replay layout (a bad footer still fails)
+        case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
+          eventsSchema
+      }
     val raw = spark.readStream
       .schema(sniffed)
       .option("maxFilesPerTrigger", "1")

@@ -1,69 +1,57 @@
 package graft.streaming
 
-import java.io.{BufferedReader, InputStreamReader, OutputStreamWriter}
 import java.net.{InetSocketAddress, Socket, SocketTimeoutException}
+import java.nio.charset.StandardCharsets.ISO_8859_1
 
-/** The network edge of O1: a thin line-framed TCP reader that wires
-  * the connector control plane ([[Connector.TokenFetcher]],
-  * [[Connector.Backoff]]) into an actual dial→read loop, mirroring the
-  * reference consumer's connection lifecycle (noaa
-  * consumer/async.go):
+/** The network edge of O1: an RFC-6455 reader that wires the connector
+  * control plane ([[Connector.TokenFetcher]], [[Connector.Backoff]])
+  * into an actual dial→read loop over the reference consumer's one
+  * transport — WebSocket frames (noaa consumer/async.go over
+  * gorilla/websocket):
   *
+  *  - HTTP/1.1 upgrade handshake with the token in `Authorization`
+  *    (async.go:423-424); `101` accepts, `401` refreshes the token and
+  *    re-dials ONCE immediately (async.go:372-406 `websocketConn` /
+  *    `websocketConnNewToken`; a second 401 is an ordinary retryable
+  *    error), anything else is a retryable bad handshake;
   *  - per-read idle deadline (async.go:255-257 `SetReadDeadline`): a
   *    silent connection trips `SO_TIMEOUT` and is torn down and
   *    re-dialed — timeouts are retryable (async.go:267-269);
   *  - retry loop with exponential sleep and budget
   *    (async.go:298-351 `retryAction`): every retryable failure —
-  *    refused dial, mid-stream EOF, idle timeout — consumes backoff
-  *    budget; a successful handshake resets it (the onConnect
-  *    callback, async.go:307-313);
-  *  - 401 at handshake → refresh the token and re-dial ONCE
-  *    immediately (async.go:372-406 `websocketConn` /
-  *    `websocketConnNewToken`); a second 401 is an ordinary retryable
-  *    error;
+  *    refused dial, bad handshake, mid-stream EOF, idle timeout,
+  *    close frame — consumes backoff budget; a successful handshake
+  *    resets it (the onConnect callback, async.go:307-313);
+  *  - text frames are delivered to `onFrame` as UTF-8 (RFC 6455
+  *    §5.6); binary frames (the dropsonde protobuf path) as
+  *    ISO-8859-1, so their bytes survive a String round-trip;
+  *  - pings answered with pongs inline (gorilla does the same under
+  *    the SetPingHandler default);
+  *  - a close frame with code 1008 (ClosePolicyViolation) is the
+  *    "consumer too slow" signal: surfaced through `onAlert` — the O4
+  *    side channel, mirroring go-nozzle detector.go:70-90 — and then
+  *    the connection re-dials under the normal backoff, exactly like
+  *    the reference where the alert goes to detectCh while the close
+  *    error still flows down the retry path (cli.go:299-303 counts
+  *    SlowConsumerAlert; noaa retries the connection); any other close
+  *    code is a plain retryable disconnect;
   *  - malformed frames are the CONSUMER's problem (async.go:274-280
   *    skips frames that fail proto.Unmarshal and keeps the
   *    connection): the reader delivers raw frames; decode-and-drop
   *    happens downstream via `envelope_decode` → NULL.
   *
-  * Protocol (the loopback-testable distillation of the websocket
-  * handshake): client sends `AUTH <token>\n`; server answers `OK` or
-  * `401`; after `OK` every subsequent line is one frame.
-  *
   * The reader is transport only — it feeds frames to `onFrame` and
-  * stops after `maxFrames` (tests) or when the retry budget is
-  * exhausted; a production caller runs it on a source thread and
-  * pumps frames into the decode path (FirehoseSource's row surface).
+  * stops after `maxFrames`, on `shouldStop`, or when the retry budget
+  * is exhausted; a production caller runs it on a source thread and
+  * pumps frames into the decode path (FirehoseSocketSource).
   */
 object NozzleReader {
 
   /** Lifecycle counters surfaced for assertions/metrics. */
   final case class ReaderStats(frames: Long, dials: Long, refreshes: Long,
-                               alerts: Long = 0L)
+                               alerts: Long)
 
-  /** The RFC-6455 transport variant of [[run]] — the reference's real
-    * wire protocol (noaa consumer/async.go over gorilla/websocket):
-    *
-    *  - HTTP/1.1 upgrade handshake with the token in `Authorization`
-    *    (async.go:423-424); `101` accepts, `401` triggers the
-    *    refresh-once path, anything else is an ordinary retryable
-    *    failure — same state machine as the line protocol;
-    *  - text/binary frames are delivered to `onFrame` (binary is the
-    *    dropsonde protobuf path; delivered as ISO-8859-1 so the bytes
-    *    survive a String round-trip, matching FirehoseSocketSource's
-    *    frame surface);
-    *  - pings answered with pongs inline (gorilla does the same under
-    *    the SetPingHandler default);
-    *  - a close frame with code 1008 (ClosePolicyViolation) is the
-    *    "consumer too slow" signal: surfaced through `onAlert` — the
-    *    O4 side channel, mirroring go-nozzle detector.go:70-90 — and
-    *    then the connection re-dials under the normal backoff, exactly
-    *    like the reference where the alert goes to detectCh while the
-    *    close error still flows down the retry path (cli.go:299-303
-    *    counts SlowConsumerAlert; noaa retries the connection);
-    *  - any other close code is a plain retryable disconnect.
-    */
-  def runWs(
+  def run(
       host: String,
       port: Int,
       fetcher: Connector.TokenFetcher,
@@ -87,7 +75,7 @@ object NozzleReader {
     def done(): Either[String, ReaderStats] =
       Right(ReaderStats(frames, dials, refreshes, alerts))
     while (result == null) {
-      if (shouldStop()) return done()
+      if (shouldStop()) return done() // conn.Close() analogue
       var retryable: String = null
       var redial401 = true
       var refreshedThisDial = false
@@ -97,8 +85,8 @@ object NozzleReader {
         try {
           sock = new Socket()
           sock.connect(new InetSocketAddress(host, port), idleTimeoutMs)
-          sock.setSoTimeout(idleTimeoutMs)
-          onSocket(sock)
+          sock.setSoTimeout(idleTimeoutMs) // the idle read deadline
+          onSocket(sock) // expose for external teardown (stream stop)
           dials += 1
           val out = sock.getOutputStream
           val in = new java.io.BufferedInputStream(sock.getInputStream)
@@ -116,13 +104,15 @@ object NozzleReader {
           status match {
             case 101 if headers.get("sec-websocket-accept")
                 .contains(WebSocket.acceptKey(key)) =>
-              backoff.onConnected()
+              backoff.onConnected() // reset delay + budget
               var closed = false
               while (!closed && result == null) {
                 val f = WebSocket.readFrame(in)
                 f.opcode match {
                   case WebSocket.OpText | WebSocket.OpBinary =>
-                    onFrame(new String(f.payload, "ISO-8859-1"))
+                    onFrame(
+                      if (f.opcode == WebSocket.OpText) f.text
+                      else new String(f.payload, ISO_8859_1))
                     frames += 1
                     if (frames >= maxFrames || shouldStop()) result = done()
                   case WebSocket.OpPing =>
@@ -166,6 +156,8 @@ object NozzleReader {
       if (result == null && retryable != null) backoff.nextDelayMs() match {
         case None => result = Left(s"max retries reached (last: $retryable)")
         case Some(d) =>
+          // an interrupt (external stop) just ends the sleep early;
+          // the loop head re-checks shouldStop
           try Thread.sleep(d) catch { case _: InterruptedException => () }
       }
     }
@@ -196,82 +188,5 @@ object NozzleReader {
       line = readLine()
     }
     (status, headers.result())
-  }
-
-  def run(
-      host: String,
-      port: Int,
-      fetcher: Connector.TokenFetcher,
-      backoff: Connector.Backoff,
-      idleTimeoutMs: Int,
-      maxFrames: Long,
-      onFrame: String => Unit,
-      shouldStop: () => Boolean = () => false,
-      onSocket: Socket => Unit = _ => ()): Either[String, ReaderStats] = {
-    var dials = 0L
-    var refreshes = 0L
-    var frames = 0L
-    var token: String = fetcher.fetch() match {
-      case Left(e) => return Left(s"token fetch failed: $e")
-      case Right(t) => t
-    }
-    var result: Either[String, ReaderStats] = null
-    while (result == null) {
-      if (shouldStop())
-        return Right(ReaderStats(frames, dials, refreshes)) // conn.Close() analogue
-      var retryable: String = null
-      var redial401 = true
-      var refreshedThisDial = false
-      while (redial401 && result == null) {
-        redial401 = false
-        var sock: Socket = null
-        try {
-          sock = new Socket()
-          sock.connect(new InetSocketAddress(host, port), idleTimeoutMs)
-          sock.setSoTimeout(idleTimeoutMs) // the idle read deadline
-          onSocket(sock) // expose for external teardown (stream stop)
-          dials += 1
-          val out = new OutputStreamWriter(sock.getOutputStream, "UTF-8")
-          val in = new BufferedReader(new InputStreamReader(sock.getInputStream, "UTF-8"))
-          out.write(s"AUTH $token\n")
-          out.flush()
-          in.readLine() match {
-            case "OK" =>
-              backoff.onConnected() // reset delay + budget
-              var line = in.readLine()
-              while (line != null && result == null) {
-                onFrame(line)
-                frames += 1
-                if (frames >= maxFrames || shouldStop())
-                  result = Right(ReaderStats(frames, dials, refreshes))
-                else line = in.readLine()
-              }
-              if (result == null && shouldStop())
-                result = Right(ReaderStats(frames, dials, refreshes))
-              if (result == null) retryable = "connection closed mid-stream"
-            case "401" =>
-              if (!refreshedThisDial) fetcher.refresh() match {
-                case Left(e) => result = Left(s"token refresh failed: $e")
-                case Right(t) =>
-                  token = t; refreshes += 1
-                  refreshedThisDial = true; redial401 = true
-              }
-              else retryable = "unauthorized after token refresh"
-            case other => retryable = s"bad handshake: $other"
-          }
-        } catch {
-          case _: SocketTimeoutException => retryable = "i/o timeout (idle)"
-          case e: java.io.IOException => retryable = s"connection error: ${e.getMessage}"
-        } finally if (sock != null) sock.close()
-      }
-      if (result == null && retryable != null) backoff.nextDelayMs() match {
-        case None => result = Left(s"max retries reached (last: $retryable)")
-        case Some(d) =>
-          // an interrupt (external stop) just ends the sleep early;
-          // the loop head re-checks shouldStop
-          try Thread.sleep(d) catch { case _: InterruptedException => () }
-      }
-    }
-    result
   }
 }

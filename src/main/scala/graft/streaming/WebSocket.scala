@@ -14,9 +14,9 @@ import java.util.Base64
   * silently corrupting a protobuf).
   *
   * Close code 1008 (policy violation) is the wire signal for "consumer
-  * too slow" — see /root/reference/vendor/github.com/rakutentech/
-  * go-nozzle/detector.go:70-90, which maps it to the slowConsumerAlert
-  * side channel; [[NozzleReader.runWs]] does the same via `onAlert`.
+  * too slow" — see go-nozzle detector.go:70-90, which maps it to the
+  * slowConsumerAlert side channel; [[NozzleReader.run]] does the same
+  * via `onAlert`.
   */
 object WebSocket {
 

@@ -1,14 +1,10 @@
 package graft
 
-import java.io.{BufferedReader, InputStreamReader, OutputStreamWriter}
-import java.net.{InetAddress, ServerSocket, Socket}
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The network-backed firehose source inside a LIVE streaming query:
-  * frames flow socket → NozzleReader → micro-batches → memory sink,
+  * frames flow ws server → NozzleReader → micro-batches → memory sink,
   * across a mid-stream disconnect (EOF → backoff re-dial), and decode
   * through `envelope_decode` with the malformed frame dropping to
   * NULL — the full O1→O2 edge running end to end. */
@@ -22,49 +18,27 @@ class FirehoseSocketSourceSpec extends AnyFunSuite {
   private val malformed = """{"origin": nope"""
 
   test("socket frames flow through micro-batches across a reconnect") {
-    val server = new ServerSocket(0, 8, InetAddress.getLoopbackAddress)
-    val connIdx = new AtomicInteger(0)
-
-    def handle(idx: Int, s: Socket): Unit = {
-      val in = new BufferedReader(new InputStreamReader(s.getInputStream, "UTF-8"))
-      val out = new OutputStreamWriter(s.getOutputStream, "UTF-8")
-      in.readLine() // AUTH
-      out.write("OK\n")
+    val server = new WsTestServer((idx, c) => {
+      c.accept()
       if (idx == 0) {
-        (0 until 6).foreach(i => out.write(frame(i) + "\n"))
-        out.flush()
-        s.close() // EOF mid-stream → the reader must re-dial
+        (0 until 6).foreach(i => c.text(frame(i)))
+        // returning drops the socket without a close frame: EOF
+        // mid-stream → the reader must re-dial
       } else {
         // only the first re-dial serves the remainder; any further
         // connection holds silently (a live firehose does not replay)
         if (idx == 1) {
-          (6 until 11).foreach(i => out.write(frame(i) + "\n"))
-          out.write(malformed + "\n")
-          out.flush()
+          (6 until 11).foreach(i => c.text(frame(i)))
+          c.text(malformed)
         }
         Thread.sleep(20000) // hold open until the test ends
-        s.close()
       }
-    }
-
-    val acceptor = new Thread(() => {
-      try {
-        while (!server.isClosed) {
-          val s = server.accept()
-          val idx = connIdx.getAndIncrement()
-          val t = new Thread(() => try handle(idx, s) catch { case _: Exception => () })
-          t.setDaemon(true)
-          t.start()
-        }
-      } catch { case _: Exception => () }
     })
-    acceptor.setDaemon(true)
-    acceptor.start()
 
     val ck = java.nio.file.Files.createTempDirectory("socket-src-ck").toString
     val q = spark.readStream.format("graft-firehose-socket")
       .option("host", "127.0.0.1")
-      .option("port", server.getLocalPort)
+      .option("port", server.port)
       // long idle deadline: the reconnect under test is the EOF path;
       // the idle-timeout path is NozzleReaderSpec's (a short deadline
       // here would re-dial the held connection and a live server
@@ -88,7 +62,7 @@ class FirehoseSocketSourceSpec extends AnyFunSuite {
       if (count() != 12) {
         val rows = spark.sql("SELECT frame FROM socket_frames").collect().map(_.getString(0))
         val hist = rows.groupBy(identity).map { case (k, v) => (k.take(60), v.length) }
-        fail(s"count=${count()} conns=${connIdx.get()} hist=${hist.toSeq.sortBy(_._1).mkString("\n")}")
+        fail(s"count=${count()} conns=${server.connections} hist=${hist.toSeq.sortBy(_._1).mkString("\n")}")
       }
       assert(count() === 12, "6 frames before + 6 after the reconnect")
 
@@ -122,32 +96,15 @@ class FirehoseSocketSourceSpec extends AnyFunSuite {
     import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsAdmissionControl}
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-    val server = new ServerSocket(0, 8, InetAddress.getLoopbackAddress)
-    val acceptor = new Thread(() => {
-      try {
-        while (!server.isClosed) {
-          val s = server.accept()
-          val t = new Thread(() => try {
-            val in = new BufferedReader(new InputStreamReader(s.getInputStream, "UTF-8"))
-            val out = new OutputStreamWriter(s.getOutputStream, "UTF-8")
-            in.readLine() // AUTH
-            out.write("OK\n")
-            (0 until 5).foreach(i => out.write(frame(i) + "\n"))
-            out.flush()
-            Thread.sleep(20000) // hold open; a live firehose does not replay
-            s.close()
-          } catch { case _: Exception => () })
-          t.setDaemon(true)
-          t.start()
-        }
-      } catch { case _: Exception => () }
+    val server = new WsTestServer((_, c) => {
+      c.accept()
+      (0 until 5).foreach(i => c.text(frame(i)))
+      Thread.sleep(20000) // hold open; a live firehose does not replay
     })
-    acceptor.setDaemon(true)
-    acceptor.start()
 
     val opts = new java.util.HashMap[String, String]()
     opts.put("host", "127.0.0.1")
-    opts.put("port", server.getLocalPort.toString)
+    opts.put("port", server.port.toString)
     opts.put("idleTimeoutMs", "60000")
     opts.put("backoffMinMs", "10")
     opts.put("backoffMaxMs", "50")
@@ -181,6 +138,34 @@ class FirehoseSocketSourceSpec extends AnyFunSuite {
     } finally {
       stream.stop()
       server.close()
+    }
+  }
+
+  test("protocol=lines fails at stream creation, before any dial") {
+    // a server that would accept: the query must fail without dialing it
+    val server = new WsTestServer((_, c) => c.accept())
+    try {
+      val ck = java.nio.file.Files.createTempDirectory("socket-src-lines").toString
+      val q = spark.readStream.format("graft-firehose-socket")
+        .option("host", "127.0.0.1")
+        .option("port", server.port)
+        .option("protocol", "lines")
+        .load()
+        .writeStream
+        .format("memory")
+        .queryName("socket_lines")
+        .option("checkpointLocation", ck)
+        .start()
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.awaitTermination(30000))
+      assert(e.getCause.isInstanceOf[IllegalArgumentException], e)
+      assert(e.getCause.getMessage.contains("only 'ws' is supported, got 'lines'"), e)
+      assert(server.connections === 0, "no dial with an unsupported protocol")
+    } finally {
+      server.close()
+      // the failed query stays in the shared session's terminated list and
+      // would be rethrown by any later awaitAnyTermination in other suites
+      spark.streams.resetTerminated()
     }
   }
 }

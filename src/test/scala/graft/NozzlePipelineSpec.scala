@@ -201,6 +201,20 @@ class NozzlePipelineSpec extends AnyFunSuite {
       === Set("metric-topic"))
   }
 
+  test("source: an empty replay dir gets the events schema; a corrupt footer fails in source()") {
+    val empty = tmp("nozzle-empty")
+    assert(NozzlePipeline.source(spark, empty).columns.contains("ts_ns"))
+    val missing = intercept[org.apache.spark.sql.AnalysisException](
+      NozzlePipeline.source(spark, empty + "/absent"))
+    assert(missing.getCondition === "PATH_NOT_FOUND")
+    // a *.parquet that is not parquet must not be mistaken for an empty
+    // replay dir (and only surface later, inside the running query)
+    val bad = tmp("nozzle-bad")
+    Files.write(Paths.get(bad, "part-0.parquet"), "not parquet".getBytes("UTF-8"))
+    val e = intercept[org.apache.spark.SparkException](NozzlePipeline.source(spark, bad))
+    assert(e.getMessage.contains("CANNOT_READ_FILE_FOOTER"), e)
+  }
+
   private def eventually(cond: => Boolean, timeoutMs: Long = 10000): Unit = {
     val deadline = System.currentTimeMillis() + timeoutMs
     while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(100)

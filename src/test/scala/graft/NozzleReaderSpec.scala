@@ -1,7 +1,6 @@
 package graft
 
-import java.io.{BufferedReader, InputStreamReader, OutputStreamWriter}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.net.ServerSocket
 import java.util.concurrent.CopyOnWriteArrayList
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -10,17 +9,17 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{Connector, NozzleReader}
 
 /** End-to-end drive of the O1/O18/O19 network seam over a REAL
-  * loopback socket: dial → authenticated handshake → frame read →
-  * idle-timeout teardown → backoff re-dial → 401 → token refresh →
-  * re-dial → resume — the noaa consumer lifecycle
+  * loopback WebSocket server: dial → upgrade with the token → frame
+  * read → idle-timeout teardown → backoff re-dial → 401 → token
+  * refresh → re-dial → resume — the noaa consumer lifecycle
   * (async.go:228-351, 372-406) that was previously covered only as
   * pure policy objects.
   *
   * Server script (one thread per accepted connection):
-  *   conn 0: OK + 3 frames, then SILENCE (held open) → the only way
+  *   conn 0: 101 + 3 frames, then SILENCE (held open) → the only way
   *           the client progresses is its idle read deadline;
   *   conn 1: 401 → client must refresh the token and re-dial;
-  *   conn 2: expects the REFRESHED token, OK + 4 more frames (one
+  *   conn 2: expects the REFRESHED token, 101 + 4 more frames (one
   *           malformed — transport delivers it; decode drops it).
   */
 class NozzleReaderSpec extends AnyFunSuite {
@@ -32,49 +31,25 @@ class NozzleReaderSpec extends AnyFunSuite {
   private val malformed = """{"origin": truncated"""
 
   test("dial → read → idle-timeout → reconnect → 401 → refresh → resume, over a real socket") {
-    val server = new ServerSocket(0, 8, InetAddress.getLoopbackAddress)
     val seenTokens = new CopyOnWriteArrayList[String]()
-    val connIdx = new AtomicInteger(0)
-
-    def handle(idx: Int, s: Socket): Unit = {
-      val in = new BufferedReader(new InputStreamReader(s.getInputStream, "UTF-8"))
-      val out = new OutputStreamWriter(s.getOutputStream, "UTF-8")
-      val auth = in.readLine()
-      if (auth != null) seenTokens.add(auth.stripPrefix("AUTH "))
+    val server = new WsTestServer((idx, c) => {
+      seenTokens.add(c.token)
       idx match {
         case 0 =>
-          out.write("OK\n")
-          (0 until 3).foreach(i => out.write(frame(i) + "\n"))
-          out.flush()
+          c.accept()
+          (0 until 3).foreach(i => c.text(frame(i)))
           Thread.sleep(5000) // silent — only the idle deadline frees the client
-          s.close()
         case 1 =>
-          out.write("401\n"); out.flush(); s.close()
+          c.respond("401 Unauthorized")
         case _ =>
-          out.write("OK\n")
-          out.write(frame(3) + "\n")
-          out.write(frame(4) + "\n")
-          out.write(malformed + "\n")
-          out.write(frame(5) + "\n")
-          out.flush()
+          c.accept()
+          c.text(frame(3))
+          c.text(frame(4))
+          c.text(malformed)
+          c.text(frame(5))
           Thread.sleep(5000)
-          s.close()
       }
-    }
-
-    val acceptor = new Thread(() => {
-      try {
-        while (!server.isClosed) {
-          val s = server.accept()
-          val idx = connIdx.getAndIncrement()
-          val t = new Thread(() => try handle(idx, s) catch { case _: Exception => () })
-          t.setDaemon(true)
-          t.start()
-        }
-      } catch { case _: Exception => () }
     })
-    acceptor.setDaemon(true)
-    acceptor.start()
 
     val fetches = new AtomicInteger(0)
     val fetcher = new Connector.TokenFetcher(
@@ -89,7 +64,7 @@ class NozzleReaderSpec extends AnyFunSuite {
       // frames mid-connection — at 250 ms a >250 ms stall mid-conn 2
       // produced a legitimate 4th dial and a one-off test failure
       val result = NozzleReader.run(
-        "127.0.0.1", server.getLocalPort, fetcher, backoff,
+        "127.0.0.1", server.port, fetcher, backoff,
         idleTimeoutMs = 1500, maxFrames = 7, onFrame = received.add(_))
 
       val stats = result.fold(e => fail(s"reader failed: $e"), identity)
@@ -133,42 +108,53 @@ class NozzleReaderSpec extends AnyFunSuite {
       idleTimeoutMs = 100, maxFrames = 1, onFrame = _ => ())
     assert(result.isLeft)
     assert(result.swap.getOrElse("").contains("max retries"))
+
+    // a live server whose every connection dies before the upgrade
+    // answers: failed handshakes never reset the budget, so the reader
+    // gives up after exactly 1 + maxRetries dials
+    val server = new WsTestServer((_, c) => require(c.request.contains(":path")))
+    try {
+      val result = NozzleReader.run(
+        "127.0.0.1", server.port, fetcher,
+        new Connector.Backoff(minDelayMs = 1, maxDelayMs = 2, maxRetries = 3),
+        idleTimeoutMs = 1000, maxFrames = 1, onFrame = _ => ())
+      assert(result === Left("max retries reached (last: connection closed mid-stream)"))
+      assert(server.connections === 4)
+    } finally server.close()
   }
 
   test("a garbage handshake is retryable and reports the last error on exhaustion") {
-    val server = new ServerSocket(0, 8, InetAddress.getLoopbackAddress)
-    val acceptor = new Thread(() => {
-      try {
-        while (!server.isClosed) {
-          val s = server.accept()
-          val out = new OutputStreamWriter(s.getOutputStream, "UTF-8")
-          new BufferedReader(new InputStreamReader(s.getInputStream, "UTF-8")).readLine()
-          out.write("HTTP/1.1 500 oops\n"); out.flush(); s.close()
-        }
-      } catch { case _: Exception => () }
-    })
-    acceptor.setDaemon(true)
-    acceptor.start()
+    // alternate a non-101 answer with a 101 whose accept key is wrong
+    val server = new WsTestServer((idx, c) =>
+      if (idx % 2 == 0) c.respond("500 oops")
+      else c.respond("101 Switching Protocols", "Upgrade: websocket",
+        "Connection: Upgrade", "Sec-WebSocket-Accept: bogus"))
     try {
       val fetcher = new Connector.TokenFetcher(
         "https://uaa.example", "u", "p", () => "tok")
       val backoff = new Connector.Backoff(minDelayMs = 1, maxDelayMs = 2, maxRetries = 3)
       val result = NozzleReader.run(
-        "127.0.0.1", server.getLocalPort, fetcher, backoff,
+        "127.0.0.1", server.port, fetcher, backoff,
         idleTimeoutMs = 200, maxFrames = 1, onFrame = _ => ())
       assert(result.isLeft)
       val msg = result.swap.getOrElse("")
       assert(msg.contains("max retries") && msg.contains("bad handshake"), msg)
+      // 4 dials: the 4th (idx 3) is the accept-key mismatch
+      assert(msg.contains("Sec-WebSocket-Accept mismatch"), msg)
     } finally server.close()
   }
 
   test("a failed initial token fetch fails the reader before any dial (nozzle.go:113-138)") {
-    val fetcher = new Connector.TokenFetcher(
-      "", "u", "p", () => "tok") // empty UaaAddr → validate() fails
-    val backoff = new Connector.Backoff(minDelayMs = 1, maxDelayMs = 2, maxRetries = 3)
-    val result = NozzleReader.run(
-      "127.0.0.1", 1, fetcher, backoff,
-      idleTimeoutMs = 100, maxFrames = 1, onFrame = _ => ())
-    assert(result === Left("token fetch failed: UaaAddr must not be empty"))
+    val server = new WsTestServer((_, c) => c.accept())
+    try {
+      val fetcher = new Connector.TokenFetcher(
+        "", "u", "p", () => "tok") // empty UaaAddr → validate() fails
+      val backoff = new Connector.Backoff(minDelayMs = 1, maxDelayMs = 2, maxRetries = 3)
+      val result = NozzleReader.run(
+        "127.0.0.1", server.port, fetcher, backoff,
+        idleTimeoutMs = 100, maxFrames = 1, onFrame = _ => ())
+      assert(result === Left("token fetch failed: UaaAddr must not be empty"))
+      assert(server.connections === 0, "no dial without a token")
+    } finally server.close()
   }
 }

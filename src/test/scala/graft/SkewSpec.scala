@@ -3,43 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.Skew
-
 class SkewSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
-  val sf = "/root/testdata/sf0.001"
-
-  test("salted join returns exactly the rows of the plain join") {
-    // events.event_type is the canonical skew key: 5 values, one per
-    // ~20% of the table
-    val fact = Tables.events(spark, sf).select("event_id", "event_type", "value")
-    val dim = spark.createDataFrame(Seq(
-      ("click", 10), ("view", 20), ("signup", 30),
-      ("purchase", 40), ("error", 50))).toDF("event_type", "weight")
-
-    val plain = fact.join(dim, "event_type")
-      .select("event_id", "event_type", "value", "weight")
-    val salted = Skew.saltedJoin(fact, dim, "event_type",
-      saltSource = col("event_id"), buckets = 8)
-      .select("event_id", "event_type", "value", "weight")
-
-    assert(salted.count() === plain.count())
-    assert(salted.exceptAll(plain).count() === 0)
-    assert(plain.exceptAll(salted).count() === 0)
-  }
-
-  test("fact rows of one hot key spread across salt buckets") {
-    val fact = Tables.events(spark, sf).select("event_id", "event_type")
-    val spread = Skew.saltFact(fact, col("event_id"), buckets = 8)
-      .filter(col("event_type") === "click")
-      .groupBy("_salt").count()
-    assert(spread.count() === 8, "hot key not spread over all buckets")
-  }
 
   test("AQE splits a skewed shuffle join at runtime (the no-salt path)") {
-    // salting is the hand dial; AQE's OptimizeSkewedJoin is the
-    // runtime one — prove the session is actually capable of it so a
-    // 100 TB hot key hits a split, not one 10-hour task. Thresholds
+    // AQE's OptimizeSkewedJoin is the engine's skew remedy — prove
+    // the session is actually capable of it so a 100 TB hot key hits
+    // a split, not one 10-hour task. Thresholds
     // lowered so the local fixture (one key = 95% of a 200k-row fact)
     // qualifies as skewed; broadcast disabled so the join shuffles.
     val confs = Seq(

@@ -1,7 +1,5 @@
 package graft
 
-import java.io.{InputStream, OutputStream}
-import java.net.{InetAddress, ServerSocket, Socket}
 import java.util.concurrent.CopyOnWriteArrayList
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -23,96 +21,42 @@ import graft.streaming.{Connector, NozzleReader, WebSocket}
   *   conn 2: expects refreshed token; 101 + 2 text + 1 BINARY frame
   *           (high-bit bytes — the dropsonde protobuf path) +
   *           CLOSE 1000 → no alert, re-dial;
-  *   conn 3: 101 + 2 text frames, held open → client stops at
-  *           maxFrames = 7.
+  *   conn 3: 101 + 3 text frames (the last one non-ASCII — text
+  *           frames are UTF-8), held open → client stops at
+  *           maxFrames = 8.
   */
 class WebSocketReaderSpec extends AnyFunSuite {
 
   private val binPayload = Array[Byte](0x01, 0xFF.toByte, 0x80.toByte, 0x00, 0x7F)
 
-  private def readReqHead(in: InputStream): Map[String, String] = {
-    def line(): String = {
-      val sb = new StringBuilder
-      var c = in.read()
-      while (c != -1 && c != '\n') { if (c != '\r') sb.append(c.toChar); c = in.read() }
-      sb.toString
-    }
-    val first = line()
-    assert(first.startsWith("GET ") && first.endsWith(" HTTP/1.1"), first)
-    val h = Map.newBuilder[String, String]
-    h += ":path" -> first.stripPrefix("GET ").stripSuffix(" HTTP/1.1")
-    var l = line()
-    while (l.nonEmpty) {
-      val i = l.indexOf(':')
-      if (i > 0) h += l.substring(0, i).trim.toLowerCase -> l.substring(i + 1).trim
-      l = line()
-    }
-    h.result()
-  }
-
-  private def accept101(out: OutputStream, key: String): Unit = {
-    out.write(("HTTP/1.1 101 Switching Protocols\r\n" +
-      "Upgrade: websocket\r\nConnection: Upgrade\r\n" +
-      s"Sec-WebSocket-Accept: ${WebSocket.acceptKey(key)}\r\n\r\n").getBytes("UTF-8"))
-    out.flush()
-  }
+  private val nonAscii = "f7 café — 日本 🔥"
 
   test("ws: handshake → frames → ping/pong → 1008 alert → 401 refresh → binary → resume") {
-    val server = new ServerSocket(0, 8, InetAddress.getLoopbackAddress)
-    val connIdx = new AtomicInteger(0)
     val seenTokens = new CopyOnWriteArrayList[String]()
     val pongs = new CopyOnWriteArrayList[String]()
-
-    def handle(idx: Int, s: Socket): Unit = {
-      val in = new java.io.BufferedInputStream(s.getInputStream)
-      val out = s.getOutputStream
-      val h = readReqHead(in)
-      seenTokens.add(h.getOrElse("authorization", "<none>"))
-      val key = h.getOrElse("sec-websocket-key", "")
+    val server = new WsTestServer((idx, c) => {
+      seenTokens.add(c.token)
       idx match {
         case 0 =>
-          accept101(out, key)
-          WebSocket.writeFrame(out, WebSocket.OpText, "f0".getBytes, mask = false)
-          WebSocket.writeFrame(out, WebSocket.OpText, "f1".getBytes, mask = false)
-          WebSocket.writeFrame(out, WebSocket.OpPing, "hb-1".getBytes, mask = false)
-          val pong = WebSocket.readFrame(in) // client must answer the ping
+          c.accept()
+          c.text("f0"); c.text("f1")
+          c.send(WebSocket.OpPing, "hb-1".getBytes)
+          val pong = WebSocket.readFrame(c.in) // client must answer the ping
           if (pong.opcode == WebSocket.OpPong) pongs.add(pong.text)
-          WebSocket.writeFrame(out, WebSocket.OpClose,
-            WebSocket.closePayload(1008, "too slow"), mask = false)
-          s.close()
+          c.closeWith(1008, "too slow")
         case 1 =>
-          out.write("HTTP/1.1 401 Unauthorized\r\n\r\n".getBytes("UTF-8"))
-          out.flush(); s.close()
+          c.respond("401 Unauthorized")
         case 2 =>
-          accept101(out, key)
-          WebSocket.writeFrame(out, WebSocket.OpText, "f2".getBytes, mask = false)
-          WebSocket.writeFrame(out, WebSocket.OpText, "f3".getBytes, mask = false)
-          WebSocket.writeFrame(out, WebSocket.OpBinary, binPayload, mask = false)
-          WebSocket.writeFrame(out, WebSocket.OpClose,
-            WebSocket.closePayload(1000, "bye"), mask = false)
-          s.close()
+          c.accept()
+          c.text("f2"); c.text("f3")
+          c.send(WebSocket.OpBinary, binPayload)
+          c.closeWith(1000, "bye")
         case _ =>
-          accept101(out, key)
-          WebSocket.writeFrame(out, WebSocket.OpText, "f5".getBytes, mask = false)
-          WebSocket.writeFrame(out, WebSocket.OpText, "f6".getBytes, mask = false)
+          c.accept()
+          c.text("f5"); c.text("f6"); c.text(nonAscii)
           Thread.sleep(5000) // held open; client stops at maxFrames
-          s.close()
       }
-    }
-
-    val acceptor = new Thread(() => {
-      try {
-        while (!server.isClosed) {
-          val s = server.accept()
-          val idx = connIdx.getAndIncrement()
-          val t = new Thread(() => try handle(idx, s) catch { case _: Exception => () })
-          t.setDaemon(true)
-          t.start()
-        }
-      } catch { case _: Exception => () }
     })
-    acceptor.setDaemon(true)
-    acceptor.start()
 
     val fetches = new AtomicInteger(0)
     val fetcher = new Connector.TokenFetcher(
@@ -122,13 +66,13 @@ class WebSocketReaderSpec extends AnyFunSuite {
     val alerts = new CopyOnWriteArrayList[String]()
 
     try {
-      val result = NozzleReader.runWs(
-        "127.0.0.1", server.getLocalPort, fetcher, backoff,
-        idleTimeoutMs = 2000, maxFrames = 7,
+      val result = NozzleReader.run(
+        "127.0.0.1", server.port, fetcher, backoff,
+        idleTimeoutMs = 2000, maxFrames = 8,
         onFrame = received.add(_), onAlert = alerts.add(_))
 
       val stats = result.fold(e => fail(s"reader failed: $e"), identity)
-      assert(stats.frames === 7L)
+      assert(stats.frames === 8L)
       assert(stats.dials === 4L, "conn0 + 401 + conn2 + conn3")
       assert(stats.refreshes === 1L)
       assert(stats.alerts === 1L, "exactly the 1008 close alerts; 1000 must not")
@@ -146,6 +90,8 @@ class WebSocketReaderSpec extends AnyFunSuite {
       assert(fs.get(4) === new String(binPayload, "ISO-8859-1"))
       assert(fs.get(4).getBytes("ISO-8859-1") === binPayload)
       assert(fs.get(5) === "f5" && fs.get(6) === "f6")
+      // text frames decode as UTF-8 (RFC 6455 §5.6), not byte-per-char
+      assert(fs.get(7) === nonAscii)
 
       // ping answered with an echoing pong before the close
       assert(pongs.size === 1 && pongs.get(0) === "hb-1")
@@ -159,46 +105,24 @@ class WebSocketReaderSpec extends AnyFunSuite {
 
   test("ws e2e: readStream protocol=ws serves frames as rows and 1008 bumps the O4 counter") {
     val spark = SparkTestSession.spark
-    val server = new ServerSocket(0, 8, InetAddress.getLoopbackAddress)
-    val connIdx = new AtomicInteger(0)
     val paths = new CopyOnWriteArrayList[String]()
-
-    def handle(idx: Int, s: Socket): Unit = {
-      val in = new java.io.BufferedInputStream(s.getInputStream)
-      val out = s.getOutputStream
-      val h = readReqHead(in)
-      paths.add(h.getOrElse(":path", "<none>"))
-      accept101(out, h.getOrElse("sec-websocket-key", ""))
+    val server = new WsTestServer((idx, c) => {
+      paths.add(c.request.getOrElse(":path", "<none>"))
+      c.accept()
       if (idx == 0) {
-        (0 until 3).foreach(i =>
-          WebSocket.writeFrame(out, WebSocket.OpText, s"wf$i".getBytes, mask = false))
-        WebSocket.writeFrame(out, WebSocket.OpClose,
-          WebSocket.closePayload(1008, "too slow"), mask = false)
-        s.close()
+        (0 until 3).foreach(i => c.text(s"wf$i"))
+        c.closeWith(1008, "too slow")
       } else {
-        (3 until 6).foreach(i =>
-          WebSocket.writeFrame(out, WebSocket.OpText, s"wf$i".getBytes, mask = false))
+        (3 until 6).foreach(i => c.text(s"wf$i"))
         Thread.sleep(20000) // hold open until the test ends
-        s.close()
       }
-    }
-
-    val acceptor = new Thread(() => {
-      try while (!server.isClosed) {
-        val s = server.accept()
-        val idx = connIdx.getAndIncrement()
-        val t = new Thread(() => try handle(idx, s) catch { case _: Exception => () })
-        t.setDaemon(true); t.start()
-      } catch { case _: Exception => () }
     })
-    acceptor.setDaemon(true)
-    acceptor.start()
 
     val baseline = graft.sources.FirehoseSocketSource.slowConsumerAlerts.get()
     val ck = java.nio.file.Files.createTempDirectory("ws-src-ck").toString
     val q = spark.readStream.format("graft-firehose-socket")
       .option("host", "127.0.0.1")
-      .option("port", server.getLocalPort)
+      .option("port", server.port)
       .option("protocol", "ws")
       .option("subscriptionId", "graft-sub-7")
       .option("filterType", "metrics")
@@ -217,7 +141,7 @@ class WebSocketReaderSpec extends AnyFunSuite {
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       def count(): Long = spark.sql("SELECT count(*) FROM ws_frames").head().getLong(0)
       while (count() < 6 && System.nanoTime() < deadline) Thread.sleep(100)
-      assert(count() === 6, s"conns=${connIdx.get()}")
+      assert(count() === 6, s"conns=${server.connections}")
       val got = spark.sql("SELECT frame FROM ws_frames").collect()
         .map(_.getString(0)).sorted.toSeq
       assert(got === (0 until 6).map(i => s"wf$i"))
@@ -233,26 +157,7 @@ class WebSocketReaderSpec extends AnyFunSuite {
   }
 
   test("ws: one alert per 1008 close; the successful handshake keeps resetting the budget") {
-    val server = new ServerSocket(0, 8, InetAddress.getLoopbackAddress)
-    def handle(s: Socket): Unit = {
-      val in = new java.io.BufferedInputStream(s.getInputStream)
-      val out = s.getOutputStream
-      val h = readReqHead(in)
-      accept101(out, h.getOrElse("sec-websocket-key", ""))
-      WebSocket.writeFrame(out, WebSocket.OpClose,
-        WebSocket.closePayload(1008, "too slow"), mask = false)
-      s.close()
-    }
-    val acceptor = new Thread(() => {
-      try while (!server.isClosed) {
-        val s = server.accept()
-        val t = new Thread(() => try handle(s) catch { case _: Exception => () })
-        t.setDaemon(true); t.start()
-      } catch { case _: Exception => () }
-    })
-    acceptor.setDaemon(true)
-    acceptor.start()
-
+    val server = new WsTestServer((_, c) => { c.accept(); c.closeWith(1008, "too slow") })
     val fetcher = new Connector.TokenFetcher("https://uaa.example", "u", "p", () => "tok")
     val backoff = new Connector.Backoff(minDelayMs = 5, maxDelayMs = 10, maxRetries = 3)
     val alerts = new CopyOnWriteArrayList[String]()
@@ -262,8 +167,8 @@ class WebSocketReaderSpec extends AnyFunSuite {
       // semantics: onConnected resets backoff), so the loop never
       // exhausts — the caller's stop signal is what ends it, and the
       // alert count tracks the closes one-to-one.
-      val result = NozzleReader.runWs(
-        "127.0.0.1", server.getLocalPort, fetcher, backoff,
+      val result = NozzleReader.run(
+        "127.0.0.1", server.port, fetcher, backoff,
         idleTimeoutMs = 2000, maxFrames = 10,
         onFrame = _ => (), onAlert = alerts.add(_),
         shouldStop = () => alerts.size >= 4)
