@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Bench harness: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Each result is written to the `noop` sink — a
@@ -23,14 +22,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus()
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
-    val spark = GraftSession.tune(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession(spark)
+    val spark = GraftSession.local(cpus)
     // JIT/codegen warm-up so the first measured query doesn't absorb
     // session initialization (round-1 showed a 14 s first-query skew).
     spark.range(1000000L).selectExpr("sum(id)").write

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Phase breakdown probe for the whole-suite per-query constant
   * (OPTIMIZATION_r16, verdict item 7): for each named query, splits
@@ -27,15 +26,8 @@ object BenchPhases {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: BenchPhases <sfDir> <q1,q2,...|all>")
     val sfDir = args(0)
-    val cpus = GraftSession.cpus()
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
-    val spark = GraftSession.tune(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.ui.enabled", "false")
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession(spark)
+    val spark = GraftSession.local()
     spark.range(1000000L).selectExpr("sum(id)").write
       .format("noop").mode("overwrite").save()
     val names: Seq[String] =

@@ -199,11 +199,10 @@ object Functions {
   def gram4_codes(t: Column): Column =
     Shims.column(graft.functions.Gram4Codes(Shims.expression(t)))
 
-  /** word_shingles3(t): sorted distinct 3-word shingles of a
-    * normalized single-spaced string, sliced zero-copy from the
-    * input — the MinHash/SimHash shingling hot path. */
-  def word_shingles3(t: Column): Column =
-    Shims.column(graft.functions.WordShingles3(Shims.expression(t)))
+  /** word_shingles3(t): sorted distinct 3-word shingles — the
+    * MinHash/SimHash shingling hot path; an alias of
+    * `word_shingles(t, 3)`. */
+  def word_shingles3(t: Column): Column = word_shingles(t, 3)
 
   /** word_shingles(t, k): the parameterized k-word shingle set —
     * decontamination's production span widths (k = 8-13) with the
@@ -359,7 +358,7 @@ object Functions {
         intLit("pq_adc", "nSub")(exprs(4)))),
     "vec_dot" -> (exprs => graft.functions.VecDot(exprs(0), exprs(1))),
     "gram4_codes" -> (exprs => graft.functions.Gram4Codes(exprs.head)),
-    "word_shingles3" -> (exprs => graft.functions.WordShingles3(exprs.head)),
+    "word_shingles3" -> (exprs => graft.functions.WordShinglesK(exprs.head, 3)),
     // word_shingles(t, 8): k must be a foldable integer literal
     "word_shingles" -> (exprs =>
       graft.functions.WordShinglesK(exprs(0), intLit("word_shingles", "k")(exprs(1)))),
@@ -428,10 +427,17 @@ object Functions {
       graft.functions.Gram3Agg(exprs(0)).toAggregateExpression())
   )
 
+  /** Registers, as temp functions, every [[sqlBuilders]] name the
+    * session does not already resolve to graft's own builder (from an
+    * earlier call or from [[GraftExtensions]]). The check is by builder
+    * identity, not by name: Spark ships a built-in `hll_union` that the
+    * graft one must replace. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     sqlBuilders.foreach { case (name, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+      if (!reg.lookupFunctionBuilder(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(name)).exists(_ eq builder))
+        reg.createOrReplaceTempFunction(name, builder, "built-in")
     }
   }
 }

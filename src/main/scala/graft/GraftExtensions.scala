@@ -10,11 +10,13 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * registers every custom function ([[Functions.sqlBuilders]]) on each
-  * new SparkSession cluster-wide — no driver-side
-  * `Functions.register(spark)` call needed, and the functions survive
-  * `spark.newSession()` (temp-function registration does not). This is
-  * the deploy path for SQL-only consumers (JDBC/Thrift, notebooks).
+  * registers every custom function ([[Functions.sqlBuilders]]), the
+  * as-of join strategy and the `Md5PrefixFold` rule on each new
+  * SparkSession cluster-wide — no driver-side [[GraftSession.install]]
+  * call needed, and the functions survive `spark.newSession()`
+  * (temp-function registration does not). This is the deploy path for
+  * SQL-only consumers (JDBC/Thrift, notebooks) that run no graft code;
+  * driver code goes through [[GraftSession]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -25,8 +27,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder))
     }
     // custom operators: the native as-of join plans on every session
-    // of the cluster (AsOf.join also self-installs via
-    // experimental.extraStrategies for ad-hoc driver sessions)
+    // of the cluster
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     // semantics-preserving native-kernel substitution for the spelled
     // portable hash (see Md5PrefixFold's scaladoc)

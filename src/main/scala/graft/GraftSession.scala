@@ -2,14 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Central SparkSession factory for the engine.
+/** Central SparkSession factory for the engine, and its one install
+  * point for the graft surface ([[install]]).
   *
-  * All entry points (Verify, Bench, tests) funnel through here so the
-  * scale-oriented defaults are applied uniformly:
+  * All entry points (Verify, Bench, NozzleMain, tests) funnel through
+  * here so the scale-oriented defaults are applied uniformly:
   *
   *  - AQE on (runtime re-plan, skew-join splitting at 100 TB);
-  *  - shuffle partitions sized to local cores (the driver overrides via
-  *    its own builder; cluster deploys would size to 2-3x total cores);
+  *  - shuffle partitions sized to local cores (cluster deploys would
+  *    size to 2-3x total cores);
   *  - `nanosAsLong` so parquet TIMESTAMP(NANOS) columns (the `events.ts`
   *    column in the testdata) load as raw ns-since-epoch longs — we then
   *    derive micro-precision timestamps explicitly where windowing needs
@@ -25,15 +26,9 @@ object GraftSession {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.parquet.filterPushdown", "true")
     .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-    // Fallback chain SPARK_GRAFT_SHUFFLE -> SPARK_GRAFT_CPUS -> 32:
-    // tune() is applied AFTER the entry points' own builder configs, so
-    // a plain "32" here silently clobbered Bench/Verify's
-    // shuffle.partitions = $SPARK_GRAFT_CPUS (the r15 verdict's config-
-    // ordering bug) and pinned shuffle parallelism at 32 during the
-    // driver's core-scaling runs. Deferring to the cpus env restores
-    // the documented contract without depending on config order.
-    .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus().toString))
+    // tune() runs after the callers' own builder configs, so this
+    // value wins over any shuffle.partitions they set
+    .config("spark.sql.shuffle.partitions", cpus().toString)
 
   /** Local core count for the entry points' `local[N]` master:
     * `SPARK_GRAFT_CPUS`, default 32. Fails fast unless it is a positive
@@ -45,7 +40,7 @@ object GraftSession {
           s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
     }
 
-  def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
+  def local(cores: Int = cpus(), appName: String = "graft"): SparkSession = {
     val spark = tune(
       SparkSession.builder()
         .master(s"local[$cores]")
@@ -58,18 +53,27 @@ object GraftSession {
   }
 
   /** Ensure session-level SQL confs hold even on a session built
-    * elsewhere (the driver's Verify/Bench mains, test suites). */
+    * elsewhere (test suites, the benchmark), then [[install]]. */
   def apply(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    install(spark)
+  }
+
+  /** The graft surface on one session, idempotently: every
+    * [[Functions.sqlBuilders]] function, the [[graft.plans.Md5PrefixFold]]
+    * rule and the [[graft.plans.AsOfJoinStrategy]] planner strategy, each
+    * added only if absent. The driver-code counterpart of
+    * [[GraftExtensions]], which SQL-only deployments use instead. */
+  def install(spark: SparkSession): SparkSession = {
     Functions.register(spark)
-    // native-kernel substitutions (semantics-preserving): the spelled
-    // portable hash fuses to Md5Prefix60 (GraftExtensions installs the
-    // same rule cluster-wide)
     if (!spark.experimental.extraOptimizations.contains(graft.plans.Md5PrefixFold))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.Md5PrefixFold
+    if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
     spark
   }
 }

@@ -139,7 +139,6 @@ object NozzleMain {
     // as "flag unset", exactly like the reference's empty-string tests
     val cfg = GraftConfig.resolve(cfg0, o.subscriptionID, o.username, o.password)
     val spark = GraftSession.local()
-    GraftSession(spark)
     // Production state store: RocksDB keeps streaming state (dedup
     // sets, session windows, per-key state) off-heap and spillable —
     // required posture for watermark-bounded state at 100 TB.

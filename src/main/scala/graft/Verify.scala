@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,15 +14,7 @@ object Verify {
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty,
       s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
-    val cpus = GraftSession.cpus()
-    val spark = GraftSession.tune(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession(spark)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // Failures are RECORDED, not just logged: a query that throws
     // would otherwise be silently absent from the output dir and read

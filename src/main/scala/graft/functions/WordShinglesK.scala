@@ -8,8 +8,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `word_shingles(t, k)` — the sorted distinct k-word shingle set of a
-  * NORMALIZED (trimmed, single-spaced, `[a-z0-9 ]`) string; the
-  * parameterized form of [[WordShingles3]] (which delegates here).
+  * NORMALIZED (trimmed, single-spaced, `[a-z0-9 ]`) string;
+  * `word_shingles3(t)` is its k = 3 alias.
+  *
+  * Because the input is single-spaced, every k-word shingle is a
+  * CONTIGUOUS substring of `t`, so shingles are byte-range slices of
+  * the one input buffer — byte-identical to the
+  * `transform(sequence(...), i -> array_join(slice(words, i, k), ' '))`
+  * HOF chain the DuckDB oracles mirror.
   *
   * `k` is a construction-time literal (like `kmv_kth`'s k): the span
   * width of decontamination and boilerplate detection is an operator

@@ -22,7 +22,8 @@ import org.apache.spark.sql.types.LongType
   * through the FULL planner stack:
   *
   *   [[AsOfJoinPlan]]    logical node (resolved-attribute contract)
-  *   [[AsOfJoinStrategy]] SparkStrategy, installed via
+  *   [[AsOfJoinStrategy]] SparkStrategy, installed by
+  *                        [[graft.GraftSession.install]] via
   *                        `spark.experimental.extraStrategies` (public
   *                        API, no private hooks)
   *   [[AsOfJoinExec]]    physical node: declares ClusteredDistribution
@@ -201,16 +202,15 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
 /** Public API: `AsOf.join(trades, quotes, "user_id", "u", "ts_ns", "t")`
   * — backward as-of, left columns then (nullable) right columns.
   * Rename colliding right columns first; key/time columns must be
-  * LongType. */
+  * LongType. Like every graft SQL function, it requires a session
+  * prepared by [[graft.GraftSession]] or [[graft.GraftExtensions]],
+  * which install [[AsOfJoinStrategy]]. */
 object AsOf {
   def join(left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTime: String, rightTime: String,
       forward: Boolean = false): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
     val lp = Shims.logicalPlan(left)
     val rp = Shims.logicalPlan(right)
     def attr(plan: LogicalPlan, name: String, side: String): Attribute =

@@ -18,8 +18,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * execution native everywhere at once (LSH planes, MinHash mixes,
   * salted shuffles, sampling gates, sketch feeds all go through this
   * one pattern). Always installed, via [[graft.GraftExtensions]]
-  * (cluster-wide) and `experimental.extraOptimizations`
-  * ([[graft.GraftSession]] driver sessions); it is purely an execution
+  * (cluster-wide) or [[graft.GraftSession.install]] (driver
+  * sessions); it is purely an execution
   * substitution with the spelled form's semantics, null-propagation
   * included (every matched node maps null → null), so the oracles
   * hash-match either way (measured 2.0× on the kernel, BENCH_NOTES

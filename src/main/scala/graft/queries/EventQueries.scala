@@ -812,11 +812,6 @@ object EventQueries {
     // async.go:274-280). Runs through the SQL-registered function
     // names, proving every custom function is SQL-reachable.
     "q39_codec" -> ((s, d) => {
-      // Register only into a session that doesn't already have the
-      // functions (a driver-constructed session); GraftSession sessions
-      // registered at startup — re-registering every run spams
-      // SimpleFunctionRegistry WARNs into the bench tail.
-      if (!s.catalog.functionExists("envelope_decode")) graft.Functions.register(s)
       Tables.events(s, d)
         .filter(col("event_type").isNotNull)
         .select(logMessageJson(expr("(ts_ns div 1000) * 1000")).as("j"),

@@ -1,13 +1,18 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.graftshim.Shims
 import org.scalatest.funsuite.AnyFunSuite
 
 /** GraftExtensions must install the full SQL surface on a session
   * built with `withExtensions` (the `spark.sql.extensions` deploy
   * path), with no Functions.register call — including on child
   * sessions from `newSession()`, which temp-function registration
-  * does not survive. */
+  * does not survive. `GraftSession.apply`, the driver-code path, must
+  * install the same surface on a plain session, once however often it
+  * is called. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
   test("extension-built session resolves graft functions without register()") {
@@ -56,5 +61,31 @@ class GraftExtensionsSpec extends AnyFunSuite {
       SparkSession.setDefaultSession(orig)
       SparkSession.setActiveSession(orig)
     }
+  }
+
+  test("GraftSession.apply installs the whole surface, idempotently") {
+    // fresh experimental methods, no temp functions
+    val s = SparkTestSession.spark.newSession()
+    GraftSession(GraftSession(s))
+    val reg = s.sessionState.functionRegistry
+    // graft's own builder, not a same-named Spark built-in (hll_union)
+    Functions.sqlBuilders.foreach { case (name, builder) =>
+      assert(reg.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq builder), name)
+    }
+    assert(s.experimental.extraOptimizations
+      .count(_ == graft.plans.Md5PrefixFold) === 1)
+    assert(s.experimental.extraStrategies
+      .count(_ == graft.plans.AsOfJoinStrategy) === 1)
+    // an AsOfJoinPlan built directly (no AsOf.join) plans and runs
+    import s.implicits._
+    val l = Seq((1L, 10L, 100L), (1L, 20L, 101L)).toDF("k", "t", "lid")
+    val r = Seq((1L, 5L, 900L), (1L, 15L, 901L)).toDF("rk", "rt", "rid")
+    val (lp, rp) = (Shims.logicalPlan(l), Shims.logicalPlan(r))
+    def attr(p: LogicalPlan, n: String) = p.output.find(_.name == n).get
+    val plan = graft.plans.AsOfJoinPlan(lp, rp,
+      attr(lp, "k"), attr(rp, "rk"), attr(lp, "t"), attr(rp, "rt"))
+    val rows = Shims.ofRows(s, plan)
+      .select("lid", "rid").collect().map(x => (x.getLong(0), x.getLong(1))).toSet
+    assert(rows === Set((100L, 900L), (101L, 901L)))
   }
 }
