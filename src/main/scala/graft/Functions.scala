@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.graftshim.Shims
 
-import graft.functions.{EnvelopeJson, EnvelopeProtoDecode, EnvelopeProtoEncode, KmvMins, KmvSketch, MinHashAgg, RollingHash, SortedIntersectCount, UuidStr}
+import graft.functions.{EnvelopeDecode, EnvelopeJson, EnvelopeProtoDecode, EnvelopeProtoEncode, HllMode, HllSketch, KmvMins, MinHashAgg, RollingHash, SortedIntersectCount, UuidStr}
 
 /** Custom scalar functions (native Catalyst expressions, codegen-able)
   * + their SQL registration. Column-API entry points below; SQL names
@@ -24,7 +24,7 @@ object Functions {
   /** envelope_decode(json): parse canonical Envelope JSON back to the
     * struct; malformed → NULL (DROPMALFORMED, async.go:274-280). */
   def envelope_decode(json: Column): Column =
-    graft.functions.EnvelopeCodec.decode(json)
+    Shims.column(EnvelopeDecode(Shims.expression(json)))
 
   /** envelope_proto(struct): dropsonde protobuf wire encoding of an
     * Envelope (sonde-go field numbers). */
@@ -77,9 +77,11 @@ object Functions {
       org.apache.spark.sql.catalyst.expressions.Literal(spec)))
 
   /** kmv_kth(h, k): k-th minimum distinct hash — the KMV
-    * distinct-count sketch statistic (estimator (k-1)*M/h_k). */
+    * distinct-count sketch statistic (estimator (k-1)*M/h_k). It is
+    * element k of the ascending [[kmv_mins]], NULL when the group has
+    * fewer than k distinct hashes. */
   def kmv_kth(h: Column, k: Int): Column =
-    Shims.column(KmvSketch(Shims.expression(h), k).toAggregateExpression())
+    Shims.column(kmvKth(Shims.expression(h), k))
 
   /** kmv_mins(h, k): the KMV sketch as a SET — ascending bottom-k
     * distinct hashes, the mergeable state behind the set-operation
@@ -258,10 +260,10 @@ object Functions {
 
   /** hll_agg(h, b): HyperLogLog registers over the 60-bit md5-prefix
     * hash domain, 2^b-byte mergeable state; returns the exact-integer
-    * register sum S (see [[graft.functions.HllAgg]] — the estimate is
-    * a pure function of S). */
+    * register sum S (see [[graft.functions.HllSketch]] — the estimate
+    * is a pure function of S). */
   def hll_agg(h: Column, b: Int): Column =
-    Shims.column(graft.functions.HllAgg(Shims.expression(h), b)
+    Shims.column(HllSketch(Shims.expression(h), b, HllMode.Agg)
       .toAggregateExpression())
 
   /** md5prefix60(bytes): the engine's portable 60-bit hash computed
@@ -272,20 +274,25 @@ object Functions {
     Shims.column(graft.functions.Md5Prefix60(Shims.expression(bytes)))
 
   /** hll_regs(h, b): the register ARRAY itself as the aggregate value
-    * (see [[graft.functions.HllRegs]]) — land per-partition sketches,
-    * roll them up later with [[hll_union]] without rescanning. */
+    * (see [[graft.functions.HllSketch]]) — land per-partition
+    * sketches, roll them up later with [[hll_union]] without
+    * rescanning. */
   def hll_regs(h: Column, b: Int): Column =
-    Shims.column(graft.functions.HllRegs(Shims.expression(h), b)
+    Shims.column(HllSketch(Shims.expression(h), b, HllMode.Regs)
       .toAggregateExpression())
 
   /** hll_union(regs, b): fold [[hll_regs]] sketches by register max
-    * into the exact-integer S ([[graft.functions.HllUnion]]);
+    * into the exact-integer S ([[graft.functions.HllSketch]]);
     * union-of-sketches ≡ sketch-of-union, bit for bit. */
   def hll_union(regs: Column, b: Int): Column =
-    Shims.column(graft.functions.HllUnion(Shims.expression(regs), b)
+    Shims.column(HllSketch(Shims.expression(regs), b, HllMode.Union)
       .toAggregateExpression())
 
-  import org.apache.spark.sql.catalyst.expressions.Expression
+  import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TryElementAt}
+
+  /** `kmv_kth` is not a kernel of its own: element k of `kmv_mins`. */
+  private def kmvKth(h: Expression, k: Int): Expression =
+    new TryElementAt(KmvMins(h, k).toAggregateExpression(), Literal(k))
 
   /** Extract a foldable integer literal argument (k, capacity, bits). */
   private def intLit(fn: String, what: String)(e: Expression): Int =
@@ -317,6 +324,10 @@ object Functions {
         s"$fn $what must be an integer literal, got: $e")
     }
 
+  /** `hll_agg`/`hll_regs`/`hll_union(x, b)`: b must be an integer literal. */
+  private def hll(mode: HllMode)(exprs: Seq[Expression]): Expression =
+    HllSketch(exprs(0), intLit(mode.name, "b")(exprs(1)), mode).toAggregateExpression()
+
   /** The SQL function surface — one source of truth consumed by both
     * [[register]] (temp functions on an existing session) and
     * [[GraftExtensions]] (`spark.sql.extensions` injection, the
@@ -324,14 +335,13 @@ object Functions {
   private[graft] val sqlBuilders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "uuid_str" -> (exprs => UuidStr(exprs(0), exprs(1))),
     "envelope_json" -> (exprs => EnvelopeJson(exprs.head)),
-    "envelope_decode" -> (exprs => graft.functions.EnvelopeDecode(exprs.head)),
+    "envelope_decode" -> (exprs => EnvelopeDecode(exprs.head)),
     "envelope_proto" -> (exprs => EnvelopeProtoEncode(exprs.head)),
     "envelope_proto_decode" -> (exprs => EnvelopeProtoDecode(exprs.head)),
     "sorted_intersect_count" -> (exprs => SortedIntersectCount(exprs(0), exprs(1))),
     "minhash_agg" -> (exprs => MinHashAgg(exprs.head).toAggregateExpression()),
     // kmv_kth(h, 16): k must be a foldable integer literal
-    "kmv_kth" -> (exprs =>
-      KmvSketch(exprs(0), intLit("kmv_kth", "k")(exprs(1))).toAggregateExpression()),
+    "kmv_kth" -> (exprs => kmvKth(exprs(0), intLit("kmv_kth", "k")(exprs(1)))),
     // kmv_mins(h, 64): k must be a foldable integer literal
     "kmv_mins" -> (exprs =>
       KmvMins(exprs(0), intLit("kmv_mins", "k")(exprs(1))).toAggregateExpression()),
@@ -402,18 +412,15 @@ object Functions {
     "cdc_bounds" -> (exprs => graft.functions.CdcBounds(exprs(0),
       intLit("cdc_bounds", "k")(exprs(1)), intLit("cdc_bounds", "d")(exprs(2)))),
     // hll_agg(h, 6): register-count exponent must be an integer literal
-    "hll_agg" -> (exprs => graft.functions.HllAgg(exprs(0),
-      intLit("hll_agg", "b")(exprs(1))).toAggregateExpression()),
+    "hll_agg" -> hll(HllMode.Agg),
     // accepts strings too: the identity/string→binary cast resolves in
     // the analyzer (AbstractDataType is sql-private, so no
     // ImplicitCastInputTypes here)
     "md5prefix60" -> (exprs => graft.functions.Md5Prefix60(
       org.apache.spark.sql.catalyst.expressions.Cast(
         exprs(0), org.apache.spark.sql.types.BinaryType))),
-    "hll_regs" -> (exprs => graft.functions.HllRegs(exprs(0),
-      intLit("hll_regs", "b")(exprs(1))).toAggregateExpression()),
-    "hll_union" -> (exprs => graft.functions.HllUnion(exprs(0),
-      intLit("hll_union", "b")(exprs(1))).toAggregateExpression()),
+    "hll_regs" -> hll(HllMode.Regs),
+    "hll_union" -> hll(HllMode.Union),
     // ac_count(t, array('p1', …)): dictionary must be a foldable literal
     "ac_count" -> (exprs => graft.functions.AcCount(exprs(0),
       strsLit("ac_count", "patterns")(exprs(1)))),

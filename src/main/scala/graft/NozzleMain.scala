@@ -85,11 +85,8 @@ object NozzleApp {
         }
       else publisher match {
         case Some(p) =>
-          val repartitionMax =
-            if (resolved.kafka.repartitionMax != 0) resolved.kafka.repartitionMax
-            else GraftConfig.DefaultRepartitionMax
           NozzlePipeline.startDlq(routed, s"$checkpointDir/main", p,
-            repartitionMax, stats, dlqPath)
+            resolved.kafka.repartitionMax, stats, dlqPath)
         case None =>
           NozzlePipeline.startMemory(routed, "nozzle_debug", s"$checkpointDir/main")
       }

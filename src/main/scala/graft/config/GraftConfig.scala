@@ -85,7 +85,9 @@ object GraftConfig {
         username = user,
         password = pass,
         idleTimeout = if (c.cf.idleTimeout == 0) DefaultIdleTimeoutSec else c.cf.idleTimeout,
-        retryCount = if (c.cf.retryCount == 0) DefaultRetryCount else c.cf.retryCount))
+        retryCount = if (c.cf.retryCount == 0) DefaultRetryCount else c.cf.retryCount),
+      kafka = c.kafka.copy(repartitionMax =
+        if (c.kafka.repartitionMax == 0) DefaultRepartitionMax else c.kafka.repartitionMax))
   }
 
   // --- minimal TOML subset -------------------------------------------

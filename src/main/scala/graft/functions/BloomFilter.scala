@@ -67,7 +67,7 @@ object Bloom {
 
 /** `bloom_agg(h, numBits, numHashes)` — aggregate a BIGINT key stream
   * into a bloom filter binary. `numBits`/`numHashes` are literal
-  * construction parameters (like [[KmvSketch]]'s k); the output is
+  * construction parameters (like [[KmvMins]]'s k); the output is
   * deterministic for any input order/partitioning. An empty group
   * yields an all-zero filter (contains → false for every key), which
   * is the correct semi-join behavior for an empty build side. */

@@ -1,11 +1,8 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -40,7 +37,7 @@ case class CmsAgg(
     width: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] {
+    extends LongArrayAggregate {
 
   require(depth >= 1 && depth <= 16 && width >= 2 && width <= (1 << 20),
     s"cms_agg: bad dimensions ($depth, $width)")
@@ -75,32 +72,11 @@ case class CmsAgg(
     buf
   }
 
-  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < buf.length) { buf(i) += other(i); i += 1 }
-    buf
-  }
-
   override def eval(buf: Array[Long]): Any = {
     val out = new Array[Any](buf.length)
     var i = 0
     while (i < buf.length) { out(i) = buf(i); i += 1 }
     new GenericArrayData(out)
-  }
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buf.length)
-    var i = 0
-    while (i < buf.length) { bb.putLong(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val out = new Array[Long](bytes.length / 8)
-    var i = 0
-    while (i < out.length) { out(i) = bb.getLong; i += 1 }
-    out
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): CmsAgg =

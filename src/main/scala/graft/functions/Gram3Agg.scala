@@ -1,11 +1,8 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -34,7 +31,7 @@ case class Gram3Agg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] {
+    extends LongArrayAggregate {
 
   private val N = 37 * 37 * 37
 
@@ -71,28 +68,7 @@ case class Gram3Agg(
     buf
   }
 
-  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < N) { buf(i) += other(i); i += 1 }
-    buf
-  }
-
   override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * N)
-    var i = 0
-    while (i < N) { bb.putLong(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val a = new Array[Long](N)
-    var i = 0
-    while (i < N) { a(i) = bb.getLong; i += 1 }
-    a
-  }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): Gram3Agg =
     copy(mutableAggBufferOffset = newOffset)

@@ -1,11 +1,8 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -38,7 +35,7 @@ case class HistAgg(
     nbins: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] {
+    extends LongArrayAggregate {
 
   require(nbins > 0 && nbins <= (1 << 20),
     s"hist_agg nbins must be in [1, 2^20], got $nbins")
@@ -76,28 +73,7 @@ case class HistAgg(
     buf
   }
 
-  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < nbins) { buf(i) += other(i); i += 1 }
-    buf
-  }
-
   override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * nbins)
-    var i = 0
-    while (i < nbins) { bb.putLong(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val a = new Array[Long](nbins)
-    var i = 0
-    while (i < nbins) { a(i) = bb.getLong; i += 1 }
-    a
-  }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): HistAgg =
     copy(mutableAggBufferOffset = newOffset)

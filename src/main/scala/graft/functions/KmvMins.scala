@@ -9,12 +9,15 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** `kmv_mins(h, k)` — the KMV sketch as a SET: the k smallest DISTINCT
-  * hash values seen, ascending. Where [[KmvSketch]] (`kmv_kth`) keeps
-  * only the k-th minimum (the distinct-count statistic), the bottom-k
-  * SET supports the set-OPERATION estimators: for two sketches A, B
-  * with the bottom-k of their union U = bottomk(A ∪ B),
-  * Jaccard ≈ |U ∩ A ∩ B| / |U| — the classic KMV resemblance
+/** `kmv_mins(h, k)` — the KMV (k-minimum-values) sketch as a SET: the
+  * k smallest DISTINCT hash values seen, ascending. It is the one KMV
+  * kernel: `kmv_kth(h, k)`, the distinct-count statistic (estimator
+  * `D ≈ (k-1)·M / h_k` for hashes uniform on [0, M)), is
+  * `try_element_at(kmv_mins(h, k), k)` — NULL when fewer than k
+  * distinct values exist. The bottom-k SET also supports the
+  * set-OPERATION estimators: for two sketches A, B with the bottom-k
+  * of their union U = bottomk(A ∪ B), Jaccard ≈ |U ∩ A ∩ B| / |U| —
+  * the classic KMV resemblance
   * estimator (Beyer et al., "On Synopses for Distinct-Value Estimation
   * Under Multiset Operations", SIGMOD'07). Over the engine's shared
   * md5-prefix hash domain the sketch is EXACTLY reproducible in the

@@ -1,11 +1,8 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -31,7 +28,7 @@ case class MinHashAgg(
     k: Int = 12,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] {
+    extends LongArrayAggregate {
 
   private val P = 2147483647L
 
@@ -73,17 +70,6 @@ case class MinHashAgg(
   override def eval(buf: Array[Long]): Any =
     if (buf.forall(_ == Long.MaxValue)) null // no input rows
     else new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * k)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(k)(bb.getLong())
-  }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): MinHashAgg =
     copy(mutableAggBufferOffset = newOffset)

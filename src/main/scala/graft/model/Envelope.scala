@@ -1,5 +1,7 @@
 package graft.model
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{lit, struct}
 import org.apache.spark.sql.types._
 
 /** The Envelope row type — the reference stream's tagged-union record
@@ -166,6 +168,46 @@ object EnvelopeSchema {
     StructField("counterEvent", counterEvent),
     StructField("error", error),
     StructField("containerMetric", containerMetric)))
+
+  private def nullOf(t: DataType): Column = lit(null).cast(t)
+
+  /** Assemble a canonical Envelope struct ([[schema]] order) from the
+    * given payload columns; every absent payload is a typed NULL (the
+    * tagged-union invariant, envelope.pb.go:110-115), and the
+    * deployment/job/index/ip/tags header fields are NULL. */
+  def envelopeStruct(origin: Column, eventType: Column, timestamp: Column,
+      hss: Column = nullOf(httpStartStop),
+      lm: Column = nullOf(logMessage),
+      vm: Column = nullOf(valueMetric),
+      ce: Column = nullOf(counterEvent),
+      er: Column = nullOf(error),
+      cm: Column = nullOf(containerMetric)): Column =
+    struct(
+      origin.as("origin"),
+      eventType.as("eventType"),
+      timestamp.as("timestamp"),
+      nullOf(StringType).as("deployment"),
+      nullOf(StringType).as("job"),
+      nullOf(StringType).as("index"),
+      nullOf(StringType).as("ip"),
+      nullOf(MapType(StringType, StringType)).as("tags"),
+      hss.as("httpStartStop"),
+      lm.as("logMessage"),
+      vm.as("valueMetric"),
+      ce.as("counterEvent"),
+      er.as("error"),
+      cm.as("containerMetric"))
+
+  /** A LogMessage payload ([[logMessage]] order) as the surrogate emits
+    * it: message type OUT (1), source type DEA, no source instance. */
+  def logMessageStruct(message: Column, timestamp: Column, appId: Column): Column =
+    struct(
+      message.as("message"),
+      lit(1).as("message_type"),
+      timestamp.as("timestamp"),
+      appId.as("app_id"),
+      lit("DEA").as("source_type"),
+      nullOf(StringType).as("source_instance"))
 
   /** Structural equality ignoring nullability/metadata/case of nothing —
     * names are case-sensitive in the JSON contract. */

@@ -90,7 +90,7 @@ object EngineQueries {
     }),
 
     // HyperLogLog distinct-count sketch — KMV's constant-state sibling
-    // (graft.functions.HllAgg): 64 one-byte registers per group vs
+    // (graft.functions.HllSketch): 64 one-byte registers per group vs
     // KMV's k longs, mergeable map-side, and the shuffle payload never
     // grows with cardinality. Oracle-EXACT like q38: the sketch result
     // is the integer register sum S = Σ 2^(55−r_j) (a sum of 64 powers

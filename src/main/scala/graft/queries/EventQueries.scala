@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.{Functions, Tables}
-import graft.model.EnvelopeSchema
+import graft.model.EnvelopeSchema.{envelopeStruct, logMessageStruct}
 
 /** Batch-relational embodiment of the reference pipeline's operators
   * (SURVEY.md §2.1/§2.3), over the driver's `events` table — the
@@ -42,44 +42,13 @@ object EventQueries {
   private def nullOf(t: org.apache.spark.sql.types.DataType): Column =
     lit(null).cast(t)
 
-  /** Assemble a canonical Envelope struct (EnvelopeSchema order) with
-    * the given payload slot filled; all other payloads NULL (the
-    * tagged-union invariant, envelope.pb.go:110-115). */
-  private def envelopeStruct(origin: Column, eventType: Int, tsNs: Column,
-      lm: Column = nullOf(EnvelopeSchema.logMessage),
-      vm: Column = nullOf(EnvelopeSchema.valueMetric),
-      ce: Column = nullOf(EnvelopeSchema.counterEvent),
-      hss: Column = nullOf(EnvelopeSchema.httpStartStop),
-      er: Column = nullOf(EnvelopeSchema.error),
-      cm: Column = nullOf(EnvelopeSchema.containerMetric)): Column =
-    struct(
-      origin.as("origin"),
-      lit(eventType).as("eventType"),
-      tsNs.as("timestamp"),
-      nullOf(StringType).as("deployment"),
-      nullOf(StringType).as("job"),
-      nullOf(StringType).as("index"),
-      nullOf(StringType).as("ip"),
-      nullOf(MapType(StringType, StringType)).as("tags"),
-      hss.as("httpStartStop"),
-      lm.as("logMessage"),
-      vm.as("valueMetric"),
-      ce.as("counterEvent"),
-      er.as("error"),
-      cm.as("containerMetric"))
-
   /** The canonical LogMessage-envelope JSON for an events row — the
     * flagship serialize step (O8) used by entry() and q14. */
   def logMessageJson(tsNs: Column = col("ts_ns")): Column = {
-    val lm = struct(
-      col("props").cast(BinaryType).as("message"),
-      lit(1).as("message_type"),
-      tsNs.as("timestamp"),
-      concat(lit("app-"), col("user_id")).as("app_id"),
-      lit("DEA").as("source_type"),
-      nullOf(StringType).as("source_instance"))
+    val lm = logMessageStruct(col("props").cast(BinaryType), tsNs,
+      concat(lit("app-"), col("user_id")))
     Functions.envelope_json(envelopeStruct(
-      concat(lit("ev-"), col("event_type")), 5, tsNs, lm = lm))
+      concat(lit("ev-"), col("event_type")), lit(5), tsNs, lm = lm))
   }
 
   private val routedTypes = Seq("click", "view", "signup", "purchase")
@@ -314,15 +283,15 @@ object EventQueries {
         .select(col("event_id"),
           logMessageJson(tsq).as("lm_json"),
           Functions.envelope_json(
-            envelopeStruct(origin, 6, tsq, vm = vm)).as("vm_json"),
+            envelopeStruct(origin, lit(6), tsq, vm = vm)).as("vm_json"),
           Functions.envelope_json(
-            envelopeStruct(origin, 7, tsq, ce = ce)).as("ce_json"),
+            envelopeStruct(origin, lit(7), tsq, ce = ce)).as("ce_json"),
           Functions.envelope_json(
-            envelopeStruct(origin, 4, tsq, hss = hss)).as("hss_json"),
+            envelopeStruct(origin, lit(4), tsq, hss = hss)).as("hss_json"),
           Functions.envelope_json(
-            envelopeStruct(origin, 8, tsq, er = er)).as("err_json"),
+            envelopeStruct(origin, lit(8), tsq, er = er)).as("err_json"),
           Functions.envelope_json(
-            envelopeStruct(origin, 9, tsq, cm = cm)).as("cm_json"))
+            envelopeStruct(origin, lit(9), tsq, cm = cm)).as("cm_json"))
         .orderBy("event_id")
     }),
 

@@ -103,13 +103,8 @@ object NozzlePipeline {
     * Exactly one payload is non-null — the tagged-union invariant. */
   def envelopeColumn: Column = {
     val et = col("event_type")
-    val lm = struct(
-      col("props").cast(BinaryType).as("message"),
-      lit(1).as("message_type"),
-      col("ts_ns").as("timestamp"),
-      concat(lit("app-"), col("user_id")).as("app_id"),
-      lit("DEA").as("source_type"),
-      nullOf(StringType).as("source_instance"))
+    val lm = EnvelopeSchema.logMessageStruct(col("props").cast(BinaryType),
+      col("ts_ns"), concat(lit("app-"), col("user_id")))
     val vm = struct(
       et.as("name"), col("value").as("value"), lit("ms").as("unit"))
     val ce = struct(
@@ -132,23 +127,17 @@ object NozzlePipeline {
     val err = struct(
       et.as("source"), lit(1).cast(IntegerType).as("code"),
       col("props").as("message"))
-    struct(
-      concat(lit("ev-"), et).as("origin"),
+    EnvelopeSchema.envelopeStruct(
+      concat(lit("ev-"), et),
       when(et === "click", 5).when(et === "view", 6).when(et === "signup", 7)
         .when(et === "purchase", 4).when(et === "error", 8)
-        .otherwise(-1).as("eventType"),
-      col("ts_ns").as("timestamp"),
-      nullOf(StringType).as("deployment"),
-      nullOf(StringType).as("job"),
-      nullOf(StringType).as("index"),
-      nullOf(StringType).as("ip"),
-      nullOf(MapType(StringType, StringType)).as("tags"),
-      when(et === "purchase", hss).otherwise(nullOf(EnvelopeSchema.httpStartStop)).as("httpStartStop"),
-      when(et === "click", lm).otherwise(nullOf(EnvelopeSchema.logMessage)).as("logMessage"),
-      when(et === "view", vm).otherwise(nullOf(EnvelopeSchema.valueMetric)).as("valueMetric"),
-      when(et === "signup", ce).otherwise(nullOf(EnvelopeSchema.counterEvent)).as("counterEvent"),
-      when(et === "error", err).otherwise(nullOf(EnvelopeSchema.error)).as("error"),
-      nullOf(EnvelopeSchema.containerMetric).as("containerMetric"))
+        .otherwise(-1),
+      col("ts_ns"),
+      hss = when(et === "purchase", hss).otherwise(nullOf(EnvelopeSchema.httpStartStop)),
+      lm = when(et === "click", lm).otherwise(nullOf(EnvelopeSchema.logMessage)),
+      vm = when(et === "view", vm).otherwise(nullOf(EnvelopeSchema.valueMetric)),
+      ce = when(et === "signup", ce).otherwise(nullOf(EnvelopeSchema.counterEvent)),
+      er = when(et === "error", err).otherwise(nullOf(EnvelopeSchema.error)))
   }
 
   /** Slow-consumer detector predicate (O4) — go-nozzle

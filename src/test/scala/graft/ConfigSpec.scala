@@ -77,6 +77,7 @@ class ConfigSpec extends AnyFunSuite {
     assert(fromDefaults.cf.username === GraftConfig.DefaultUsername)
     assert(fromDefaults.cf.idleTimeout === GraftConfig.DefaultIdleTimeoutSec)
     assert(fromDefaults.cf.retryCount === GraftConfig.DefaultRetryCount)
+    assert(fromDefaults.kafka.repartitionMax === GraftConfig.DefaultRepartitionMax)
     // idle_timeout from config is kept
     assert(fromConfig.cf.idleTimeout === 10)
   }

@@ -118,6 +118,28 @@ class HllAggSpec extends AnyFunSuite {
     assert(msgs(e).exists(_.contains("must match")), msgs(e).mkString("; "))
   }
 
+  test("each name accepts only its own input type, and fails analysis naming itself") {
+    // hll_agg/hll_regs/hll_union share one register kernel: the mode
+    // must not let one name fold the other mode's input
+    import spark.implicits._
+    val hashes = hashed(10)
+    val regs = hashes.agg(graft.Functions.hll_regs(col("h"), 6).as("regs"))
+    def analysisError(df: => org.apache.spark.sql.DataFrame): String =
+      intercept[org.apache.spark.sql.AnalysisException](df).getMessage
+    val u = analysisError(hashes.agg(graft.Functions.hll_union(col("h"), 6)))
+    assert(u.contains("hll_union requires BINARY register input, got bigint"), u)
+    val a = analysisError(regs.agg(graft.Functions.hll_agg(col("regs"), 6)))
+    assert(a.contains("hll_agg requires BIGINT input, got binary"), a)
+    val r = analysisError(regs.agg(graft.Functions.hll_regs(col("regs"), 6)))
+    assert(r.contains("hll_regs requires BIGINT input, got binary"), r)
+    // the same through SQL, and the shared b ∈ [4, 12] check names its caller
+    Seq(1L).toDF("h").createOrReplaceTempView("hll_mode_h")
+    val s = analysisError(spark.sql("SELECT hll_union(h, 6) FROM hll_mode_h"))
+    assert(s.contains("hll_union requires BINARY register input"), s)
+    val bad = analysisError(spark.sql("SELECT hll_regs(h, 13) FROM hll_mode_h"))
+    assert(bad.contains("hll_regs b must be in [4, 12], got 13"), bad)
+  }
+
   test("rejects hashes outside [0, 2^60) loudly") {
     import spark.implicits._
     val bad = Seq(-1L).toDF("h")

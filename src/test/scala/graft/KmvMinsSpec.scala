@@ -32,6 +32,34 @@ class KmvMinsSpec extends AnyFunSuite {
     assert(sketch(xs, 64, 4) == Seq(3L, 5L, 9L))
   }
 
+  test("kmv_kth(h, k) is element k of kmv_mins(h, k), NULL below k (Column API and SQL)") {
+    import spark.implicits._
+    // group g holds g + 1 distinct hashes (twice each, plus a NULL),
+    // inserted in descending order: groups 0..9 straddle every k
+    val rows = for (g <- 0 until 10; i <- (0 to g).reverse; _ <- 0 until 2)
+      yield (g, Option(1000L * g + 7L * i))
+    val df = (rows ++ (0 until 10).map(g => (g, Option.empty[Long]))).toDF("g", "h")
+      .repartition(3)
+    df.createOrReplaceTempView("kmv_kth_groups")
+    for (k <- Seq(1, 3, 8)) {
+      val viaCol = df.groupBy("g")
+        .agg(Functions.kmv_kth(col("h"), k), Functions.kmv_mins(col("h"), k))
+      val viaSql = spark.sql(
+        s"SELECT g, kmv_kth(h, $k), kmv_mins(h, $k) FROM kmv_kth_groups GROUP BY g")
+      for ((how, q) <- Seq("column" -> viaCol, "sql" -> viaSql)) {
+        val got = q.collect().map(r =>
+          r.getInt(0) -> (Option(r.get(1)).map(_.asInstanceOf[Long]), r.getSeq[Long](2)))
+        assert(got.length == 10, s"$how k=$k")
+        for ((g, (kth, mins)) <- got) {
+          val distinct = (0 to g).map(i => 1000L * g + 7L * i)
+          assert(mins == distinct.take(k), s"$how k=$k g=$g")
+          assert(kth == mins.lift(k - 1), s"$how k=$k g=$g")
+          assert(kth.isEmpty == (g + 1 < k), s"$how k=$k g=$g")
+        }
+      }
+    }
+  }
+
   test("q117 estimator matches a driver-side replay on real sketches") {
     // Re-derive the per-source sketches exactly as q117 does, then
     // compute |U ∩ A ∩ B| / |U| by hand and compare to the query.
