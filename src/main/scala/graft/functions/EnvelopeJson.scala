@@ -1,7 +1,8 @@
 package graft.functions
 
-import java.io.ByteArrayOutputStream
 import java.math.{BigDecimal => JBigDecimal, MathContext, RoundingMode}
+import java.nio.charset.StandardCharsets.US_ASCII
+import java.util.Arrays
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -60,13 +61,84 @@ case class EnvelopeJson(child: Expression) extends UnaryExpression {
 
 object EnvelopeJsonWriter {
 
-  // per-task-thread reusable buffer: reset() keeps capacity, so the
-  // steady state is zero buffer allocation per row (the encoder runs
-  // 1.5M times per 500k events in q14)
-  private val buffer = new ThreadLocal[ByteArrayOutputStream] {
-    override def initialValue(): ByteArrayOutputStream =
-      new ByteArrayOutputStream(512)
+  /** Growable byte buffer with no locking. The JDK's byte-array output
+    * stream takes its monitor on every `write`; a buffer owned by one
+    * task thread needs none, so bytes go straight into the array and
+    * runs are copied with one `arraycopy`. */
+  final class Buffer {
+    private var buf = new Array[Byte](512)
+    private var n = 0
+
+    def reset(): Unit = n = 0
+    def toByteArray: Array[Byte] = Arrays.copyOf(buf, n)
+
+    private def ensure(more: Int): Unit =
+      if (more > buf.length - n) buf = Arrays.copyOf(buf, math.max(2 * buf.length, n + more))
+
+    def write(b: Int): Unit = { ensure(1); buf(n) = b.toByte; n += 1 }
+
+    def write(src: Array[Byte], off: Int, len: Int): Unit = {
+      ensure(len)
+      System.arraycopy(src, off, buf, n, len)
+      n += len
+    }
+
+    def write(src: Array[Byte]): Unit = write(src, 0, src.length)
+
+    /** Decimal digits of `v`, as `String.valueOf(v)` prints them. */
+    def writeLong(v: Long): Unit = {
+      if (v < 0) write('-')
+      // digits are taken off -|v| <= 0, which also covers Long.MinValue
+      val neg = if (v < 0) v else -v
+      var len = 1
+      var q = neg
+      while (q <= -10) { q /= 10; len += 1 }
+      ensure(len)
+      var p = n + len
+      q = neg
+      while (p > n) { p -= 1; buf(p) = ('0' - q % 10).toByte; q /= 10 }
+      n += len
+    }
+
+    /** `v` read as uint64, as `java.lang.Long.toUnsignedString` prints it. */
+    def writeUnsignedLong(v: Long): Unit =
+      if (v >= 0) writeLong(v)
+      else {
+        val q = java.lang.Long.divideUnsigned(v, 10)
+        writeLong(q)
+        write('0' + (v - 10 * q).toInt)
+      }
+
+    /** Standard base64 with padding (`java.util.Base64.getEncoder`). */
+    def writeBase64(src: Array[Byte]): Unit = {
+      val len = src.length
+      ensure((len + 2) / 3 * 4)
+      val whole = len - len % 3
+      var i = 0
+      while (i < whole) {
+        val bits = (src(i) & 0xff) << 16 | (src(i + 1) & 0xff) << 8 | (src(i + 2) & 0xff)
+        buf(n) = B64(bits >>> 18); buf(n + 1) = B64(bits >>> 12 & 0x3f)
+        buf(n + 2) = B64(bits >>> 6 & 0x3f); buf(n + 3) = B64(bits & 0x3f)
+        i += 3; n += 4
+      }
+      if (i < len) {
+        val two = i + 1 < len
+        val bits = (src(i) & 0xff) << 16 | (if (two) (src(i + 1) & 0xff) << 8 else 0)
+        buf(n) = B64(bits >>> 18); buf(n + 1) = B64(bits >>> 12 & 0x3f)
+        buf(n + 2) = if (two) B64(bits >>> 6 & 0x3f) else '='.toByte
+        buf(n + 3) = '='.toByte
+        n += 4
+      }
+    }
   }
+
+  private val B64 =
+    "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789+/".getBytes(US_ASCII)
+
+  // One buffer per task thread: reset() keeps its capacity, so the
+  // steady state allocates only the row's result array (the encoder
+  // runs 1.5M times per 500k events in q14).
+  private val buffer = ThreadLocal.withInitial[Buffer](() => new Buffer)
 
   def encode(row: InternalRow): UTF8String = {
     val out = buffer.get()
@@ -77,147 +149,168 @@ object EnvelopeJsonWriter {
 
   // --- structural writers (field indices match EnvelopeSchema) -------
 
-  private def writeEnvelope(out: ByteArrayOutputStream, r: InternalRow): Unit = {
+  // Each struct's JSON keys, by field index: the schema's field names
+  // are the wire names. A key is stored as `,"name":`; the first field
+  // written into an object skips the comma.
+  private def keys(t: StructType): Array[Array[Byte]] =
+    t.fieldNames.map(name => s""","$name":""".getBytes(US_ASCII))
+  private val EnvelopeKeys = keys(EnvelopeSchema.schema)
+  private val HttpKeys = keys(EnvelopeSchema.httpStartStop)
+  private val LogKeys = keys(EnvelopeSchema.logMessage)
+  private val ValueKeys = keys(EnvelopeSchema.valueMetric)
+  private val CounterKeys = keys(EnvelopeSchema.counterEvent)
+  private val ErrorKeys = keys(EnvelopeSchema.error)
+  private val ContainerKeys = keys(EnvelopeSchema.containerMetric)
+  private val UuidKeys = keys(EnvelopeSchema.uuid)
+
+  private def writeEnvelope(out: Buffer, r: InternalRow): Unit = {
+    val k = EnvelopeKeys
     out.write('{')
     var first = true
-    first = strField(out, r, 0, "origin", first)
-    first = intField(out, r, 1, "eventType", first)
-    first = longField(out, r, 2, "timestamp", first)
-    first = strField(out, r, 3, "deployment", first)
-    first = strField(out, r, 4, "job", first)
-    first = strField(out, r, 5, "index", first)
-    first = strField(out, r, 6, "ip", first)
+    first = strField(out, r, 0, k, first)
+    first = intField(out, r, 1, k, first)
+    first = longField(out, r, 2, k, first)
+    first = strField(out, r, 3, k, first)
+    first = strField(out, r, 4, k, first)
+    first = strField(out, r, 5, k, first)
+    first = strField(out, r, 6, k, first)
     if (!r.isNullAt(7)) {
       val m = r.getMap(7)
       if (m.numElements() > 0) {
-        first = key(out, "tags", first)
+        first = key(out, k(7), first)
         writeTags(out, m)
       }
     }
     if (!r.isNullAt(8)) {
-      first = key(out, "httpStartStop", first)
+      first = key(out, k(8), first)
       writeHttpStartStop(out, r.getStruct(8, 14))
     }
     if (!r.isNullAt(9)) {
-      first = key(out, "logMessage", first)
+      first = key(out, k(9), first)
       writeLogMessage(out, r.getStruct(9, 6))
     }
     if (!r.isNullAt(10)) {
-      first = key(out, "valueMetric", first)
+      first = key(out, k(10), first)
       writeValueMetric(out, r.getStruct(10, 3))
     }
     if (!r.isNullAt(11)) {
-      first = key(out, "counterEvent", first)
+      first = key(out, k(11), first)
       writeCounterEvent(out, r.getStruct(11, 3))
     }
     if (!r.isNullAt(12)) {
-      first = key(out, "error", first)
+      first = key(out, k(12), first)
       writeError(out, r.getStruct(12, 3))
     }
     if (!r.isNullAt(13)) {
-      first = key(out, "containerMetric", first)
+      first = key(out, k(13), first)
       writeContainerMetric(out, r.getStruct(13, 7))
     }
     out.write('}')
   }
 
-  private def writeHttpStartStop(out: ByteArrayOutputStream, r: InternalRow): Unit = {
+  private def writeHttpStartStop(out: Buffer, r: InternalRow): Unit = {
+    val k = HttpKeys
     out.write('{')
     var first = true
-    first = longField(out, r, 0, "startTimestamp", first)
-    first = longField(out, r, 1, "stopTimestamp", first)
-    if (!r.isNullAt(2)) { first = key(out, "requestId", first); writeUuid(out, r.getStruct(2, 2)) }
-    first = intField(out, r, 3, "peerType", first)
-    first = intField(out, r, 4, "method", first)
-    first = strField(out, r, 5, "uri", first)
-    first = strField(out, r, 6, "remoteAddress", first)
-    first = strField(out, r, 7, "userAgent", first)
-    first = intField(out, r, 8, "statusCode", first)
-    first = longField(out, r, 9, "contentLength", first)
-    if (!r.isNullAt(10)) { first = key(out, "applicationId", first); writeUuid(out, r.getStruct(10, 2)) }
-    first = intField(out, r, 11, "instanceIndex", first)
-    first = strField(out, r, 12, "instanceId", first)
+    first = longField(out, r, 0, k, first)
+    first = longField(out, r, 1, k, first)
+    if (!r.isNullAt(2)) { first = key(out, k(2), first); writeUuid(out, r.getStruct(2, 2)) }
+    first = intField(out, r, 3, k, first)
+    first = intField(out, r, 4, k, first)
+    first = strField(out, r, 5, k, first)
+    first = strField(out, r, 6, k, first)
+    first = strField(out, r, 7, k, first)
+    first = intField(out, r, 8, k, first)
+    first = longField(out, r, 9, k, first)
+    if (!r.isNullAt(10)) { first = key(out, k(10), first); writeUuid(out, r.getStruct(10, 2)) }
+    first = intField(out, r, 11, k, first)
+    first = strField(out, r, 12, k, first)
     if (!r.isNullAt(13)) {
       val a = r.getArray(13)
       if (a.numElements() > 0) {
-        first = key(out, "forwarded", first)
+        first = key(out, k(13), first)
         writeStringArray(out, a)
       }
     }
     out.write('}')
   }
 
-  private def writeLogMessage(out: ByteArrayOutputStream, r: InternalRow): Unit = {
+  private def writeLogMessage(out: Buffer, r: InternalRow): Unit = {
+    val k = LogKeys
     out.write('{')
     var first = true
     if (!r.isNullAt(0)) {
       val b = r.getBinary(0)
       if (b.length > 0) {
-        first = key(out, "message", first)
+        first = key(out, k(0), first)
         out.write('"')
-        ascii(out, java.util.Base64.getEncoder.encodeToString(b))
+        out.writeBase64(b)
         out.write('"')
       }
     }
-    first = intField(out, r, 1, "message_type", first)
-    first = longField(out, r, 2, "timestamp", first)
-    first = strField(out, r, 3, "app_id", first)
-    first = strField(out, r, 4, "source_type", first)
-    first = strField(out, r, 5, "source_instance", first)
+    first = intField(out, r, 1, k, first)
+    first = longField(out, r, 2, k, first)
+    first = strField(out, r, 3, k, first)
+    first = strField(out, r, 4, k, first)
+    first = strField(out, r, 5, k, first)
     out.write('}')
   }
 
-  private def writeValueMetric(out: ByteArrayOutputStream, r: InternalRow): Unit = {
+  private def writeValueMetric(out: Buffer, r: InternalRow): Unit = {
+    val k = ValueKeys
     out.write('{')
     var first = true
-    first = strField(out, r, 0, "name", first)
-    first = doubleField(out, r, 1, "value", first)
-    first = strField(out, r, 2, "unit", first)
+    first = strField(out, r, 0, k, first)
+    first = doubleField(out, r, 1, k, first)
+    first = strField(out, r, 2, k, first)
     out.write('}')
   }
 
-  private def writeCounterEvent(out: ByteArrayOutputStream, r: InternalRow): Unit = {
+  private def writeCounterEvent(out: Buffer, r: InternalRow): Unit = {
+    val k = CounterKeys
     out.write('{')
     var first = true
-    first = strField(out, r, 0, "name", first)
-    first = ulongField(out, r, 1, "delta", first)
-    first = ulongField(out, r, 2, "total", first)
+    first = strField(out, r, 0, k, first)
+    first = ulongField(out, r, 1, k, first)
+    first = ulongField(out, r, 2, k, first)
     out.write('}')
   }
 
-  private def writeError(out: ByteArrayOutputStream, r: InternalRow): Unit = {
+  private def writeError(out: Buffer, r: InternalRow): Unit = {
+    val k = ErrorKeys
     out.write('{')
     var first = true
-    first = strField(out, r, 0, "source", first)
-    first = intField(out, r, 1, "code", first)
-    first = strField(out, r, 2, "message", first)
+    first = strField(out, r, 0, k, first)
+    first = intField(out, r, 1, k, first)
+    first = strField(out, r, 2, k, first)
     out.write('}')
   }
 
-  private def writeContainerMetric(out: ByteArrayOutputStream, r: InternalRow): Unit = {
+  private def writeContainerMetric(out: Buffer, r: InternalRow): Unit = {
+    val k = ContainerKeys
     out.write('{')
     var first = true
-    first = strField(out, r, 0, "applicationId", first)
-    first = intField(out, r, 1, "instanceIndex", first)
-    first = doubleField(out, r, 2, "cpuPercentage", first)
-    first = ulongField(out, r, 3, "memoryBytes", first)
-    first = ulongField(out, r, 4, "diskBytes", first)
-    first = ulongField(out, r, 5, "memoryBytesQuota", first)
-    first = ulongField(out, r, 6, "diskBytesQuota", first)
+    first = strField(out, r, 0, k, first)
+    first = intField(out, r, 1, k, first)
+    first = doubleField(out, r, 2, k, first)
+    first = ulongField(out, r, 3, k, first)
+    first = ulongField(out, r, 4, k, first)
+    first = ulongField(out, r, 5, k, first)
+    first = ulongField(out, r, 6, k, first)
     out.write('}')
   }
 
-  private def writeUuid(out: ByteArrayOutputStream, r: InternalRow): Unit = {
+  private def writeUuid(out: Buffer, r: InternalRow): Unit = {
     // UUID stays {"low":…,"high":…} with unsigned rendering — never the
     // dashed string (kafka_test.go:572).
     out.write('{')
     var first = true
-    first = ulongField(out, r, 0, "low", first)
-    first = ulongField(out, r, 1, "high", first)
+    first = ulongField(out, r, 0, UuidKeys, first)
+    first = ulongField(out, r, 1, UuidKeys, first)
     out.write('}')
   }
 
-  private def writeTags(out: ByteArrayOutputStream, m: MapData): Unit = {
+  private def writeTags(out: Buffer, m: MapData): Unit = {
     // Go map iteration is randomized; we emit in the map column's
     // storage order (deterministic in Spark) — documented divergence.
     out.write('{')
@@ -234,7 +327,7 @@ object EnvelopeJsonWriter {
     out.write('}')
   }
 
-  private def writeStringArray(out: ByteArrayOutputStream, a: ArrayData): Unit = {
+  private def writeStringArray(out: Buffer, a: ArrayData): Unit = {
     out.write('[')
     var i = 0
     while (i < a.numElements()) {
@@ -247,48 +340,35 @@ object EnvelopeJsonWriter {
 
   // --- field helpers -------------------------------------------------
 
-  private def key(out: ByteArrayOutputStream, name: String, first: Boolean): Boolean = {
-    if (!first) out.write(',')
-    out.write('"')
-    ascii(out, name)
-    out.write('"')
-    out.write(':')
+  private def key(out: Buffer, k: Array[Byte], first: Boolean): Boolean = {
+    if (first) out.write(k, 1, k.length - 1) else out.write(k)
     false
   }
 
-  private def strField(out: ByteArrayOutputStream, r: InternalRow, i: Int,
-      name: String, first: Boolean): Boolean =
+  private def strField(out: Buffer, r: InternalRow, i: Int,
+      k: Array[Array[Byte]], first: Boolean): Boolean =
     if (r.isNullAt(i)) first
-    else { val f = key(out, name, first); writeString(out, r.getUTF8String(i)); f }
+    else { key(out, k(i), first); writeString(out, r.getUTF8String(i)); false }
 
-  private def intField(out: ByteArrayOutputStream, r: InternalRow, i: Int,
-      name: String, first: Boolean): Boolean =
+  private def intField(out: Buffer, r: InternalRow, i: Int,
+      k: Array[Array[Byte]], first: Boolean): Boolean =
     if (r.isNullAt(i)) first
-    else { val f = key(out, name, first); ascii(out, String.valueOf(r.getInt(i))); f }
+    else { key(out, k(i), first); out.writeLong(r.getInt(i)); false }
 
-  private def longField(out: ByteArrayOutputStream, r: InternalRow, i: Int,
-      name: String, first: Boolean): Boolean =
+  private def longField(out: Buffer, r: InternalRow, i: Int,
+      k: Array[Array[Byte]], first: Boolean): Boolean =
     if (r.isNullAt(i)) first
-    else { val f = key(out, name, first); ascii(out, String.valueOf(r.getLong(i))); f }
+    else { key(out, k(i), first); out.writeLong(r.getLong(i)); false }
 
-  private def ulongField(out: ByteArrayOutputStream, r: InternalRow, i: Int,
-      name: String, first: Boolean): Boolean =
+  private def ulongField(out: Buffer, r: InternalRow, i: Int,
+      k: Array[Array[Byte]], first: Boolean): Boolean =
     if (r.isNullAt(i)) first
-    else {
-      val f = key(out, name, first)
-      ascii(out, java.lang.Long.toUnsignedString(r.getLong(i)))
-      f
-    }
+    else { key(out, k(i), first); out.writeUnsignedLong(r.getLong(i)); false }
 
-  private def doubleField(out: ByteArrayOutputStream, r: InternalRow, i: Int,
-      name: String, first: Boolean): Boolean =
+  private def doubleField(out: Buffer, r: InternalRow, i: Int,
+      k: Array[Array[Byte]], first: Boolean): Boolean =
     if (r.isNullAt(i)) first
-    else { val f = key(out, name, first); ascii(out, goFloat(r.getDouble(i))); f }
-
-  private def ascii(out: ByteArrayOutputStream, s: String): Unit = {
-    var i = 0
-    while (i < s.length) { out.write(s.charAt(i)); i += 1 }
-  }
+    else { key(out, k(i), first); out.write(goFloat(r.getDouble(i)).getBytes(US_ASCII)); false }
 
   // --- Go-compatible float formatting --------------------------------
 
@@ -304,27 +384,42 @@ object EnvelopeJsonWriter {
     if (d == 0.0d) return if (1 / d < 0) "-0" else "0"
     val neg = d < 0
     val abs = math.abs(d)
-    // Shortest round-trip digits: probe precisions 1..17, take the
-    // first correctly-rounded (half-even, like Ryu) form that parses
-    // back exactly.
-    var digits: String = null
-    var dp = 0
-    var p = 1
-    while (p <= 17 && digits == null) {
-      val cand = new JBigDecimal(abs).round(new MathContext(p, RoundingMode.HALF_EVEN))
-        .stripTrailingZeros()
-      if (cand.doubleValue() == abs) {
-        digits = cand.unscaledValue().toString
-        dp = digits.length - cand.scale()
+    // A normal power of two sits at a binade edge: its lower neighbour
+    // is half as far away as its upper one, so the correctly rounded
+    // p-digit value can fall just below the round-trip interval while
+    // the p-digit value above it is inside (2^-24 is 5.960464477539063e-08,
+    // not 5.9604644775390625e-08).
+    val bits = java.lang.Double.doubleToRawLongBits(abs)
+    val binadeEdge = (bits & 0xfffffffffffffL) == 0 && (bits >>> 52) > 1
+    val exact = new JBigDecimal(abs)
+    // The p-digit form that parses back to abs, or null: the correctly
+    // rounded one (half-even, like Ryu), or at a binade edge the one
+    // rounded up.
+    def fit(p: Int): JBigDecimal = {
+      val near = exact.round(new MathContext(p, RoundingMode.HALF_EVEN))
+      if (near.doubleValue() == abs) near
+      else if (!binadeEdge) null
+      else {
+        val up = exact.round(new MathContext(p, RoundingMode.CEILING))
+        if (up.doubleValue() == abs) up else null
       }
-      p += 1
     }
-    if (digits == null) { // unreachable: 17 digits always round-trip
-      val cand = new JBigDecimal(abs).round(new MathContext(17, RoundingMode.HALF_EVEN))
-        .stripTrailingZeros()
-      digits = cand.unscaledValue().toString
-      dp = digits.length - cand.scale()
+    // Shortest round-trip digits: the least p in 1..17 with a fit. A fit
+    // at p implies one at p + 1 (the nearer (p+1)-digit form is no
+    // farther from abs; at a binade edge the one rounded up is no
+    // farther above it), so p is found by bisection. 17 digits always fit.
+    var best: JBigDecimal = null
+    var lo = 1
+    var hi = 17
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      val f = fit(mid)
+      if (f != null) { best = f; hi = mid } else lo = mid + 1
     }
+    if (best == null) best = fit(17)
+    val shortest = best.stripTrailingZeros()
+    val digits = shortest.unscaledValue().toString
+    val dp = digits.length - shortest.scale()
     val sb = new java.lang.StringBuilder(24)
     if (neg) sb.append('-')
     val exp = dp - 1
@@ -353,51 +448,63 @@ object EnvelopeJsonWriter {
 
   // --- easyjson-compatible string escaping ---------------------------
 
-  private val HEX = "0123456789abcdef".getBytes
+  private val HEX = "0123456789abcdef".getBytes(US_ASCII)
+  private val U00 = "\\u00".getBytes(US_ASCII)
+  private val U202 = "\\u202".getBytes(US_ASCII)
+  private val Replacement = "\\ufffd".getBytes(US_ASCII)
+
+  // Per ASCII byte: 0 if it is copied as is, else the character that
+  // follows the backslash ('u' for the \u00XX form).
+  private val AsciiEscape: Array[Byte] = {
+    val t = new Array[Byte](0x80)
+    for (c <- 0 until 0x20) t(c) = 'u'.toByte
+    for (c <- "<>&") t(c) = 'u'.toByte
+    for ((c, e) <- Seq('\t' -> 't', '\r' -> 'r', '\n' -> 'n', '\\' -> '\\', '"' -> '"')) t(c) = e.toByte
+    t
+  }
 
   /** Byte-level escape matching jwriter.Writer.String with HTML
     * escaping on (the encoder uses default flags): `"` `\` ctrl chars,
     * `<` `>` `&` → \u00XX, U+2028/29 →  / , invalid UTF-8
-    * byte → literal `�` escape. Valid multi-byte runs copied raw. */
-  def writeString(out: ByteArrayOutputStream, s: UTF8String): Unit = {
+    * byte → literal `�` escape. Every run of bytes that needs no
+    * escape, valid multi-byte sequences included, is copied in one go. */
+  def writeString(out: Buffer, s: UTF8String): Unit = {
     val bytes = s.getBytes
-    out.write('"')
-    var i = 0
     val n = bytes.length
+    out.write('"')
+    var run = 0 // start of the pending run of bytes copied as they are
+    var i = 0
     while (i < n) {
       val b = bytes(i) & 0xff
       if (b < 0x80) {
-        if (b >= 0x20 && b != '"' && b != '\\' && b != '<' && b != '>' && b != '&') {
-          out.write(b)
-        } else b match {
-          case '\t' => out.write('\\'); out.write('t')
-          case '\r' => out.write('\\'); out.write('r')
-          case '\n' => out.write('\\'); out.write('n')
-          case '\\' => out.write('\\'); out.write('\\')
-          case '"' => out.write('\\'); out.write('"')
-          case _ =>
-            out.write('\\'); out.write('u'); out.write('0'); out.write('0')
-            out.write(HEX(b >> 4)); out.write(HEX(b & 0xf))
+        val e = AsciiEscape(b)
+        if (e != 0) {
+          out.write(bytes, run, i - run)
+          if (e == 'u') { out.write(U00); out.write(HEX(b >> 4)); out.write(HEX(b & 0xf)) }
+          else { out.write('\\'); out.write(e) }
+          run = i + 1
         }
         i += 1
       } else {
         val width = utf8Width(bytes, i)
         if (width < 0) {
           // broken UTF-8: one replacement escape per bad byte
-          ascii(out, "\\ufffd")
+          out.write(bytes, run, i - run)
+          out.write(Replacement)
           i += 1
+          run = i
         } else if (width == 3 && b == 0xe2 && (bytes(i + 1) & 0xff) == 0x80 &&
             ((bytes(i + 2) & 0xff) == 0xa8 || (bytes(i + 2) & 0xff) == 0xa9)) {
           // U+2028 / U+2029 (JSONP hazard)
-          ascii(out, "\\u202")
+          out.write(bytes, run, i - run)
+          out.write(U202)
           out.write(HEX((bytes(i + 2) & 0xff) & 0xf))
           i += 3
-        } else {
-          out.write(bytes, i, width)
-          i += width
-        }
+          run = i
+        } else i += width
       }
     }
+    out.write(bytes, run, n - run)
     out.write('"')
   }
 

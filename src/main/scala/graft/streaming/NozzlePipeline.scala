@@ -360,7 +360,8 @@ object NozzlePipeline {
                 try { publisher.publish(topic, payload); ok = true }
                 catch { case _: Exception => attempt += 1 }
               }
-              (id, topic, payload, ok)
+              // only failed rows are kept, so a delivered one drops its text
+              if (ok) (id, null, null, ok) else (id, topic, payload, ok)
             }
           }
           .toDF("event_id", "topic", "payload", "ok")

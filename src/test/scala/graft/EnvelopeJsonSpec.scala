@@ -1,7 +1,5 @@
 package graft
 
-import java.io.ByteArrayOutputStream
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
@@ -139,7 +137,7 @@ class EnvelopeJsonSpec extends AnyFunSuite {
 
   test("string escaping matches easyjson (HTML escapes on)") {
     def esc(s: String): String = {
-      val out = new ByteArrayOutputStream()
+      val out = new EnvelopeJsonWriter.Buffer()
       EnvelopeJsonWriter.writeString(out, UTF8String.fromString(s))
       new String(out.toByteArray, "UTF-8")
     }
@@ -151,10 +149,108 @@ class EnvelopeJsonSpec extends AnyFunSuite {
     assert(esc("café 日本") === "\"café 日本\"") // valid UTF-8 raw
     assert(esc("\u2028\u2029") === "\"\\u2028\\u2029\"")
     // broken UTF-8: each invalid byte becomes a � escape
-    val out = new ByteArrayOutputStream()
+    val out = new EnvelopeJsonWriter.Buffer()
     EnvelopeJsonWriter.writeString(out,
       UTF8String.fromBytes(Array[Byte]('a', 0xff.toByte, 0xc3.toByte, 'b')))
     assert(new String(out.toByteArray, "UTF-8") === "\"a\\ufffd\\ufffdb\"")
+  }
+
+  /** Encodes one envelope per raw `origin` byte string. The binary →
+    * string cast keeps the bytes as they are, invalid UTF-8 included. */
+  private def encodeOrigins(origins: Seq[Array[Byte]]): Seq[String] = {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val env = Seq(empty).toDS().toDF()
+    val df = origins.zipWithIndex.toDF("raw", "i").crossJoin(env)
+    df.orderBy("i")
+      .select(Functions.envelope_json(struct(env.columns.map {
+        case "origin" => col("raw").cast("string").as("origin")
+        case c => col(c)
+      }: _*)).as("j"))
+      .as[String].collect().toSeq
+  }
+
+  private def originJson(escaped: String): String = "{\"origin\":\"" + escaped + "\"}"
+
+  test("golden: a payload over 512 B and a log message over 64 KiB") {
+    val longOrigin = "o<" * 300
+    val msg = Array.tabulate[Byte](70000)(i => (i * 31 + 7).toByte)
+    val got = encodeAll(Seq(
+      empty.copy(origin = Some(longOrigin), eventType = Some(5)),
+      empty.copy(logMessage = Some(LogMessage(Some(msg), Some(1), None, Some("app"), None, None))),
+      empty.copy(origin = Some("small"))))
+    assert(got(0) === s"""{"origin":"${"o\\u003c" * 300}","eventType":5}""")
+    assert(got(0).length > 512)
+    assert(got(1) === s"""{"logMessage":{"message":"${java.util.Base64.getEncoder
+      .encodeToString(msg)}","message_type":1,"app_id":"app"}}""")
+    assert(got(1).length > 64 * 1024)
+    assert(got(2) === originJson("small"))
+  }
+
+  test("golden: escapes as the first byte, the last byte and back to back") {
+    val got = encodeAll(Seq("<tag", "tag>", "\"\\\n\t<>&\u0001\u001f", "\u2028x\u2029",
+      "é<é", "a&&b", "").map(o => empty.copy(origin = Some(o))))
+    assert(got === Seq(
+      originJson("\\u003ctag"),
+      originJson("tag\\u003e"),
+      originJson("\\\"\\\\\\n\\t\\u003c\\u003e\\u0026\\u0001\\u001f"),
+      originJson("\\u2028x\\u2029"),
+      originJson("é\\u003cé"),
+      originJson("a\\u0026\\u0026b"),
+      originJson("")))
+  }
+
+  test("golden: broken and truncated UTF-8 become one \\ufffd per bad byte") {
+    def bytes(bs: Int*): Array[Byte] = bs.map(_.toByte).toArray
+    val got = encodeOrigins(Seq(
+      bytes('a', 0xe6, 0x97), // 日 (e6 97 a5) cut after two bytes
+      bytes('a', 0xf0, 0x9f, 0x98), // a four-byte sequence cut after three
+      bytes(0xc3), // a lone lead byte
+      bytes(0xff, 'a', 0xe6, 0x97, 0xa5))) // bad first byte, then valid
+    assert(got === Seq(
+      originJson("a\\ufffd\\ufffd"),
+      originJson("a\\ufffd\\ufffd\\ufffd"),
+      originJson("\\ufffd"),
+      originJson("\\ufffda日")))
+  }
+
+  test("golden: integer extremes, signed and unsigned") {
+    val got = encodeAll(Seq(
+      empty.copy(eventType = Some(Int.MinValue), timestamp = Some(Long.MinValue),
+        containerMetric = Some(ContainerMetric(applicationId = None,
+          instanceIndex = Some(Int.MaxValue), cpuPercentage = None,
+          memoryBytes = Some(-1L), diskBytes = Some(Long.MaxValue),
+          memoryBytesQuota = Some(0L), diskBytesQuota = Some(-10L)))),
+      empty.copy(eventType = Some(0), timestamp = Some(Long.MaxValue),
+        httpStartStop = Some(HttpStartStop(startTimestamp = Some(-1L),
+          stopTimestamp = Some(10L), requestId = Some(Uuid(-1L, Long.MinValue)),
+          peerType = Some(-9), method = Some(9), uri = None, remoteAddress = None,
+          userAgent = None, statusCode = Some(-10), contentLength = Some(-100L),
+          applicationId = Some(Uuid(0L, 99L)), instanceIndex = Some(Int.MinValue),
+          instanceId = None, forwarded = None)))))
+    assert(got(0) ===
+      """{"eventType":-2147483648,"timestamp":-9223372036854775808,""" +
+      """"containerMetric":{"instanceIndex":2147483647,""" +
+      """"memoryBytes":18446744073709551615,"diskBytes":9223372036854775807,""" +
+      """"memoryBytesQuota":0,"diskBytesQuota":18446744073709551606}}""")
+    assert(got(1) ===
+      """{"eventType":0,"timestamp":9223372036854775807,""" +
+      """"httpStartStop":{"startTimestamp":-1,"stopTimestamp":10,""" +
+      """"requestId":{"low":18446744073709551615,"high":9223372036854775808},""" +
+      """"peerType":-9,"method":9,"statusCode":-10,"contentLength":-100,""" +
+      """"applicationId":{"low":0,"high":99},"instanceIndex":-2147483648}}""")
+  }
+
+  test("golden: an empty log message is omitted; base64 pads short tails") {
+    def lm(m: String) = empty.copy(logMessage = Some(LogMessage(
+      Some(m.getBytes("UTF-8")), Some(1), None, None, None, None)))
+    val got = encodeAll(Seq("", "a", "ab", "abc", "abcd").map(lm))
+    assert(got === Seq(
+      """{"logMessage":{"message_type":1}}""",
+      """{"logMessage":{"message":"YQ==","message_type":1}}""",
+      """{"logMessage":{"message":"YWI=","message_type":1}}""",
+      """{"logMessage":{"message":"YWJj","message_type":1}}""",
+      """{"logMessage":{"message":"YWJjZA==","message_type":1}}"""))
   }
 
   test("round-trip: decode(envelope_json(e)) == e; malformed -> NULL (O2)") {
@@ -203,7 +299,12 @@ class EnvelopeJsonSpec extends AnyFunSuite {
       1.7976931348623157e308 -> "1.7976931348623157e+308",
       4.9e-324 -> "5e-324", 0.1 -> "0.1",
       1.0 / 3.0 -> "0.3333333333333333",
-      2.0 / 3.0 -> "0.6666666666666666")
+      2.0 / 3.0 -> "0.6666666666666666",
+      // powers of two: the lower half of the round-trip interval is
+      // the narrower one, so the shortest form may round up
+      math.pow(2, -24) -> "5.960464477539063e-08",
+      math.pow(2, -44) -> "5.684341886080802e-14",
+      math.pow(2, 89) -> "6.189700196426902e+26")
     cases.foreach { case (d, want) =>
       assert(EnvelopeJsonWriter.goFloat(d) === want, s"for $d")
     }

@@ -199,6 +199,13 @@ class NozzlePipelineSpec extends AnyFunSuite {
     assert(dlq.count() === views)
     assert(dlq.select("topic").distinct().collect().map(_.getString(0)).toSet
       === Set("metric-topic"))
+    // each DLQ row carries the payload the pipeline built for its event
+    val built = NozzlePipeline.build(Tables.events(spark, sf), cfg)
+      .select(col("event_id"), col("payload").as("built"))
+    assert(dlq.columns.toSeq === Seq("event_id", "topic", "payload"))
+    val joined = dlq.join(built, Seq("event_id"), "left")
+    assert(joined.count() === views)
+    assert(joined.filter(!(col("payload") <=> col("built"))).count() === 0)
   }
 
   test("source: an empty replay dir gets the events schema; a corrupt footer fails in source()") {
