@@ -27,7 +27,7 @@ import graft.model.EnvelopeSchema
   *  - uint64 fields (delta/total, UUID.low/high, *Bytes*) printed
   *    unsigned;
   *  - floats in Go `strconv.FormatFloat(f,'g',-1,64)` form (shortest
-  *    round-trip digits, e-notation iff exp < -4 or >= 21);
+  *    round-trip digits, e-notation iff exp < -4 or >= 6, see [[EnvelopeJsonWriter.goFloat]]);
   *  - easyjson string escaping: `"` `\` ctrl chars, HTML `<` `>` `&`
   *    as `\u00XX`, U+2028/U+2029 escaped, broken UTF-8 → `�`.
   *
@@ -108,32 +108,7 @@ object EnvelopeJsonWriter {
         writeLong(q)
         write('0' + (v - 10 * q).toInt)
       }
-
-    /** Standard base64 with padding (`java.util.Base64.getEncoder`). */
-    def writeBase64(src: Array[Byte]): Unit = {
-      val len = src.length
-      ensure((len + 2) / 3 * 4)
-      val whole = len - len % 3
-      var i = 0
-      while (i < whole) {
-        val bits = (src(i) & 0xff) << 16 | (src(i + 1) & 0xff) << 8 | (src(i + 2) & 0xff)
-        buf(n) = B64(bits >>> 18); buf(n + 1) = B64(bits >>> 12 & 0x3f)
-        buf(n + 2) = B64(bits >>> 6 & 0x3f); buf(n + 3) = B64(bits & 0x3f)
-        i += 3; n += 4
-      }
-      if (i < len) {
-        val two = i + 1 < len
-        val bits = (src(i) & 0xff) << 16 | (if (two) (src(i + 1) & 0xff) << 8 else 0)
-        buf(n) = B64(bits >>> 18); buf(n + 1) = B64(bits >>> 12 & 0x3f)
-        buf(n + 2) = if (two) B64(bits >>> 6 & 0x3f) else '='.toByte
-        buf(n + 3) = '='.toByte
-        n += 4
-      }
-    }
   }
-
-  private val B64 =
-    "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789+/".getBytes(US_ASCII)
 
   // One buffer per task thread: reset() keeps its capacity, so the
   // steady state allocates only the row's result array (the encoder
@@ -244,7 +219,7 @@ object EnvelopeJsonWriter {
       if (b.length > 0) {
         first = key(out, k(0), first)
         out.write('"')
-        out.writeBase64(b)
+        out.write(java.util.Base64.getEncoder.encode(b))
         out.write('"')
       }
     }
@@ -404,19 +379,11 @@ object EnvelopeJsonWriter {
         if (up.doubleValue() == abs) up else null
       }
     }
-    // Shortest round-trip digits: the least p in 1..17 with a fit. A fit
-    // at p implies one at p + 1 (the nearer (p+1)-digit form is no
-    // farther from abs; at a binade edge the one rounded up is no
-    // farther above it), so p is found by bisection. 17 digits always fit.
-    var best: JBigDecimal = null
-    var lo = 1
-    var hi = 17
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      val f = fit(mid)
-      if (f != null) { best = f; hi = mid } else lo = mid + 1
-    }
-    if (best == null) best = fit(17)
+    // Shortest round-trip digits: the least p with a fit. 17 digits
+    // always fit.
+    var p = 1
+    var best = fit(p)
+    while (best == null) { p += 1; best = fit(p) }
     val shortest = best.stripTrailingZeros()
     val digits = shortest.unscaledValue().toString
     val dp = digits.length - shortest.scale()
