@@ -15,8 +15,9 @@ import graft.streaming.NozzlePipeline.Publisher
   * gracefully (stop queries → checkpoints make the restart resume).
   *
   * Assembly is exposed as [[NozzleApp]] so tests (and embedders) can
-  * run the whole lifecycle against bounded sources and in-memory
-  * sinks; [[NozzleMain.main]] is the thin argv wrapper.
+  * run the whole lifecycle against bounded sources with an in-process
+  * publisher or the console sink; [[NozzleMain.main]] is the thin argv
+  * wrapper.
   */
 object NozzleApp {
 
@@ -49,8 +50,9 @@ object NozzleApp {
     *
     * @param source the envelope-surrogate stream (graft-firehose or
     *               file replay)
-    * @param publisher sink target; None = debug/console-style memory
-    *                  accounting only (reference -debug mode)
+    * @param publisher sink target; None with `kafkaSink = false` is
+    *                  the reference's -debug mode: every routed row
+    *                  prints to the console sink
     */
   def start(
       spark: SparkSession,
@@ -75,7 +77,7 @@ object NozzleApp {
     // main query: the real Kafka sink (non-debug production path — the
     // reference's NewKafkaProducer, which likewise fails fast on a bad
     // config, cli.go:228-235), a Kafka-sink stand-in with bounded
-    // retry + DLQ, or a memory sink for debug mode
+    // retry + DLQ, or the console sink for debug mode
     val query =
       if (kafkaSink)
         graft.streaming.Connector.kafkaWriter(routed, resolved.kafka,
@@ -88,7 +90,7 @@ object NozzleApp {
           NozzlePipeline.startDlq(routed, s"$checkpointDir/main", p,
             resolved.kafka.repartitionMax, stats, dlqPath)
         case None =>
-          NozzlePipeline.startMemory(routed, "nozzle_debug", s"$checkpointDir/main")
+          NozzlePipeline.startConsole(routed, s"$checkpointDir/main")
       }
 
     // O4 side-output: slow-consumer alerts over the same source
@@ -136,11 +138,6 @@ object NozzleMain {
     // as "flag unset", exactly like the reference's empty-string tests
     val cfg = GraftConfig.resolve(cfg0, o.subscriptionID, o.username, o.password)
     val spark = GraftSession.local()
-    // Production state store: RocksDB keeps streaming state (dedup
-    // sets, session windows, per-key state) off-heap and spillable —
-    // required posture for watermark-bounded state at 100 TB.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val log = NozzleCli.levelLog(o.logLevel, s => System.err.println(s"[nozzle] $s"))
     val source = spark.readStream.format("graft-firehose")
       .option("rowsPerBatch", 5000)

@@ -16,6 +16,20 @@ import TextQueries._
   * SparkEntry consumes. */
 object TextQualityQueries {
 
+  /** q59's quality gate. The mean-token-length band is the
+    * integer-division BETWEEN restated as pure integer inequalities
+    * (300 ≤ (wc·100) div n ≤ 800 ⟺ 300n ≤ wc·100 < 801n for n > 0),
+    * so it composes from Columns without an expr(). */
+  private def qualityOk(nWords: Column, nStop: Column, nWordchars: Column): Column =
+    nWords >= 30 && nStop * 10 <= nWords &&
+      nWordchars * 100 >= nWords * 300 && nWordchars * 100 < nWords * 801
+
+  /** q59's repetition gate (Gopher/C4-style): ≤30% duplicate words and
+    * the dominant adjacent bigram ≤20%. */
+  private def repOk(nWords: Column, nTypes: Column, topBigramN: Column): Column =
+    (nWords - nTypes) * 100 <= nWords * 30 &&
+      topBigramN * 100 <= greatest(nWords - 1, lit(1L)) * 20
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q17_text" -> ((s, d) => {
       withWords(s, d)
@@ -404,13 +418,9 @@ object TextQualityQueries {
         .select(col("doc_id"), col("keep_exact"),
           (col("doc_id") % 97 =!= 0).as("not_eval"),
           col("hit").isNull.as("decontam_ok"),
-          // ONE gate definition shared with the streaming form
-          // (graft.streaming.Curation) so batch and stream can't drift
-          graft.streaming.Curation
-            .qualityOk(col("n_words"), col("n_stop"), col("n_wordchars"))
+          qualityOk(col("n_words"), col("n_stop"), col("n_wordchars"))
             .as("quality_ok"),
-          graft.streaming.Curation
-            .repOk(col("n_words"), col("n_types"), col("top_bigram_n"))
+          repOk(col("n_words"), col("n_types"), col("top_bigram_n"))
             .as("rep_ok"))
         .withColumn("kept",
           col("keep_exact") && col("not_eval") && col("decontam_ok")

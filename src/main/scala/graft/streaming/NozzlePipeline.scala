@@ -17,7 +17,7 @@ import graft.model.EnvelopeSchema
   *   → observe() consume + per-type counters                O12
   *   → route(eventType → topic, templating, drop rules)     O5/O6/O7
   *   → envelope_json canonical encoding                     O8
-  *   → sink: memory/console (O16) or foreachBatch with
+  *   → sink: console (O16, debug) or foreachBatch with
   *     bounded retry + DLQ accounting (O9/O10)
   * }}}
   *
@@ -237,82 +237,14 @@ object NozzlePipeline {
         Functions.envelope_json(col("envelope")).as("payload"))
   }
 
-  /** O13, event-time streaming form: 1-second tumbling windows over
-    * the envelope timestamp with a watermark bounding window state.
-    * The reference's per-second rates are processing-time deltas
-    * (stats.go:98-111, mirrored by [[Stats.tick]]); this is the
-    * event-time variant the batch q08/q12 queries validate. State is
-    * watermark-bounded — safe on an unbounded stream. */
-  def perSecondWindows(src: DataFrame, watermark: String = "10 seconds"): DataFrame =
-    src.withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 second"))
-      .agg(count(lit(1)).as("per_sec"))
-      .select(col("window.start").as("w"), col("per_sec"))
-
-  /** Streaming per-user session windows (the q33 batch analogue):
-    * sessions close when the watermark passes their gap-extended end,
-    * so state is bounded by (active users × open sessions) — never
-    * the stream. The 30-minute gap matches the batch gaps-and-islands
-    * oracle exactly once sessions are closed. */
-  def sessionWindows(src: DataFrame, gap: String = "30 minutes",
-      watermark: String = "10 seconds"): DataFrame =
-    src.withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-      .withWatermark("ts", watermark)
-      .groupBy(col("user_id"), session_window(col("ts"), gap).as("w"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("w.start").as("session_start"), col("n_events"))
-
-  /** Streaming exact dedup with watermark-bounded state (the LLM-
-    * pipeline dedup operator in its streaming form): duplicate
-    * event_ids arriving within the watermark are dropped; state for
-    * ids older than the watermark is evicted — bounded memory on an
-    * unbounded stream (RocksDB state store at cluster scale). */
-  def dedupStream(src: DataFrame, watermark: String = "10 seconds"): DataFrame =
-    src.withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** Per-user running state — the custom-state streaming primitive
-    * (`KeyValueGroupedDataset.mapGroupsWithState`): for each user, a
-    * running event count and value sum maintained across micro-batches
-    * in the state store (RocksDB at cluster scale), emitted per batch
-    * in Update mode. The reference's only state is global counters;
-    * this is the keyed generalization a training-data pipeline needs
-    * (e.g. per-source quotas, per-user rate accounting). */
-  case class UserState(events: Long, valueSum: Double)
-
-  def userRunningTotals(src: DataFrame): Dataset[(Long, Long, Double)] = {
-    import src.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    src.select(col("user_id"), col("value"))
-      .as[(Long, Double)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[UserState, (Long, Long, Double)](
-        GroupStateTimeout.NoTimeout()) {
-        case (userId, rows, state) =>
-          val prev = state.getOption.getOrElse(UserState(0L, 0.0))
-          var n = prev.events
-          var s = prev.valueSum
-          rows.foreach { case (_, v) => n += 1; s += v }
-          state.update(UserState(n, s))
-          (userId, n, s)
-      }
-  }
-
-  /** Debug/console sink (O16; reference producer.go:51-63). */
+  /** Debug/console sink (O16): the reference's `-debug` LogProducer
+    * (producer.go:51-63), which logs every event it is handed — so
+    * every routed row of a batch prints, untruncated. */
   def startConsole(routed: DataFrame, checkpoint: String): StreamingQuery =
     routed.writeStream
       .format("console")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** Memory sink for tests/stats queries (O15 surrogate). */
-  def startMemory(routed: DataFrame, name: String, checkpoint: String): StreamingQuery =
-    routed.writeStream
-      .format("memory")
-      .queryName(name)
+      .option("numRows", Int.MaxValue - 1) // show() fetches numRows + 1
+      .option("truncate", false)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()

@@ -6,10 +6,9 @@ import org.apache.spark.sql.streaming._
 import org.apache.spark.sql.types.LongType
 
 /** Per-user running profile on Spark 4's arbitrary-state API
-  * (`transformWithState` / `StatefulProcessor`) — the modern
-  * replacement for the `mapGroupsWithState` form NozzlePipeline uses
-  * for its per-user counters, with individually-evolvable state
-  * variables instead of one opaque case-class blob.
+  * (`transformWithState` / `StatefulProcessor`) — the engine's one
+  * keyed-state form, with individually-evolvable state variables
+  * instead of one opaque case-class blob.
   *
   * Semantics mirror the reference's per-app running counters (the
   * stats plane counts events per origin forever, stats.go:64-95):

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.TextQueries
-import graft.streaming.Curation
 
 /** End-to-end corpus-build composition: the individual operators are
   * each oracle-gated; this spec proves they CHAIN — the way a user
@@ -23,10 +22,11 @@ class CorpusPipelineSpec extends AnyFunSuite {
 
   private def buildManifest() = {
     val docs = Tables.documents(spark, sf)
-    // stage 1: streaming-identical curation gate in batch form
-    val bloom = Curation.evalShingleBloom(docs.filter(col("doc_id") % 97 === 0))
-    val curated = Curation.gate(docs, bloom).filter(col("kept"))
-      .select("doc_id", "lang", "n_chars")
+    // stage 1: the curation funnel (exact dedup, eval split,
+    // decontamination, quality and repetition gates)
+    val kept = SparkEntry.queries("q59_funnel")(spark, sf)
+      .filter(col("kept")).select("doc_id")
+    val curated = docs.select("doc_id", "lang", "n_chars").join(kept, "doc_id")
     // stage 2: drop non-canonical near-dups (keep-best per cluster)
     val canonical = SparkEntry.queries("q108_canonical")(spark, sf)
       .filter(col("keep") === 1).select("doc_id")

@@ -74,8 +74,11 @@ class FirehoseSourceSpec extends AnyFunSuite {
       counterEvent = "counter-topic", httpStartStop = "http-topic", error = "")
     val src = spark.readStream.format("graft-firehose")
       .option("rowsPerBatch", 500).option("totalRows", 1000).load()
-    val q = NozzlePipeline.startMemory(
-      NozzlePipeline.build(src, cfg), "fh_nozzle", tmp("fh-ckpt3"))
+    val q = NozzlePipeline.build(src, cfg)
+      .writeStream.format("memory").queryName("fh_nozzle")
+      .option("checkpointLocation", tmp("fh-ckpt3"))
+      .trigger(Trigger.AvailableNow())
+      .start()
     q.awaitTermination()
     // 1000 rows, types cycle through 5 values; 'error' (ids ≡ 4 mod 5)
     // is unrouted => 800 forwarded

@@ -24,12 +24,20 @@ object CountingPublisher extends Publisher {
 class NozzleAppSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
+  private lazy val cfg = {
+    val basic = GraftConfig.load("fixtures/basic.toml").toOption.get
+    basic.copy(kafka = basic.kafka.copy(topic = graft.config.TopicConfigT(
+      logMessageFmt = "log-%s", valueMetric = "metric",
+      counterEvent = "counter", httpStartStop = "http", error = "")))
+  }
+
+  private def eventually(cond: => Boolean): Unit = {
+    val dl = System.currentTimeMillis() + 10000
+    while (!cond && System.currentTimeMillis() < dl) Thread.sleep(100)
+    assert(cond)
+  }
+
   test("end-to-end lifecycle from config to shutdown") {
-    val cfg = GraftConfig.load("fixtures/basic.toml").toOption.get
-      .copy(kafka = GraftConfig.load("fixtures/basic.toml").toOption.get.kafka
-        .copy(topic = graft.config.TopicConfigT(
-          logMessageFmt = "log-%s", valueMetric = "metric",
-          counterEvent = "counter", httpStartStop = "http", error = "")))
     val base = Files.createTempDirectory("nozzle-app").toString
     val source = spark.readStream.format("graft-firehose")
       .option("rowsPerBatch", 500).option("totalRows", 1000).load()
@@ -45,11 +53,6 @@ class NozzleAppSpec extends AnyFunSuite {
       assert(CountingPublisher.n.get() === 800)
       assert(running.stats.publish.get() === 800)
       // listener folded consume/forward/ignored counters
-      def eventually(cond: => Boolean): Unit = {
-        val dl = System.currentTimeMillis() + 10000
-        while (!cond && System.currentTimeMillis() < dl) Thread.sleep(100)
-        assert(cond)
-      }
       eventually(running.stats.consume.get() === 1000)
       assert(running.stats.forwarded.get() === 800)
       assert(running.stats.ignored.get() === 200)
@@ -64,6 +67,38 @@ class NozzleAppSpec extends AnyFunSuite {
       eventually(logLines.size() >= 9)
     } finally running.shutdown()
     // shutdown is idempotent-safe for the engine surfaces we hold
+    assert(!running.query.isActive)
+  }
+
+  test("-debug mode prints every routed row to the console sink (producer.go:51-63)") {
+    val base = Files.createTempDirectory("nozzle-debug").toString
+    val source = spark.readStream.format("graft-firehose")
+      .option("rowsPerBatch", 500).option("totalRows", 1000).load()
+    val buf = new java.io.ByteArrayOutputStream()
+    val ps = new java.io.PrintStream(buf, true, "UTF-8")
+    // the console sink prints on the stream thread, which inherits the
+    // redirect only when start() spawns it inside this scope
+    val running = Console.withOut(ps) {
+      val r = NozzleApp.start(spark, cfg, source,
+        checkpointDir = s"$base/ck", dlqPath = s"$base/dlq",
+        publisher = None, kafkaSink = false, statsIntervalMs = 0)
+      r.awaitTermination()
+      r
+    }
+    try {
+      ps.flush()
+      val out = buf.toString("UTF-8")
+      assert(out.contains("log-app-"), "no templated log topic in console output")
+      assert(out.contains("|metric"), "no value-metric topic in console output")
+      // 1000 rows, 'error' unrouted => 800 rows printed, each with its
+      // whole payload: a cell that runs to its closing brace, never a
+      // truncated "..." cell, and no "only showing top" cut
+      assert("""\{"origin":"ev-[^|]*\}""".r.findAllIn(out).size === 800)
+      assert(!out.contains("only showing top"))
+      eventually(running.stats.consume.get() === 1000)
+      assert(running.stats.forwarded.get() === 800)
+      assert(running.stats.publish.get() === 0)
+    } finally running.shutdown()
     assert(!running.query.isActive)
   }
 

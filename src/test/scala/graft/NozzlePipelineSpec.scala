@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{NozzlePipeline, Stats}
@@ -96,8 +96,14 @@ class NozzlePipelineSpec extends AnyFunSuite {
     spark.streams.addListener(listener)
     try {
       val routed = NozzlePipeline.build(NozzlePipeline.source(spark, srcDir), cfg)
-      val q = NozzlePipeline.startMemory(routed, "nozzle_t1", tmp("nozzle-ckpt"))
+      val q = routed.writeStream.format("memory").queryName("nozzle_t1")
+        .option("checkpointLocation", tmp("nozzle-ckpt"))
+        .trigger(Trigger.AvailableNow())
+        .start()
       q.awaitTermination()
+      // the pipeline is stateless: no state-store operator in any batch
+      assert(q.recentProgress.nonEmpty)
+      assert(q.recentProgress.forall(_.stateOperators.isEmpty))
 
       val batch = Tables.events(spark, sf)
       val total = batch.count()

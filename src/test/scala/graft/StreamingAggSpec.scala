@@ -3,13 +3,13 @@ package graft
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.NozzlePipeline
 
-/** Event-time streaming forms: watermarked 1 s windows (O13) and
-  * watermark-bounded streaming dedup. */
+/** Sketch aggregates as streaming state: their buffers cross
+  * micro-batches in the state store (RocksDB included). */
 class StreamingAggSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
@@ -20,91 +20,7 @@ class StreamingAggSpec extends AnyFunSuite {
     Files.copy(Paths.get(s"$sf/events.parquet"), Paths.get(s"$dir/$name"),
       StandardCopyOption.REPLACE_EXISTING)
 
-  test("watermarked 1s windows emit closed windows with exact counts") {
-    val srcDir = tmp("wagg-src")
-    stage(srcDir, "part-0.parquet")
-    stage(srcDir, "part-1.parquet") // second batch advances the watermark
-    val windows = NozzlePipeline.perSecondWindows(
-      NozzlePipeline.source(spark, srcDir))
-    val q = windows.writeStream
-      .format("memory").queryName("wagg")
-      .option("checkpointLocation", tmp("wagg-ckpt"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    val emitted = spark.table("wagg")
-    assert(emitted.count() > 0, "no windows closed — watermark never advanced")
-    // every closed window's count matches the batch count over the
-    // doubled dataset (both staged files aggregate into the windows;
-    // AvailableNow's final no-data batch advances the watermark and
-    // closes them)
-    val one = Tables.events(spark, sf)
-    val batch = one.union(one)
-      .groupBy(window(col("ts"), "1 second"))
-      .agg(count(lit(1)).as("expect"))
-      .select(col("window.start").as("w"), col("expect"))
-    val joined = emitted.join(batch, "w")
-    assert(joined.count() === emitted.count(), "emitted window missing from batch")
-    assert(joined.filter(col("per_sec") =!= col("expect")).count() === 0)
-  }
-
-  test("streaming session windows close via watermark and match batch sessions") {
-    import org.apache.spark.sql.functions.session_window
-    val srcDir = tmp("sess-src")
-    stage(srcDir, "part-0.parquet")
-    stage(srcDir, "part-1.parquet")
-    val q = NozzlePipeline.sessionWindows(NozzlePipeline.source(spark, srcDir))
-      .writeStream
-      .format("memory").queryName("sess")
-      .option("checkpointLocation", tmp("sess-ckpt"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val emitted = spark.table("sess")
-    assert(emitted.count() > 0, "no sessions closed — watermark never advanced")
-    val one = Tables.events(spark, sf)
-    val batch = one.union(one)
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-      .agg(count(lit(1)).as("expect"))
-      .select(col("user_id"), col("w.start").as("session_start"), col("expect"))
-    val joined = emitted.join(batch, Seq("user_id", "session_start"))
-    assert(joined.count() === emitted.count(), "emitted session missing from batch")
-    assert(joined.filter(col("n_events") =!= col("expect")).count() === 0)
-  }
-
-  test("mapGroupsWithState keeps per-user running totals across batches") {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger => T}
-    val srcDir = tmp("mgws-src")
-    stage(srcDir, "part-0.parquet")
-    stage(srcDir, "part-1.parquet") // second batch doubles every user's stream
-    // maxFilesPerTrigger=1 in source => one file per micro-batch
-    val totals = NozzlePipeline.userRunningTotals(
-      NozzlePipeline.source(spark, srcDir))
-      .toDF("user_id", "n_events", "value_sum")
-    val q = totals.writeStream
-      .format("memory").queryName("mgws")
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", tmp("mgws-ckpt"))
-      .trigger(T.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // in Update mode each batch emits the then-current running total;
-    // the max per user equals the full doubled-stream aggregate
-    val last = spark.table("mgws")
-      .groupBy("user_id").agg(max("n_events").as("n_events"))
-    val expect = Tables.events(spark, sf)
-      .groupBy("user_id").agg((count(lit(1)) * 2).as("expect"))
-    assert(last.join(expect, "user_id")
-      .filter(col("n_events") =!= col("expect")).count() === 0)
-    // state persisted ACROSS batches: some emission shows an
-    // accumulated (2-batch) total, which a stateless count could not
-    assert(spark.table("mgws").groupBy("user_id").count()
-      .filter(col("count") >= 2).count() > 0)
-  }
-
   test("misra_gries sketch aggregates across micro-batches (streaming sketch)") {
-    import org.apache.spark.sql.streaming.OutputMode
     // the heavy-hitter sketch is a TypedImperativeAggregate: its
     // buffer must survive the streaming state store across batches,
     // and the final candidate set must keep the deterministic
@@ -135,33 +51,42 @@ class StreamingAggSpec extends AnyFunSuite {
       s"streamed sketch lost a guaranteed heavy hitter: $heavy vs $last")
   }
 
+  private val cmsKey = conv(substring(md5(col("event_type")), 1, 15), 16, 10).cast("long")
+
+  /** A one-group streaming cms_agg over two staged batches, Complete
+    * mode: the sketch buffer lives in the state store between them. */
+  private def cmsStream(name: String): StreamingQuery = {
+    val srcDir = tmp(s"$name-src")
+    stage(srcDir, "part-0.parquet")
+    stage(srcDir, "part-1.parquet")
+    val q = NozzlePipeline.source(spark, srcDir)
+      .select(cmsKey.as("h"))
+      .groupBy()
+      .agg(graft.Functions.cms_agg(col("h"), 4, 64).as("c"))
+      .writeStream
+      .format("memory").queryName(name)
+      .outputMode(OutputMode.Complete())
+      .option("checkpointLocation", tmp(s"$name-ckpt"))
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    q
+  }
+
+  private def batchCms: Seq[Long] =
+    Tables.events(spark, sf).union(Tables.events(spark, sf))
+      .select(cmsKey.as("h"))
+      .agg(graft.Functions.cms_agg(col("h"), 4, 64).as("c"))
+      .collect()(0).getSeq[Long](0)
+
   test("cms_agg counters stream across micro-batches bit-identical to batch") {
-    import org.apache.spark.sql.streaming.OutputMode
     // CMS is fully deterministic and mergeable (elementwise add), so
     // the streamed sketch over two staged batches must equal the
     // batch sketch over the doubled stream EXACTLY — stronger than
     // Misra-Gries's superset guarantee
-    val srcDir = tmp("cms-src")
-    stage(srcDir, "part-0.parquet")
-    stage(srcDir, "part-1.parquet")
-    val h = conv(substring(md5(col("event_type")), 1, 15), 16, 10).cast("long")
-    val q = NozzlePipeline.source(spark, srcDir)
-      .select(h.as("h"))
-      .groupBy()
-      .agg(graft.Functions.cms_agg(col("h"), 4, 64).as("c"))
-      .writeStream
-      .format("memory").queryName("cms_stream")
-      .outputMode(OutputMode.Complete())
-      .option("checkpointLocation", tmp("cms-ckpt"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    cmsStream("cms_stream")
     val streamed = spark.table("cms_stream").collect().last.getSeq[Long](0)
-    val batch = Tables.events(spark, sf).union(Tables.events(spark, sf))
-      .select(h.as("h"))
-      .agg(graft.Functions.cms_agg(col("h"), 4, 64).as("c"))
-      .collect()(0).getSeq[Long](0)
-    assert(streamed == batch, "streamed CMS diverged from the batch sketch")
+    assert(streamed == batchCms, "streamed CMS diverged from the batch sketch")
   }
 
   test("stateful queries run on the RocksDB state store provider") {
@@ -169,38 +94,14 @@ class StreamingAggSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val srcDir = tmp("rocks-src")
-      stage(srcDir, "part-0.parquet")
-      stage(srcDir, "part-1.parquet")
-      val q = NozzlePipeline.dedupStream(NozzlePipeline.source(spark, srcDir))
-        .writeStream
-        .format("memory").queryName("rocks_dedup")
-        .option("checkpointLocation", tmp("rocks-ckpt"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val distinctIds = Tables.events(spark, sf).select("event_id").distinct().count()
-      assert(spark.table("rocks_dedup").count() === distinctIds)
+      val q = cmsStream("rocks_cms")
+      val streamed = spark.table("rocks_cms").collect().last.getSeq[Long](0)
+      assert(streamed == batchCms, "RocksDB-backed CMS diverged from the batch sketch")
       assert(q.lastProgress.stateOperators.head
         .customMetrics.containsKey("rocksdbGetCount"))
     } finally prev match {
       case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
       case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
-  }
-
-  test("streaming dedup drops duplicate event_ids across batches") {
-    val srcDir = tmp("dedup-src")
-    stage(srcDir, "part-0.parquet")
-    stage(srcDir, "part-1.parquet") // exact duplicate of every event
-    val q = NozzlePipeline.dedupStream(NozzlePipeline.source(spark, srcDir))
-      .writeStream
-      .format("memory").queryName("sdedup")
-      .option("checkpointLocation", tmp("dedup-ckpt"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val distinctIds = Tables.events(spark, sf).select("event_id").distinct().count()
-    assert(spark.table("sdedup").count() === distinctIds)
   }
 }

@@ -65,6 +65,10 @@ class TransformWithStateSpec extends AnyFunSuite {
       assert(finalRows.count() === expect.count(), "user set mismatch")
       assert(finalRows.exceptAll(expect).isEmpty && expect.exceptAll(finalRows).isEmpty,
         "cross-batch profile diverged from the batch aggregate")
+      // state persisted ACROSS batches: some user was emitted by two or
+      // more batches, each carrying its then-accumulated total
+      assert(spark.table("tws").groupBy("user_id").count()
+        .filter(col("count") >= 2).count() > 0)
     } finally {
       prev match {
         case Some(v) => spark.conf.set(providerKey, v)
