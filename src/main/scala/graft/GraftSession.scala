@@ -15,7 +15,12 @@ import org.apache.spark.sql.SparkSession
   *    column in the testdata) load as raw ns-since-epoch longs — we then
   *    derive micro-precision timestamps explicitly where windowing needs
   *    them (see [[Tables.events]]);
-  *  - UTC session time zone for oracle parity.
+  *  - UTC session time zone for oracle parity;
+  *  - streaming checkpoint metadata logs (offsets, commits, file-source
+  *    logs) written through Spark's `FileSystemBasedCheckpointFileManager`
+  *    instead of the `FileContext`-based default, which on a Hadoop
+  *    build without native IO forks a `readlink` per link probe during
+  *    each rename (set in [[apply]]).
   */
 object GraftSession {
 
@@ -58,6 +63,11 @@ object GraftSession {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // The FileContext default forks readlink per rename probe without
+    // native Hadoop IO; this one renames in-process. Its no-overwrite
+    // check is an exists() probe, not an atomic rename.
+    spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
     install(spark)
   }
 

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -136,22 +135,14 @@ case class PqAdc(first: Expression, second: Expression, third: Expression,
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("pqAdc", this, classOf[PqAdc].getName)
-    val q = first.genCode(ctx)
-    val c = second.genCode(ctx)
-    val z = third.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${q.code}
-        ${c.code}
-        ${z.code}
-        boolean ${ev.isNull} = true;
-        double ${ev.value} = 0.0;
-        if (!${q.isNull} && !${c.isNull} && !${z.isNull}) {
-          Object tmp = $ref.compute(${q.value}, ${c.value}, ${z.value});
-          if (tmp != null) {
-            ${ev.isNull} = false;
-            ${ev.value} = ((java.lang.Double) tmp).doubleValue();
-          }
+    val tmp = ctx.freshName("adc")
+    nullSafeCodeGen(ctx, ev, (q, c, z) =>
+      s"""
+        Object $tmp = $ref.compute($q, $c, $z);
+        if ($tmp == null) {
+          ${ev.isNull} = true;
+        } else {
+          ${ev.value} = ((java.lang.Double) $tmp).doubleValue();
         }""")
   }
 

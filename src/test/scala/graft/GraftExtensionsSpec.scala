@@ -1,8 +1,13 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
+
+import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.graftshim.Shims
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * sessions from `newSession()`, which temp-function registration
   * does not survive. `GraftSession.apply`, the driver-code path, must
   * install the same surface on a plain session, once however often it
-  * is called. */
+  * is called, and route streaming checkpoint logs through the
+  * FileSystem-based checkpoint manager. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
   test("extension-built session resolves graft functions without register()") {
@@ -87,5 +93,29 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val rows = Shims.ofRows(s, plan)
       .select("lid", "rid").collect().map(x => (x.getLong(0), x.getLong(1))).toSet
     assert(rows === Set((100L, 900L), (101L, 901L)))
+  }
+
+  test("GraftSession.apply selects the FileSystem-based checkpoint manager, which refuses a second writer") {
+    val spark = SparkTestSession.spark
+    val tmp = Files.createTempDirectory("graft-ckpt-mgr")
+    try {
+      val fm = CheckpointFileManager.create(
+        new Path(tmp.toString), spark.sessionState.newHadoopConf())
+      assert(fm.isInstanceOf[FileSystemBasedCheckpointFileManager],
+        s"got ${fm.getClass.getName}")
+      // HDFSMetadataLog detects a concurrent writer through this
+      // contract: a no-overwrite publish onto an existing batch file
+      // fails on close() and leaves the first writer's bytes
+      val p = new Path(tmp.toString, "0")
+      val first = fm.createAtomic(p, overwriteIfPossible = false)
+      first.write("first".getBytes(UTF_8))
+      first.close()
+      val second = fm.createAtomic(p, overwriteIfPossible = false)
+      second.write("second".getBytes(UTF_8))
+      intercept[FileAlreadyExistsException](second.close())
+      assert(new String(Files.readAllBytes(tmp.resolve("0")), UTF_8) === "first")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    }
   }
 }

@@ -20,6 +20,8 @@ class PlanAuditSpec extends AnyFunSuite {
       : Seq[org.apache.spark.sql.execution.SparkPlan] = sp match {
     case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
       walk(a.executedPlan)
+    // an executed adaptive plan keeps its stages' subtrees behind leaves
+    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => walk(q.plan)
     case other => other +: other.children.flatMap(walk)
   }
 
@@ -926,6 +928,49 @@ class PlanAuditSpec extends AnyFunSuite {
     }
     assert(plan("q49_qann").contains("TakeOrderedAndProject"),
       "q49 quantized ranking must not global-sort")
+  }
+
+  test("similarity scan filters run native any_null, never the interpreted exists( HOF") {
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec,
+      FilterExec, InputAdapter, QueryExecution, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def scan(sp: SparkPlan): Boolean = sp match {
+      case _: FileSourceScanExec => true
+      case c: ColumnarToRowExec => scan(c.child)
+      case i: InputAdapter => scan(i.child)
+      // a filter that cannot join whole-stage codegen (an interpreted
+      // HOF) sits above its scan's codegen stage
+      case w: WholeStageCodegenExec => scan(w.child)
+      case _ => false
+    }
+    // most corpus scans sit under a Barrier, whose localCheckpoint is
+    // an action of its own: its plan reaches a listener, not the
+    // query's final plan
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = actions.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val conditions = try {
+      graft.queries.SimilarityQueries.queries.toSeq.sortBy(_._1).map { case (q, f) =>
+        val df = f(spark, sf)
+        org.apache.spark.sql.graftshim.ListenerBus.drain(spark)
+        val plans = df.queryExecution.executedPlan +: Iterator
+          .continually(actions.poll()).takeWhile(_ != null).toSeq
+        q -> plans.flatMap(walk).collect {
+          case fl: FilterExec if scan(fl.child) => fl.condition.toString
+        }
+      }.toMap
+    } finally spark.listenerManager.unregister(listener)
+    conditions.foreach { case (q, cs) =>
+      cs.foreach(c => assert(!c.contains("exists("), s"$q scan filter runs an interpreted HOF: $c"))
+    }
+    // the pin sees the barrier'd and the direct corpus scans alike
+    Seq("q49_qann", "q69_pqann", "q70_ivfpq").foreach { q =>
+      assert(conditions(q).exists(_.contains("any_null(")),
+        s"$q: no any_null scan filter seen in ${conditions(q)}")
+    }
   }
 
   test("q40 IVF probes ride broadcasts; the corpus is never shuffled") {
