@@ -10,9 +10,12 @@ import graft.streaming.NozzlePipeline.Publisher
 /** The engine's `CLI.Run` analogue (reference cli.go:73-376, traced in
   * SURVEY §3.1): load config, resolve flag > config > default
   * precedence, assemble source → detector → route → encode → sink as
-  * one streaming query, stand up the stats plane (listener + HTTP
-  * server + periodic reporter), run until stopped, and shut down
-  * gracefully (stop queries → checkpoints make the restart resume).
+  * one streaming query with one checkpoint (`$checkpointDir/main`),
+  * stand up the stats plane (listener + HTTP server + periodic
+  * reporter), run until stopped, and shut down gracefully (stop the
+  * query → its checkpoint makes the restart resume). The slow-consumer
+  * detector (O4) is a count in that query's `observe`, not a second
+  * read of the source.
   *
   * Assembly is exposed as [[NozzleApp]] so tests (and embedders) can
   * run the whole lifecycle against bounded sources with an in-process
@@ -25,25 +28,25 @@ object NozzleApp {
       spark: SparkSession,
       stats: Stats,
       query: StreamingQuery,
-      alerts: StreamingQuery,
       server: Option[StatsServer],
       reporter: Option[StatsReporter],
       listener: NozzlePipeline.Listener) {
 
-    /** O20: graceful shutdown — stop queries, close the stats plane.
-      * Checkpoints carry the resume point. */
+    /** The slow-consumer count now rides the main query's `observe`;
+      * this alias of [[query]] stays only until the benchmark, which
+      * reads its progress, moves off it. */
+    def alerts: StreamingQuery = query
+
+    /** O20: graceful shutdown — stop the query, close the stats plane.
+      * The checkpoint carries the resume point. */
     def shutdown(): Unit = {
       query.stop()
-      alerts.stop()
       reporter.foreach(_.stop())
       server.foreach(_.stop())
       spark.streams.removeListener(listener)
     }
 
-    def awaitTermination(): Unit = {
-      query.awaitTermination()
-      alerts.awaitTermination()
-    }
+    def awaitTermination(): Unit = query.awaitTermination()
   }
 
   /** Assemble and start the full pipeline.
@@ -93,17 +96,13 @@ object NozzleApp {
           NozzlePipeline.startConsole(routed, s"$checkpointDir/main")
       }
 
-    // O4 side-output: slow-consumer alerts over the same source
-    val alerts = NozzlePipeline.startAlerts(
-      NozzlePipeline.withEnvelope(source), s"$checkpointDir/alerts", stats)
-
     val server = statsPort.map(p => new StatsServer(stats, p).start())
     val reporter =
       if (statsIntervalMs > 0)
         Some(new StatsReporter(stats, statsIntervalMs, log).start())
       else None
 
-    Running(spark, stats, query, alerts, server, reporter, listener)
+    Running(spark, stats, query, server, reporter, listener)
   }
 }
 

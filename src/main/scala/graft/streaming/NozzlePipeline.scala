@@ -15,6 +15,7 @@ import graft.model.EnvelopeSchema
   * source(file replay of the firehose surrogate)            O1/O2
   *   → envelope assembly (tagged union, exactly one payload)
   *   → observe() consume + per-type counters                O12
+  *     + slow-consumer count (isTruncated)                  O4
   *   → route(eventType → topic, templating, drop rules)     O5/O6/O7
   *   → envelope_json canonical encoding                     O8
   *   → sink: console (O16, debug) or foreachBatch with
@@ -149,38 +150,13 @@ object NozzlePipeline {
   /** Slow-consumer detector predicate (O4) — go-nozzle
     * detector.go:116-124 `isTruncated`: a CounterEvent named
     * TruncatingBuffer.DroppedMessages from origin "doppler" means the
-    * firehose dropped messages because we read too slowly. */
+    * firehose dropped messages because we read too slowly. Counted as
+    * `slow_consumer_alert` in [[fromEnvelopes]]' observe: a pass-through
+    * stage of the one query, like the reference detector. */
   def isTruncatedExpr(env: Column): Column =
     env.getField("eventType") === 7 &&
       env.getField("counterEvent").getField("name") === "TruncatingBuffer.DroppedMessages" &&
       env.getField("origin") === "doppler"
-
-  /** Alert side-output (detector.go:36-102): a second lightweight query
-    * over the same source that filters the truncation signal and folds
-    * the count into `slow_consumer_alert`. The main pipeline is
-    * untouched — same pass-through shape as the reference detector. */
-  def startAlerts(envDf: DataFrame, checkpoint: String, stats: Stats): StreamingQuery =
-    envDf.filter(isTruncatedExpr(col("envelope")))
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        stats.slowConsumerAlert.addAndGet(batch.count())
-        ()
-      }
-      .start()
-
-  /** Source-side event-class filter (O3) — the noaa `filter-type`
-    * query param (filter.go:3-20): "logs" keeps LogMessage only,
-    * "metrics" keeps ValueMetric/CounterEvent/ContainerMetric, any
-    * other value keeps everything. Applied directly above the source
-    * so Catalyst can push the predicate into the scan. */
-  def filterType(envDf: DataFrame, kind: String): DataFrame = kind match {
-    case "logs" => envDf.filter(col("envelope").getField("eventType") === 5)
-    case "metrics" =>
-      envDf.filter(col("envelope").getField("eventType").isin(6, 7, 9))
-    case _ => envDf
-  }
 
   /** fmtTopic (kafka.go:183-188): template wins over fixed name;
     * neither configured → NULL → drop. The reference always applies
@@ -212,15 +188,16 @@ object NozzlePipeline {
       .otherwise(nullOf(StringType))
   }
 
-  /** Attach the envelope column (shared by build/alerts/filterType). */
+  /** Attach the envelope column to the surrogate source. */
   def withEnvelope(src: DataFrame): DataFrame =
     src.withColumn("envelope", envelopeColumn)
 
-  /** Full pipeline: envelope → observed counters → route → encode.
-    * Output: event_id, eventType, topic, payload (canonical JSON). */
-  def build(src: DataFrame, cfg: TopicConfig): DataFrame = {
-    val env = withEnvelope(src)
-    val routed = env
+  /** The pipeline from the envelope on: observed counters → route →
+    * encode, over a frame with `envelope` (EnvelopeSchema.schema) and
+    * `event_id` columns. Output: event_id, eventType, topic, payload
+    * (canonical JSON). */
+  def fromEnvelopes(envDf: DataFrame, cfg: TopicConfig): DataFrame = {
+    val routed = envDf
       .withColumn("topic", routeExpr(cfg, col("envelope")))
       .withColumn("eventType", col("envelope").getField("eventType"))
     routed
@@ -233,6 +210,7 @@ object NozzlePipeline {
         count(when(col("eventType") === 8, 1)).as("consume_error"),
         count(when(col("eventType") === 9, 1)).as("consume_container_metric"),
         count(when(col("eventType") === -1, 1)).as("consume_unknown"),
+        count_if(isTruncatedExpr(col("envelope"))).as("slow_consumer_alert"),
         // kafka.go:333-336: the topic=="" check runs AFTER the type
         // switch's default, so unknown-type events count as BOTH
         // ConsumeUnknown and Ignored (asserted by kafka_test.go:290).
@@ -242,6 +220,11 @@ object NozzlePipeline {
       .select(col("event_id"), col("eventType"), col("topic"),
         Functions.envelope_json(col("envelope")).as("payload"))
   }
+
+  /** Full pipeline over the surrogate source: envelope assembly, then
+    * [[fromEnvelopes]]. */
+  def build(src: DataFrame, cfg: TopicConfig): DataFrame =
+    fromEnvelopes(withEnvelope(src), cfg)
 
   /** Debug/console sink (O16): the reference's `-debug` LogProducer
     * (producer.go:51-63), which logs every event it is handed — so
@@ -338,6 +321,9 @@ object NozzlePipeline {
         stats.consumeError.addAndGet(g("consume_error"))
         stats.consumeContainerMetric.addAndGet(g("consume_container_metric"))
         stats.consumeUnknown.addAndGet(g("consume_unknown"))
+        stats.slowConsumerAlert.addAndGet(g("slow_consumer_alert"))
+        // forwarded last: a reader that waits for ignored + forwarded
+        // to reach the event total sees every other counter folded
         stats.ignored.addAndGet(g("ignored"))
         stats.forwarded.addAndGet(g("forwarded"))
         stats.tick()

@@ -4,6 +4,7 @@ import java.net.{HttpURLConnection, URI}
 import java.nio.file.Files
 import scala.io.Source
 
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config.GraftConfig
@@ -19,8 +20,8 @@ object CountingPublisher extends Publisher {
 }
 
 /** Full-lifecycle test of the CLI.Run analogue: config → firehose
-  * source → routed pipeline → DLQ sink + alerts + stats server +
-  * reporter → graceful shutdown. */
+  * source → routed pipeline (one query, slow-consumer count in its
+  * observe) → DLQ sink + stats server + reporter → graceful shutdown. */
 class NozzleAppSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -37,18 +38,36 @@ class NozzleAppSpec extends AnyFunSuite {
     assert(cond)
   }
 
+  private def checkpoints(base: String): Set[String] =
+    new java.io.File(s"$base/ck").list().toSet
+
   test("end-to-end lifecycle from config to shutdown") {
     val base = Files.createTempDirectory("nozzle-app").toString
     val source = spark.readStream.format("graft-firehose")
       .option("rowsPerBatch", 500).option("totalRows", 1000).load()
     val logLines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-    val running = NozzleApp.start(spark, cfg, source,
-      checkpointDir = s"$base/ck", dlqPath = s"$base/dlq",
-      publisher = Some(CountingPublisher),
-      statsPort = Some(0), statsIntervalMs = 200, log = logLines.add(_))
+    // onQueryStarted runs synchronously inside start(), so the count is
+    // complete as soon as NozzleApp.start returns
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val startListener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
+        started.incrementAndGet(); ()
+      }
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(startListener)
+    val running =
+      try NozzleApp.start(spark, cfg, source,
+        checkpointDir = s"$base/ck", dlqPath = s"$base/dlq",
+        publisher = Some(CountingPublisher),
+        statsPort = Some(0), statsIntervalMs = 200, log = logLines.add(_))
+      finally spark.streams.removeListener(startListener)
     try {
+      // one query, one checkpoint: the slow-consumer count rides its observe
+      assert(started.get() === 1)
       running.awaitTermination()
+      assert(checkpoints(base) === Set("main"))
       // 1000 generated rows cycle 5 types; 'error' unrouted => 800 published
       assert(CountingPublisher.n.get() === 800)
       assert(running.stats.publish.get() === 800)
@@ -63,6 +82,7 @@ class NozzleAppSpec extends AnyFunSuite {
       val body = Source.fromInputStream(conn.getInputStream, "UTF-8").mkString
       conn.disconnect()
       assert(body.contains("\"publish\":800"))
+      assert(body.contains("\"slow_consumer_alert\":0"))
       // periodic reporter ticked at least once
       eventually(logLines.size() >= 9)
     } finally running.shutdown()
@@ -86,6 +106,7 @@ class NozzleAppSpec extends AnyFunSuite {
       r
     }
     try {
+      assert(checkpoints(base) === Set("main"))
       ps.flush()
       val out = buf.toString("UTF-8")
       assert(out.contains("log-app-"), "no templated log topic in console output")
