@@ -74,8 +74,7 @@ object NozzleApp {
     val listener = new NozzlePipeline.Listener(stats)
     spark.streams.addListener(listener)
 
-    val routed = NozzlePipeline.build(source,
-      GraftConfig.toRouting(resolved.kafka.topic))
+    val routed = NozzlePipeline.build(source, resolved.kafka.topic)
 
     // main query: the real Kafka sink (non-debug production path — the
     // reference's NewKafkaProducer, which likewise fails fast on a bad

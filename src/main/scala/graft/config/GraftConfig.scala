@@ -21,6 +21,9 @@ case class CfConfig(
     idleTimeout: Int = 0, // seconds
     retryCount: Int = 0)
 
+/** Per-type topic routing table — the reference's `[kafka.topic]` TOML
+  * block (config.go:70-80), read as-is by the router. Empty string =
+  * not configured = drop with `Ignored` accounting (kafka.go:311-315). */
 case class TopicConfigT(
     logMessage: String = "",
     logMessageFmt: String = "",
@@ -193,13 +196,7 @@ object GraftConfig {
     case (sec, k, _) => Left(s"unknown key [$sec] $k")
   }
 
-  /** Bridge to the streaming router's per-type table. */
-  def toRouting(t: TopicConfigT): graft.streaming.NozzlePipeline.TopicConfig =
-    graft.streaming.NozzlePipeline.TopicConfig(
-      logMessage = t.logMessage, logMessageFmt = t.logMessageFmt,
-      valueMetric = t.valueMetric,
-      counterEvent = t.counterEvent,
-      containerMetric = t.containerMetric, containerMetricFmt = t.containerMetricFmt,
-      httpStartStop = t.httpStartStop, httpStartStopFmt = t.httpStartStopFmt,
-      error = t.error)
+  /** The identity: the router takes [[TopicConfigT]] itself. Kept only
+    * until a benchmark change moves off the name. */
+  def toRouting(t: TopicConfigT): TopicConfigT = t
 }

@@ -1,13 +1,14 @@
 package graft.functions
 
-import java.io.ByteArrayOutputStream
+import scala.annotation.switch
+import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -19,16 +20,13 @@ import graft.model.EnvelopeSchema
   * length-delimited) since no protobuf runtime ships with the Spark
   * distribution.
   *
-  * Field numbers and types follow the sonde-go generated structs:
-  *  - Envelope: origin=1 eventType=2 timestamp=6 httpStartStop=7
-  *    logMessage=8 valueMetric=9 counterEvent=10 error=11
-  *    containerMetric=12 deployment=13 job=14 index=15 ip=16 tags=17
-  *    (envelope.pb.go:98-117);
-  *  - LogMessage 1..6 (log.pb.go:56-64), ValueMetric 1..3 /
-  *    CounterEvent 1..3 / ContainerMetric 1..7 (metric.pb.go),
-  *    HttpStartStop 1..15 (http.pb.go:217-233), Error 1..3
-  *    (error.pb.go), UUID low=1 high=2 (uuid.pb.go:23-27);
-  *  - proto map<string,string> = repeated {key=1, value=2} messages.
+  * The wire layout is one table, [[EnvelopeProto.fieldNumbers]]: the
+  * sonde-go field number of every [[EnvelopeSchema]] field. Each
+  * field's wire type and conversion follow from its Catalyst type
+  * (Int/Long varint, Double fixed64, String/Binary/struct
+  * length-delimited, `array<string>` a repeated string field,
+  * `map<string,string>` repeated `{key=1, value=2}` entries), so one
+  * generic encoder and one generic decoder serve all eight messages.
   *
   * Decode skips unknown fields by wire type (forward compatible) and
   * returns NULL on any malformed frame — the reference's
@@ -95,127 +93,137 @@ case class EnvelopeProtoDecode(child: Expression) extends UnaryExpression {
 
 object EnvelopeProto {
 
+  /** The sonde-go field number of every field, one row per
+    * [[EnvelopeSchema]] struct, in that struct's field order. */
+  private val fieldNumbers: Map[StructType, Array[Int]] = Map(
+    // origin eventType timestamp deployment job index ip tags |
+    // httpStartStop logMessage valueMetric counterEvent error
+    // containerMetric (envelope.pb.go:98-117)
+    EnvelopeSchema.schema -> Array(1, 2, 6, 13, 14, 15, 16, 17, 7, 8, 9, 10, 11, 12),
+    // startTimestamp stopTimestamp requestId peerType method uri
+    // remoteAddress userAgent statusCode contentLength applicationId
+    // instanceIndex instanceId forwarded (http.pb.go:217-233; 11 unused)
+    EnvelopeSchema.httpStartStop -> Array(1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 12, 13, 14, 15),
+    // low high (uuid.pb.go:23-27)
+    EnvelopeSchema.uuid -> Array(1, 2),
+    // message message_type timestamp app_id source_type source_instance
+    // (log.pb.go:56-64)
+    EnvelopeSchema.logMessage -> Array(1, 2, 3, 4, 5, 6),
+    // name value unit (metric.pb.go)
+    EnvelopeSchema.valueMetric -> Array(1, 2, 3),
+    // name delta total (metric.pb.go)
+    EnvelopeSchema.counterEvent -> Array(1, 2, 3),
+    // source code message (error.pb.go)
+    EnvelopeSchema.error -> Array(1, 2, 3),
+    // applicationId instanceIndex cpuPercentage memoryBytes diskBytes
+    // memoryBytesQuota diskBytesQuota (metric.pb.go)
+    EnvelopeSchema.containerMetric -> Array(1, 2, 3, 4, 5, 6, 7))
+
+  // Field kinds, one per Catalyst type: Strings = array<string>,
+  // Tags = map<string,string>.
+  private final val IntK = 0; private final val LongK = 1
+  private final val DoubleK = 2; private final val StringK = 3
+  private final val BinaryK = 4; private final val StructK = 5
+  private final val StringsK = 6; private final val TagsK = 7
+  /** Wire type by kind: varint 0, fixed64 1, length-delimited 2. */
+  private val wireTypeOf = Array(0, 0, 1, 2, 2, 2, 2, 2)
+  /** proto map entry fields. */
+  private final val EntryKey = 1; private final val EntryValue = 2
+
+  private def kindOf(dt: DataType): Int = dt match {
+    case IntegerType => IntK
+    case LongType => LongK
+    case DoubleType => DoubleK
+    case StringType => StringK
+    case BinaryType => BinaryK
+    case _: StructType => StructK
+    case ArrayType(StringType, _) => StringsK
+    case MapType(StringType, StringType, _) => TagsK
+    case other => throw new IllegalArgumentException(s"no wire kind for $other")
+  }
+
+  /** One message's dispatch, precomputed from its schema and its
+    * [[fieldNumbers]] row: per row index the field number, kind and
+    * nested layout; the row indices in ascending field-number order
+    * (the encode order); and field number → row index (-1 unknown). */
+  private final class Layout(schema: StructType) {
+    val number: Array[Int] = fieldNumbers(schema)
+    val size: Int = schema.length
+    require(number.length == size,
+      s"${number.length} field numbers for the ${size}-field ${schema.simpleString}")
+    require(number.distinct.length == size, s"duplicate field number in ${schema.simpleString}")
+    val kind: Array[Int] = schema.fields.map(f => kindOf(f.dataType))
+    val child: Array[Layout] = schema.fields.map(_.dataType match {
+      case s: StructType => new Layout(s)
+      case _ => null
+    })
+    val order: Array[Int] = number.indices.sortBy(number(_)).toArray
+    val slot: Array[Int] = Array.tabulate(number.max + 1)(number.indexOf(_))
+    /** Nesting levels, counting a tag entry as one. */
+    val depth: Int = 1 + (child.filter(_ != null).map(_.depth) ++
+      kind.filter(_ == TagsK).map(_ => 1)).maxOption.getOrElse(0)
+  }
+
+  private val envelope = new Layout(EnvelopeSchema.schema)
+
   // ---------------------------------------------------------------- encode
 
-  def encode(env: InternalRow): Array[Byte] = {
-    val out = new ByteArrayOutputStream(128)
-    if (!env.isNullAt(0)) writeStr(out, 1, env.getUTF8String(0))
-    if (!env.isNullAt(1)) writeVarintField(out, 2, env.getInt(1).toLong)
-    if (!env.isNullAt(2)) writeVarintField(out, 6, env.getLong(2))
-    if (!env.isNullAt(8)) writeMsg(out, 7, encodeHttpStartStop(env.getStruct(8, 14)))
-    if (!env.isNullAt(9)) writeMsg(out, 8, encodeLogMessage(env.getStruct(9, 6)))
-    if (!env.isNullAt(10)) writeMsg(out, 9, encodeValueMetric(env.getStruct(10, 3)))
-    if (!env.isNullAt(11)) writeMsg(out, 10, encodeCounterEvent(env.getStruct(11, 3)))
-    if (!env.isNullAt(12)) writeMsg(out, 11, encodeError(env.getStruct(12, 3)))
-    if (!env.isNullAt(13)) writeMsg(out, 12, encodeContainerMetric(env.getStruct(13, 7)))
-    if (!env.isNullAt(3)) writeStr(out, 13, env.getUTF8String(3))
-    if (!env.isNullAt(4)) writeStr(out, 14, env.getUTF8String(4))
-    if (!env.isNullAt(5)) writeStr(out, 15, env.getUTF8String(5))
-    if (!env.isNullAt(6)) writeStr(out, 16, env.getUTF8String(6))
-    if (!env.isNullAt(7)) writeTags(out, 17, env.getMap(7))
-    out.toByteArray
-  }
+  // Per task thread, one unlocked buffer per nesting depth (envelope,
+  // payload or tag entry, UUID): a nested message is built one level
+  // down, then copied in behind its length. reset() keeps capacity.
+  private val buffers = ThreadLocal.withInitial[Array[EnvelopeJsonWriter.Buffer]](
+    () => Array.fill(envelope.depth)(new EnvelopeJsonWriter.Buffer))
 
-  private def encodeLogMessage(r: InternalRow): Array[Byte] = {
-    val out = new ByteArrayOutputStream(64)
-    if (!r.isNullAt(0)) writeBytes(out, 1, r.getBinary(0))
-    if (!r.isNullAt(1)) writeVarintField(out, 2, r.getInt(1).toLong)
-    if (!r.isNullAt(2)) writeVarintField(out, 3, r.getLong(2))
-    if (!r.isNullAt(3)) writeStr(out, 4, r.getUTF8String(3))
-    if (!r.isNullAt(4)) writeStr(out, 5, r.getUTF8String(4))
-    if (!r.isNullAt(5)) writeStr(out, 6, r.getUTF8String(5))
-    out.toByteArray
-  }
+  def encode(env: InternalRow): Array[Byte] = encodeMessage(envelope, env, buffers.get(), 0)
 
-  private def encodeValueMetric(r: InternalRow): Array[Byte] = {
-    val out = new ByteArrayOutputStream(32)
-    if (!r.isNullAt(0)) writeStr(out, 1, r.getUTF8String(0))
-    if (!r.isNullAt(1)) writeFixed64(out, 2, java.lang.Double.doubleToLongBits(r.getDouble(1)))
-    if (!r.isNullAt(2)) writeStr(out, 3, r.getUTF8String(2))
-    out.toByteArray
-  }
-
-  private def encodeCounterEvent(r: InternalRow): Array[Byte] = {
-    val out = new ByteArrayOutputStream(32)
-    if (!r.isNullAt(0)) writeStr(out, 1, r.getUTF8String(0))
-    if (!r.isNullAt(1)) writeVarintField(out, 2, r.getLong(1))
-    if (!r.isNullAt(2)) writeVarintField(out, 3, r.getLong(2))
-    out.toByteArray
-  }
-
-  private def encodeContainerMetric(r: InternalRow): Array[Byte] = {
-    val out = new ByteArrayOutputStream(48)
-    if (!r.isNullAt(0)) writeStr(out, 1, r.getUTF8String(0))
-    if (!r.isNullAt(1)) writeVarintField(out, 2, r.getInt(1).toLong)
-    if (!r.isNullAt(2)) writeFixed64(out, 3, java.lang.Double.doubleToLongBits(r.getDouble(2)))
-    if (!r.isNullAt(3)) writeVarintField(out, 4, r.getLong(3))
-    if (!r.isNullAt(4)) writeVarintField(out, 5, r.getLong(4))
-    if (!r.isNullAt(5)) writeVarintField(out, 6, r.getLong(5))
-    if (!r.isNullAt(6)) writeVarintField(out, 7, r.getLong(6))
-    out.toByteArray
-  }
-
-  private def encodeError(r: InternalRow): Array[Byte] = {
-    val out = new ByteArrayOutputStream(32)
-    if (!r.isNullAt(0)) writeStr(out, 1, r.getUTF8String(0))
-    if (!r.isNullAt(1)) writeVarintField(out, 2, r.getInt(1).toLong)
-    if (!r.isNullAt(2)) writeStr(out, 3, r.getUTF8String(2))
-    out.toByteArray
-  }
-
-  private def encodeUuid(r: InternalRow): Array[Byte] = {
-    val out = new ByteArrayOutputStream(24)
-    if (!r.isNullAt(0)) writeVarintField(out, 1, r.getLong(0))
-    if (!r.isNullAt(1)) writeVarintField(out, 2, r.getLong(1))
-    out.toByteArray
-  }
-
-  private def encodeHttpStartStop(r: InternalRow): Array[Byte] = {
-    val out = new ByteArrayOutputStream(96)
-    if (!r.isNullAt(0)) writeVarintField(out, 1, r.getLong(0))
-    if (!r.isNullAt(1)) writeVarintField(out, 2, r.getLong(1))
-    if (!r.isNullAt(2)) writeMsg(out, 3, encodeUuid(r.getStruct(2, 2)))
-    if (!r.isNullAt(3)) writeVarintField(out, 4, r.getInt(3).toLong)
-    if (!r.isNullAt(4)) writeVarintField(out, 5, r.getInt(4).toLong)
-    if (!r.isNullAt(5)) writeStr(out, 6, r.getUTF8String(5))
-    if (!r.isNullAt(6)) writeStr(out, 7, r.getUTF8String(6))
-    if (!r.isNullAt(7)) writeStr(out, 8, r.getUTF8String(7))
-    if (!r.isNullAt(8)) writeVarintField(out, 9, r.getInt(8).toLong)
-    if (!r.isNullAt(9)) writeVarintField(out, 10, r.getLong(9))
-    if (!r.isNullAt(10)) writeMsg(out, 12, encodeUuid(r.getStruct(10, 2)))
-    if (!r.isNullAt(11)) writeVarintField(out, 13, r.getInt(11).toLong)
-    if (!r.isNullAt(12)) writeStr(out, 14, r.getUTF8String(12))
-    if (!r.isNullAt(13)) {
-      val a = r.getArray(13)
-      var i = 0
-      while (i < a.numElements()) {
-        writeStr(out, 15, a.getUTF8String(i))
-        i += 1
+  /** Non-NULL fields in ascending field-number order; NULL ones are
+    * omitted, present empty strings are written. */
+  private def encodeMessage(m: Layout, r: InternalRow,
+      bufs: Array[EnvelopeJsonWriter.Buffer], depth: Int): Array[Byte] = {
+    val out = bufs(depth)
+    out.reset()
+    var j = 0
+    while (j < m.order.length) {
+      val i = m.order(j)
+      val f = m.number(i)
+      if (!r.isNullAt(i)) (m.kind(i): @switch) match {
+        case IntK => writeTag(out, f, 0); writeVarint(out, r.getInt(i).toLong)
+        case LongK => writeTag(out, f, 0); writeVarint(out, r.getLong(i))
+        case DoubleK =>
+          writeTag(out, f, 1)
+          val bits = java.lang.Double.doubleToLongBits(r.getDouble(i))
+          var b = 0
+          while (b < 8) { out.write((bits >>> (8 * b)).toInt); b += 1 } // little-endian
+        case StringK => writeBytes(out, f, r.getUTF8String(i).getBytes)
+        case BinaryK => writeBytes(out, f, r.getBinary(i))
+        case StructK =>
+          val c = m.child(i)
+          writeBytes(out, f, encodeMessage(c, r.getStruct(i, c.size), bufs, depth + 1))
+        case StringsK =>
+          val a = r.getArray(i)
+          var k = 0
+          while (k < a.numElements()) { writeBytes(out, f, a.getUTF8String(k).getBytes); k += 1 }
+        case TagsK => // one entry message per pair, both sides always written
+          val tags = r.getMap(i)
+          val (ks, vs, entry) = (tags.keyArray(), tags.valueArray(), bufs(depth + 1))
+          var k = 0
+          while (k < tags.numElements()) {
+            entry.reset()
+            writeBytes(entry, EntryKey, ks.getUTF8String(k).getBytes)
+            writeBytes(entry, EntryValue, vs.getUTF8String(k).getBytes)
+            writeBytes(out, f, entry.toByteArray)
+            k += 1
+          }
       }
+      j += 1
     }
     out.toByteArray
   }
 
-  private def writeTags(out: ByteArrayOutputStream, field: Int, m: MapData): Unit = {
-    val ks = m.keyArray(); val vs = m.valueArray()
-    var i = 0
-    while (i < m.numElements()) {
-      val entry = new ByteArrayOutputStream(32)
-      writeStr(entry, 1, ks.getUTF8String(i))
-      writeStr(entry, 2, vs.getUTF8String(i))
-      writeMsg(out, field, entry.toByteArray)
-      i += 1
-    }
-  }
-
-  private def writeTag(out: ByteArrayOutputStream, field: Int, wireType: Int): Unit =
+  private def writeTag(out: EnvelopeJsonWriter.Buffer, field: Int, wireType: Int): Unit =
     writeVarint(out, ((field << 3) | wireType).toLong)
 
-  private def writeVarintField(out: ByteArrayOutputStream, field: Int, v: Long): Unit = {
-    writeTag(out, field, 0); writeVarint(out, v)
-  }
-
-  private def writeVarint(out: ByteArrayOutputStream, value: Long): Unit = {
+  private def writeVarint(out: EnvelopeJsonWriter.Buffer, value: Long): Unit = {
     var v = value
     while ((v & ~0x7fL) != 0L) {
       out.write(((v & 0x7f) | 0x80).toInt)
@@ -224,24 +232,12 @@ object EnvelopeProto {
     out.write(v.toInt)
   }
 
-  private def writeFixed64(out: ByteArrayOutputStream, field: Int, bits: Long): Unit = {
-    writeTag(out, field, 1)
-    var i = 0
-    while (i < 8) { out.write(((bits >>> (8 * i)) & 0xff).toInt); i += 1 }
-  }
-
-  private def writeStr(out: ByteArrayOutputStream, field: Int, s: UTF8String): Unit =
-    writeBytes(out, field, s.getBytes)
-
-  private def writeBytes(out: ByteArrayOutputStream, field: Int, b: Array[Byte]): Unit = {
+  /** Length-delimited: strings, bytes and nested messages alike. */
+  private def writeBytes(out: EnvelopeJsonWriter.Buffer, field: Int, b: Array[Byte]): Unit = {
     writeTag(out, field, 2)
     writeVarint(out, b.length.toLong)
-    out.write(b, 0, b.length)
+    out.write(b)
   }
-
-  /** A nested message is just its encoded bytes, length-delimited. */
-  private def writeMsg(out: ByteArrayOutputStream, field: Int, b: Array[Byte]): Unit =
-    writeBytes(out, field, b)
 
   // ---------------------------------------------------------------- decode
 
@@ -297,189 +293,72 @@ object EnvelopeProto {
   }
 
   def decodeOrNull(frame: Array[Byte]): InternalRow =
-    try decodeEnvelope(new Reader(frame, 0, frame.length))
+    try decodeMessage(envelope, new Reader(frame, 0, frame.length))
     catch { case scala.util.control.NonFatal(_) => null }
 
-  // Known fields validate their declared wire type (2 = length-delimited,
-  // 0 = varint, 1 = fixed64) so a field sent with the wrong encoding fails
-  // the frame → NULL, matching proto.Unmarshal's rejection rather than
-  // decoding garbage. Unknown fields still skip by wire type.
-  private def vint(r: Reader, wt: Int): Long = { if (wt != 0) fail(); r.varint() }
-  private def f64(r: Reader, wt: Int): Long = { if (wt != 1) fail(); r.fixed64() }
-  private def bin(r: Reader, wt: Int): Array[Byte] = { if (wt != 2) fail(); r.bytes() }
-  private def sub(r: Reader, wt: Int): Reader = { if (wt != 2) fail(); r.sub() }
-  private def str(r: Reader, wt: Int): UTF8String =
-    UTF8String.fromBytes(bin(r, wt))
-
-  private def decodeEnvelope(r: Reader): InternalRow = {
-    val row = new GenericInternalRow(14)
-    var tagKeys: List[UTF8String] = Nil
-    var tagVals: List[UTF8String] = Nil
+  /** A known field must arrive with its kind's wire type, or the frame
+    * fails → NULL (proto.Unmarshal's rejection, not decoded garbage);
+    * unknown fields skip by wire type. A repeated singular field
+    * overwrites (last one wins); repeated `forwarded` / `tags` keep wire
+    * order and are set only when non-empty. */
+  private def decodeMessage(m: Layout, r: Reader): InternalRow = {
+    val row = new GenericInternalRow(m.size)
+    var repeated: Array[ArrayBuffer[Any]] = null // per row index, lazily
     while (r.hasMore) {
       val tag = r.varint()
       val field = (tag >>> 3).toInt
       val wt = (tag & 7).toInt
-      field match {
-        case 1 => row.update(0, str(r, wt))
-        case 2 => row.update(1, vint(r, wt).toInt)
-        case 6 => row.update(2, vint(r, wt))
-        case 7 => row.update(8, decodeHttpStartStop(sub(r, wt)))
-        case 8 => row.update(9, decodeLogMessage(sub(r, wt)))
-        case 9 => row.update(10, decodeValueMetric(sub(r, wt)))
-        case 10 => row.update(11, decodeCounterEvent(sub(r, wt)))
-        case 11 => row.update(12, decodeError(sub(r, wt)))
-        case 12 => row.update(13, decodeContainerMetric(sub(r, wt)))
-        case 13 => row.update(3, str(r, wt))
-        case 14 => row.update(4, str(r, wt))
-        case 15 => row.update(5, str(r, wt))
-        case 16 => row.update(6, str(r, wt))
-        case 17 =>
-          val e = sub(r, wt)
-          // Go proto yields the zero value "" for absent map-entry fields:
-          // an entry missing key or value still materializes with "".
-          var k: UTF8String = UTF8String.EMPTY_UTF8
-          var v: UTF8String = UTF8String.EMPTY_UTF8
-          while (e.hasMore) {
-            val t = e.varint()
-            val ewt = (t & 7).toInt
-            (t >>> 3).toInt match {
-              case 1 => k = str(e, ewt)
-              case 2 => v = str(e, ewt)
-              case _ => e.skip(ewt)
-            }
-          }
-          tagKeys = k :: tagKeys; tagVals = v :: tagVals
-        case _ => r.skip(wt)
+      val i = if (field >= 0 && field < m.slot.length) m.slot(field) else -1
+      if (i < 0) r.skip(wt)
+      else {
+        val k = m.kind(i)
+        if (wt != wireTypeOf(k)) fail()
+        (k: @switch) match {
+          case IntK => row.update(i, r.varint().toInt)
+          case LongK => row.update(i, r.varint())
+          case DoubleK => row.update(i, java.lang.Double.longBitsToDouble(r.fixed64()))
+          case StringK => row.update(i, str(r, wt))
+          case BinaryK => row.update(i, r.bytes())
+          case StructK => row.update(i, decodeMessage(m.child(i), r.sub()))
+          case StringsK | TagsK =>
+            if (repeated == null) repeated = new Array[ArrayBuffer[Any]](m.size)
+            if (repeated(i) == null) repeated(i) = new ArrayBuffer[Any]()
+            if (k == StringsK) repeated(i) += str(r, wt)
+            else readEntry(r.sub(), repeated(i))
+        }
       }
     }
-    if (tagKeys.nonEmpty)
-      row.update(7, ArrayBasedMapData(
-        tagKeys.reverse.toArray[Any], tagVals.reverse.toArray[Any]))
-    row
-  }
-
-  private def decodeLogMessage(r: Reader): InternalRow = {
-    val row = new GenericInternalRow(6)
-    while (r.hasMore) {
-      val tag = r.varint()
-      val wt = (tag & 7).toInt
-      (tag >>> 3).toInt match {
-        case 1 => row.update(0, bin(r, wt))
-        case 2 => row.update(1, vint(r, wt).toInt)
-        case 3 => row.update(2, vint(r, wt))
-        case 4 => row.update(3, str(r, wt))
-        case 5 => row.update(4, str(r, wt))
-        case 6 => row.update(5, str(r, wt))
-        case _ => r.skip(wt)
-      }
+    if (repeated != null) for (i <- 0 until m.size) {
+      val rep = repeated(i)
+      if (rep != null) row.update(i,
+        if (m.kind(i) == StringsK) new GenericArrayData(rep.toArray)
+        else { // entries are stored key, value, key, value, ...
+          val n = rep.length / 2
+          ArrayBasedMapData(Array.tabulate[Any](n)(j => rep(2 * j)),
+            Array.tabulate[Any](n)(j => rep(2 * j + 1)))
+        })
     }
     row
   }
 
-  private def decodeValueMetric(r: Reader): InternalRow = {
-    val row = new GenericInternalRow(3)
-    while (r.hasMore) {
-      val tag = r.varint()
-      val wt = (tag & 7).toInt
-      (tag >>> 3).toInt match {
-        case 1 => row.update(0, str(r, wt))
-        case 2 => row.update(1, java.lang.Double.longBitsToDouble(f64(r, wt)))
-        case 3 => row.update(2, str(r, wt))
-        case _ => r.skip(wt)
-      }
-    }
-    row
-  }
+  private def str(r: Reader, wt: Int): UTF8String =
+    if (wt != 2) fail() else UTF8String.fromBytes(r.bytes())
 
-  private def decodeCounterEvent(r: Reader): InternalRow = {
-    val row = new GenericInternalRow(3)
-    while (r.hasMore) {
-      val tag = r.varint()
-      val wt = (tag & 7).toInt
-      (tag >>> 3).toInt match {
-        case 1 => row.update(0, str(r, wt))
-        case 2 => row.update(1, vint(r, wt))
-        case 3 => row.update(2, vint(r, wt))
-        case _ => r.skip(wt)
+  /** One map entry, appended as key then value. Go proto yields the zero
+    * value "" for an absent entry field, so a missing key or value still
+    * materializes as "". */
+  private def readEntry(e: Reader, into: ArrayBuffer[Any]): Unit = {
+    var k: UTF8String = UTF8String.EMPTY_UTF8
+    var v: UTF8String = UTF8String.EMPTY_UTF8
+    while (e.hasMore) {
+      val t = e.varint()
+      val wt = (t & 7).toInt
+      (t >>> 3).toInt match {
+        case EntryKey => k = str(e, wt)
+        case EntryValue => v = str(e, wt)
+        case _ => e.skip(wt)
       }
     }
-    row
-  }
-
-  private def decodeContainerMetric(r: Reader): InternalRow = {
-    val row = new GenericInternalRow(7)
-    while (r.hasMore) {
-      val tag = r.varint()
-      val wt = (tag & 7).toInt
-      (tag >>> 3).toInt match {
-        case 1 => row.update(0, str(r, wt))
-        case 2 => row.update(1, vint(r, wt).toInt)
-        case 3 => row.update(2, java.lang.Double.longBitsToDouble(f64(r, wt)))
-        case 4 => row.update(3, vint(r, wt))
-        case 5 => row.update(4, vint(r, wt))
-        case 6 => row.update(5, vint(r, wt))
-        case 7 => row.update(6, vint(r, wt))
-        case _ => r.skip(wt)
-      }
-    }
-    row
-  }
-
-  private def decodeError(r: Reader): InternalRow = {
-    val row = new GenericInternalRow(3)
-    while (r.hasMore) {
-      val tag = r.varint()
-      val wt = (tag & 7).toInt
-      (tag >>> 3).toInt match {
-        case 1 => row.update(0, str(r, wt))
-        case 2 => row.update(1, vint(r, wt).toInt)
-        case 3 => row.update(2, str(r, wt))
-        case _ => r.skip(wt)
-      }
-    }
-    row
-  }
-
-  private def decodeUuid(r: Reader): InternalRow = {
-    val row = new GenericInternalRow(2)
-    while (r.hasMore) {
-      val tag = r.varint()
-      val wt = (tag & 7).toInt
-      (tag >>> 3).toInt match {
-        case 1 => row.update(0, vint(r, wt))
-        case 2 => row.update(1, vint(r, wt))
-        case _ => r.skip(wt)
-      }
-    }
-    row
-  }
-
-  private def decodeHttpStartStop(r: Reader): InternalRow = {
-    val row = new GenericInternalRow(14)
-    var fwd: List[UTF8String] = Nil
-    while (r.hasMore) {
-      val tag = r.varint()
-      val wt = (tag & 7).toInt
-      (tag >>> 3).toInt match {
-        case 1 => row.update(0, vint(r, wt))
-        case 2 => row.update(1, vint(r, wt))
-        case 3 => row.update(2, decodeUuid(sub(r, wt)))
-        case 4 => row.update(3, vint(r, wt).toInt)
-        case 5 => row.update(4, vint(r, wt).toInt)
-        case 6 => row.update(5, str(r, wt))
-        case 7 => row.update(6, str(r, wt))
-        case 8 => row.update(7, str(r, wt))
-        case 9 => row.update(8, vint(r, wt).toInt)
-        case 10 => row.update(9, vint(r, wt))
-        case 12 => row.update(10, decodeUuid(sub(r, wt)))
-        case 13 => row.update(11, vint(r, wt).toInt)
-        case 14 => row.update(12, str(r, wt))
-        case 15 => fwd = str(r, wt) :: fwd
-        case _ => r.skip(wt)
-      }
-    }
-    if (fwd.nonEmpty)
-      row.update(13, new GenericArrayData(fwd.reverse.toArray[Any]): ArrayData)
-    row
+    into += k; into += v
   }
 }

@@ -86,17 +86,6 @@ case class Envelope(
     error: Option[ErrorEvent],
     containerMetric: Option[ContainerMetric])
 
-object Envelope {
-  object EventTypes {
-    val HttpStartStop = 4
-    val LogMessage = 5
-    val ValueMetric = 6
-    val CounterEvent = 7
-    val Error = 8
-    val ContainerMetric = 9
-  }
-}
-
 /** Canonical StructType mirror of the case classes above. The JSON
   * writer addresses fields BY INDEX against exactly this layout. */
 object EnvelopeSchema {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxRows, ReportsSourceMetrics, SupportsAdmissionControl}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -25,9 +25,11 @@ import graft.streaming.{Connector, NozzleReader}
   * lifecycle of the reference consumer (noaa async.go:228-351,
   * 372-406). Downstream applies `envelope_decode` (O2) exactly where
   * the reference applies proto.Unmarshal — malformed frames become
-  * NULL rows to drop. A 1008 close bumps the process-wide
-  * [[FirehoseSocketSource.slowConsumerAlerts]] counter — the O4 side
-  * channel, go-nozzle detector.go:70-90 — and re-dials.
+  * NULL rows to drop. A 1008 close counts one slow-consumer alert —
+  * the O4 side channel, go-nozzle detector.go:70-90 — and re-dials;
+  * the stream reports its running alert count as the source metric
+  * [[FirehoseSocketSource.SlowConsumerAlertsMetric]], which
+  * [[graft.streaming.NozzlePipeline.Listener]] folds into `Stats`.
   *
   * Design mirrors Spark's own TextSocketMicroBatchStream: a
   * driver-side daemon thread appends frames to a buffer; offsets are
@@ -60,11 +62,10 @@ object FirehoseSocketSource {
   val schema: StructType = StructType(Seq(
     StructField("frame", StringType, nullable = false)))
 
-  /** Slow-consumer alerts from ws close-1008, process-wide — the
-    * analogue of the reference's stats.Inc(SlowConsumerAlert)
-    * (cli.go:299-303): one nozzle per process there, one counter
-    * here; StatsServer-style reporters read it directly. */
-  val slowConsumerAlerts = new java.util.concurrent.atomic.AtomicLong
+  /** Source-metric key of a stream's cumulative count of ws close-1008
+    * slow-consumer alerts (the reference's stats.Inc(SlowConsumerAlert),
+    * cli.go:299-303). */
+  val SlowConsumerAlertsMetric = "slowConsumerAlerts"
 }
 
 private class FirehoseSocketTable extends Table with SupportsRead {
@@ -106,7 +107,7 @@ private class FirehoseSocketMicroBatchStream(
     backoffMinMs: Long, backoffMaxMs: Long, maxRetries: Long,
     uaaAddr: String, username: String, password: String,
     subscriptionId: String, filterType: String)
-    extends MicroBatchStream with SupportsAdmissionControl {
+    extends MicroBatchStream with SupportsAdmissionControl with ReportsSourceMetrics {
 
   // noaa's EnvelopeFilter enum: LogMessages | Metrics | allEnvelopes
   require(filterType == "" || filterType == "logs" || filterType == "metrics",
@@ -131,6 +132,7 @@ private class FirehoseSocketMicroBatchStream(
   @volatile private var readerError: String = null
   private var readerThread: Thread = null
   private val liveSocket = new java.util.concurrent.atomic.AtomicReference[java.net.Socket]()
+  private val alerts = new java.util.concurrent.atomic.AtomicLong
 
   // MUST run before ensureReader() on every entry path: alignment
   // while frames are provably empty closes the race where a fast
@@ -157,7 +159,7 @@ private class FirehoseSocketMicroBatchStream(
           NozzleReader.run(host, port, fetcher, backoff, idleTimeoutMs,
             Long.MaxValue,
             f => frames.synchronized { frames += f; () },
-            _ => { FirehoseSocketSource.slowConsumerAlerts.incrementAndGet(); () },
+            _ => { alerts.incrementAndGet(); () },
             () => stopped,
             s => liveSocket.set(s),
             // the reference's stream path (firehose.go:42-44) +
@@ -204,6 +206,11 @@ private class FirehoseSocketMicroBatchStream(
     val capped = math.max(0L, math.min(step, available - s))
     SocketOffset(s + capped)
   }
+
+  // Cumulative for the stream's life: Spark also asks on idle triggers
+  // whose progress it may never post, so a per-call delta could be lost.
+  override def metrics(latestConsumedOffset: util.Optional[Offset]): util.Map[String, String] =
+    util.Map.of(FirehoseSocketSource.SlowConsumerAlertsMetric, alerts.get.toString)
 
   override def reportLatestOffset(): Offset =
     SocketOffset(frames.synchronized(base + frames.length))

@@ -27,11 +27,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * must provide.
   *
   * The operational semantics the reference implements around its
-  * socket live in the connector control plane and are wired the same
-  * way a network implementation would use them:
-  *  - auth (O18): a non-empty `uaa.addr` option triggers a token
-  *    fetch at stream initialization — missing credentials fail the
-  *    stream start, mirroring nozzle.go:113-138;
+  * socket live in the connector control plane:
+  *  - auth (O18): the generator dials nothing, so it takes no
+  *    credentials; the token fetch runs where a socket is dialed, in
+  *    `graft-firehose-socket` ([[FirehoseSocketSource]]);
   *  - backpressure (O3/rate control): `rowsPerBatch` is admission
   *    control (SupportsAdmissionControl), the `maxOffsetsPerTrigger`
   *    analogue;
@@ -93,10 +92,7 @@ private class FirehoseTable extends Table with SupportsRead {
         new FirehoseMicroBatchStream(
           rowsPerBatch = options.getLong("rowsPerBatch", 1000L),
           totalRows = options.getLong("totalRows", Long.MaxValue),
-          partitions = options.getInt("partitions", 4),
-          uaaAddr = options.getOrDefault("uaa.addr", ""),
-          username = options.getOrDefault("uaa.username", ""),
-          password = options.getOrDefault("uaa.password", ""))
+          partitions = options.getInt("partitions", 4))
     }
 }
 
@@ -105,8 +101,7 @@ private case class FirehoseOffset(rows: Long) extends Offset {
 }
 
 private class FirehoseMicroBatchStream(
-    rowsPerBatch: Long, totalRows: Long, partitions: Int,
-    uaaAddr: String, username: String, password: String)
+    rowsPerBatch: Long, totalRows: Long, partitions: Int)
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
@@ -117,21 +112,7 @@ private class FirehoseMicroBatchStream(
     availableNowCap = totalRows
   }
 
-  import graft.streaming.Connector
-
-  override def initialOffset(): Offset = {
-    // O18: fetch the auth token before the first connect — a bad
-    // credential set fails stream start, like the reference CLI.
-    if (uaaAddr.nonEmpty) {
-      val fetcher = new Connector.TokenFetcher(
-        uaaAddr, username, password, () => s"token-for-$username")
-      fetcher.fetch() match {
-        case Left(err) => throw new IllegalStateException(s"token fetch failed: $err")
-        case Right(_) => ()
-      }
-    }
-    FirehoseOffset(0L)
-  }
+  override def initialOffset(): Offset = FirehoseOffset(0L)
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(rowsPerBatch)
 

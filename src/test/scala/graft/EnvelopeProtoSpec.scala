@@ -51,6 +51,83 @@ class EnvelopeProtoSpec extends AnyFunSuite {
     assert(bytes.map(_ & 0xff).toSeq === expected.toSeq)
   }
 
+  /** Space-separated hex bytes plus `"text"` runs for ASCII, e.g.
+    * `0a 01 "o"` — the expected frames below are assembled by hand. */
+  private def wire(spec: String): Seq[Int] =
+    """"[^"]*"|\S+""".r.findAllIn(spec).toSeq.flatMap { t =>
+      if (t.startsWith("\"")) t.drop(1).dropRight(1).getBytes("UTF-8").map(_ & 0xff).toSeq
+      else Seq(Integer.parseInt(t, 16))
+    }
+
+  test("golden wire bytes: HttpStartStop, ValueMetric, CounterEvent, Error, ContainerMetric (hand-assembled, fully populated)") {
+    val spark2 = spark
+    import spark2.implicits._
+    def full(eventType: Int, hss: Option[HttpStartStop] = None,
+        vm: Option[ValueMetric] = None, ce: Option[CounterEvent] = None,
+        er: Option[ErrorEvent] = None, cm: Option[ContainerMetric] = None) =
+      Envelope(origin = Some("o"), eventType = Some(eventType), timestamp = Some(300L),
+        deployment = Some("d"), job = Some("j"), index = Some("0"), ip = Some("ip"),
+        tags = Some(Map("a" -> "x", "b" -> "")),
+        httpStartStop = hss, logMessage = None, valueMetric = vm,
+        counterEvent = ce, error = er, containerMetric = cm)
+    // origin=1 "o" | eventType=2 | timestamp=6 varint(300) = ac 02
+    def head(eventType: Int) = s"""0a 01 "o"  10 0$eventType  30 ac 02"""
+    // deployment=13 (6a) | job=14 (72) | index=15 (7a) | ip=16 (82 01)
+    // | tags=17 (8a 01): {1:"a", 2:"x"}, then {1:"b", 2:""} — the empty
+    // value is still written
+    val tail = """6a 01 "d"  72 01 "j"  7a 01 "0"  82 01 02 "ip"
+      8a 01 06 0a 01 "a" 12 01 "x"  8a 01 05 0a 01 "b" 12 00"""
+    val cases = Seq(
+      "HttpStartStop" -> (full(4, hss = Some(HttpStartStop(
+        startTimestamp = Some(1L), stopTimestamp = Some(2L),
+        requestId = Some(Uuid(1L, 2L)), peerType = Some(1), method = Some(3),
+        uri = Some("/u"), remoteAddress = Some("r"), userAgent = Some("ua"),
+        statusCode = Some(200), contentLength = Some(42L),
+        applicationId = Some(Uuid(3L, 4L)), instanceIndex = Some(-1),
+        instanceId = Some("i"), forwarded = Some(Seq("f1", "f2"))))),
+        // httpStartStop=7 (3a), 58 bytes: start=1 | stop=2 | requestId=3
+        // {1, 2} | peerType=4 | method=5 | uri=6 | remoteAddress=7 |
+        // userAgent=8 | statusCode=9 varint(200) = c8 01 | contentLength=10
+        // | applicationId=12 {3, 4} | instanceIndex=13 -1 as a 10-byte
+        // varint | instanceId=14 | forwarded=15 twice, unpacked
+        """3a 3a  08 01  10 02  1a 04 08 01 10 02  20 01  28 03  32 02 "/u"
+          3a 01 "r"  42 02 "ua"  48 c8 01  50 2a  62 04 08 03 10 04
+          68 ff ff ff ff ff ff ff ff ff 01  72 01 "i"  7a 02 "f1"  7a 02 "f2""""),
+      "ValueMetric" -> (full(6, vm = Some(ValueMetric(Some("v"), Some(2.5), Some("ms")))),
+        // valueMetric=9 (4a), 16 bytes: name=1 | value=2 fixed64 of
+        // doubleToLongBits(2.5) = 0x4004000000000000, little-endian | unit=3
+        """4a 10  0a 01 "v"  11 00 00 00 00 00 00 04 40  1a 02 "ms""""),
+      "CounterEvent" -> (full(7, ce = Some(CounterEvent(Some("c"), Some(5L),
+        Some(Long.MinValue + 1)))),
+        // counterEvent=10 (52), 16 bytes: name=1 | delta=2 | total=3 =
+        // uint64 2^63+1, above Long.MaxValue
+        """52 10  0a 01 "c"  10 05  18 81 80 80 80 80 80 80 80 80 01"""),
+      "Error" -> (full(8, er = Some(ErrorEvent(Some("s"), Some(7), Some("m")))),
+        // error=11 (5a), 8 bytes: source=1 | code=2 | message=3
+        """5a 08  0a 01 "s"  10 07  1a 01 "m""""),
+      "ContainerMetric" -> (full(9, cm = Some(ContainerMetric(
+        applicationId = Some("a"), instanceIndex = Some(-3), cpuPercentage = Some(0.1),
+        memoryBytes = Some(-1L), diskBytes = Some(1024L),
+        memoryBytesQuota = Some(2048L), diskBytesQuota = Some(1L)))),
+        // containerMetric=12 (62), 42 bytes: applicationId=1 |
+        // instanceIndex=2 -3 sign-extended | cpuPercentage=3 fixed64 of
+        // 0.1 = 0x3fb999999999999a | memoryBytes=4 uint64 2^64-1 |
+        // diskBytes=5 varint(1024) | memoryBytesQuota=6 varint(2048) |
+        // diskBytesQuota=7
+        """62 2a  0a 01 "a"  10 fd ff ff ff ff ff ff ff ff 01
+          19 9a 99 99 99 99 99 b9 3f  20 ff ff ff ff ff ff ff ff ff 01
+          28 80 08  30 80 10  38 01"""))
+    cases.foreach { case (name, (env, payload)) =>
+      val expected = wire(head(env.eventType.get) + " " + payload + " " + tail)
+      val got = encodeDF(Seq(env)).head().getAs[Array[Byte]]("p")
+      assert(got.map(_ & 0xff).toSeq === expected, s"$name: encode")
+      val back = Seq(expected.map(_.toByte).toArray).toDF("p")
+        .select(Functions.envelope_proto_decode(col("p")).as("e"))
+        .select("e.*").as[Envelope].head()
+      assert(back === env, s"$name: decode")
+    }
+  }
+
   test("proto encode -> decode round-trips 300 random envelopes") {
     val spark2 = spark
     import spark2.implicits._

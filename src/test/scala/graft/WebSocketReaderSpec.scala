@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{Connector, NozzleReader, WebSocket}
+import graft.streaming.{Connector, NozzlePipeline, NozzleReader, Stats, WebSocket}
 
 /** O1/O4/O18/O19 over the REAL wire protocol: RFC-6455 frames on a
   * loopback socket — upgrade handshake with Authorization, text AND
@@ -118,7 +118,9 @@ class WebSocketReaderSpec extends AnyFunSuite {
       }
     })
 
-    val baseline = graft.sources.FirehoseSocketSource.slowConsumerAlerts.get()
+    val stats = new Stats(0)
+    val listener = new NozzlePipeline.Listener(stats)
+    spark.streams.addListener(listener)
     val ck = java.nio.file.Files.createTempDirectory("ws-src-ck").toString
     val q = spark.readStream.format("graft-firehose-socket")
       .option("host", "127.0.0.1")
@@ -145,13 +147,16 @@ class WebSocketReaderSpec extends AnyFunSuite {
       val got = spark.sql("SELECT frame FROM ws_frames").collect()
         .map(_.getString(0)).sorted.toSeq
       assert(got === (0 until 6).map(i => s"wf$i"))
-      // the 1008 close crossed the reconnect AND surfaced as an alert
-      assert(graft.sources.FirehoseSocketSource.slowConsumerAlerts.get() === baseline + 1)
+      // the 1008 close crossed the reconnect AND surfaced as an alert,
+      // carried by the source's metrics through the Listener into Stats
+      while (stats.slowConsumerAlert.get() < 1 && System.nanoTime() < deadline) Thread.sleep(100)
+      assert(stats.slowConsumerAlert.get() === 1)
       // the stream path carries the subscription id (firehose.go:42-44)
       // and the server-side filter query param (filter.go:10-20)
       assert(paths.get(0) === "/firehose/graft-sub-7?filter-type=metrics", paths)
     } finally {
       q.stop()
+      spark.streams.removeListener(listener)
       server.close()
     }
   }

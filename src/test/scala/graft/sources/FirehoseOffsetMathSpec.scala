@@ -11,8 +11,7 @@ class FirehoseOffsetMathSpec extends AnyFunSuite {
 
   private def stream(total: Long, partitions: Int = 4) =
     new FirehoseMicroBatchStream(
-      rowsPerBatch = 1000L, totalRows = total, partitions = partitions,
-      uaaAddr = "", username = "", password = "")
+      rowsPerBatch = 1000L, totalRows = total, partitions = partitions)
 
   test("ReadAllAvailable at an unbounded horizon does not regress the offset") {
     val st = stream(Long.MaxValue)
