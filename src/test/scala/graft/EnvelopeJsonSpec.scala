@@ -227,7 +227,11 @@ class EnvelopeJsonSpec extends AnyFunSuite {
           peerType = Some(-9), method = Some(9), uri = None, remoteAddress = None,
           userAgent = None, statusCode = Some(-10), contentLength = Some(-100L),
           applicationId = Some(Uuid(0L, 99L)), instanceIndex = Some(Int.MinValue),
-          instanceId = None, forwarded = None)))))
+          instanceId = None, forwarded = None))),
+      // LogMessage.timestamp is int64 (log.pb.go), the one LongType field
+      // the two envelopes above leave out
+      empty.copy(logMessage = Some(LogMessage(message = None, message_type = Some(1),
+        timestamp = Some(-1L), app_id = None, source_type = None, source_instance = None)))))
     assert(got(0) ===
       """{"eventType":-2147483648,"timestamp":-9223372036854775808,""" +
       """"containerMetric":{"instanceIndex":2147483647,""" +
@@ -239,6 +243,7 @@ class EnvelopeJsonSpec extends AnyFunSuite {
       """"requestId":{"low":18446744073709551615,"high":9223372036854775808},""" +
       """"peerType":-9,"method":9,"statusCode":-10,"contentLength":-100,""" +
       """"applicationId":{"low":0,"high":99},"instanceIndex":-2147483648}}""")
+    assert(got(2) === """{"logMessage":{"message_type":1,"timestamp":-1}}""")
   }
 
   test("golden: an empty log message is omitted; base64 pads short tails") {
