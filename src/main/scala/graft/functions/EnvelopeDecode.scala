@@ -1,5 +1,7 @@
 package graft.functions
 
+import scala.annotation.switch
+
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -13,13 +15,15 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.EnvelopeSchema
+import graft.model.EnvelopeSchema.{BinaryK, DoubleK, IntK, LongK, StringK, StringsK, StructK, TagsK, ULongK}
 
 /** `envelope_decode(json)` — the decode side of the canonical JSON
   * contract as a native expression (O2, the reference's deserialize
   * step; async.go:274-280).
   *
-  * One Jackson tree pass per row, schema-driven against
-  * [[EnvelopeSchema.schema]]:
+  * One Jackson tree pass per row, driven by the field kinds of
+  * [[EnvelopeSchema.layout]] (shared with the JSON writer and the
+  * protobuf codec):
   *  - proto uint64 fields arrive as unsigned decimals that can exceed
   *    Long.MaxValue; `BigInteger.longValue()` keeps the low 64 bits —
   *    exactly the two's-complement representation the model stores
@@ -88,61 +92,61 @@ object EnvelopeDecoder {
     try {
       val root = mapper.readTree(s.getBytes)
       if (root == null || !root.isObject) null
-      else convertStruct(root, EnvelopeSchema.schema)
+      else convertStruct(root, EnvelopeSchema.layout)
     } catch { case scala.util.control.NonFatal(_) => null }
 
-  private def convertStruct(node: JsonNode, schema: StructType): InternalRow = {
-    val row = new GenericInternalRow(schema.length)
+  private def convertStruct(node: JsonNode, l: EnvelopeSchema.Layout): InternalRow = {
+    val row = new GenericInternalRow(l.size)
     var i = 0
-    while (i < schema.length) {
-      val f = schema.fields(i)
-      val v = node.get(f.name)
-      if (v != null && !v.isNull) row.update(i, convert(v, f.dataType))
+    while (i < l.size) {
+      val v = node.get(l.struct.fields(i).name)
+      if (v != null && !v.isNull) row.update(i, convert(v, l, i))
       i += 1
     }
     row
   }
 
-  private def convert(n: JsonNode, dt: DataType): Any = dt match {
-    case StringType =>
-      if (n.isTextual) UTF8String.fromString(n.textValue()) else fail()
-    case IntegerType =>
-      if (n.isIntegralNumber && n.canConvertToInt) n.intValue() else fail()
-    case LongType =>
-      // u64 two's-complement: BigInteger keeps values above Long.Max
-      if (n.isIntegralNumber) n.bigIntegerValue().longValue() else fail()
-    case DoubleType =>
-      if (n.isNumber) n.doubleValue() else fail()
-    case BinaryType =>
-      if (n.isTextual) n.binaryValue() else fail() // throws on bad base64
-    case s: StructType =>
-      if (n.isObject) convertStruct(n, s) else fail()
-    case ArrayType(StringType, _) =>
-      if (!n.isArray) fail()
-      else {
-        val out = new Array[Any](n.size())
-        var i = 0
-        while (i < n.size()) {
-          val e = n.get(i)
-          out(i) = if (e.isTextual) UTF8String.fromString(e.textValue()) else fail()
-          i += 1
+  /** Field `i` of `l` from its node, by the field's kind. */
+  private def convert(n: JsonNode, l: EnvelopeSchema.Layout, i: Int): Any =
+    (l.kind(i): @switch) match {
+      case StringK =>
+        if (n.isTextual) UTF8String.fromString(n.textValue()) else fail()
+      case IntK =>
+        if (n.isIntegralNumber && n.canConvertToInt) n.intValue() else fail()
+      case LongK | ULongK =>
+        // u64 two's-complement: BigInteger keeps values above Long.Max
+        if (n.isIntegralNumber) n.bigIntegerValue().longValue() else fail()
+      case DoubleK =>
+        if (n.isNumber) n.doubleValue() else fail()
+      case BinaryK =>
+        if (n.isTextual) n.binaryValue() else fail() // throws on bad base64
+      case StructK =>
+        if (n.isObject) convertStruct(n, l.child(i)) else fail()
+      case StringsK =>
+        if (!n.isArray) fail()
+        else {
+          val out = new Array[Any](n.size())
+          var k = 0
+          while (k < n.size()) {
+            val e = n.get(k)
+            out(k) = if (e.isTextual) UTF8String.fromString(e.textValue()) else fail()
+            k += 1
+          }
+          new GenericArrayData(out)
         }
-        new GenericArrayData(out)
-      }
-    case MapType(StringType, StringType, _) =>
-      if (!n.isObject) fail()
-      else {
-        val ks = Array.newBuilder[Any]
-        val vs = Array.newBuilder[Any]
-        val it = n.fields()
-        while (it.hasNext) {
-          val e = it.next()
-          if (!e.getValue.isTextual) fail()
-          ks += UTF8String.fromString(e.getKey)
-          vs += UTF8String.fromString(e.getValue.textValue())
+      case TagsK =>
+        if (!n.isObject) fail()
+        else {
+          val ks = Array.newBuilder[Any]
+          val vs = Array.newBuilder[Any]
+          val it = n.fields()
+          while (it.hasNext) {
+            val e = it.next()
+            if (!e.getValue.isTextual) fail()
+            ks += UTF8String.fromString(e.getKey)
+            vs += UTF8String.fromString(e.getValue.textValue())
+          }
+          ArrayBasedMapData(ks.result(), vs.result())
         }
-        ArrayBasedMapData(ks.result(), vs.result())
-      }
-    case _ => fail() // no other types appear in the envelope schema
-  }
+    }
 }

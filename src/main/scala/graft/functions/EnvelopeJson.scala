@@ -4,6 +4,8 @@ import java.math.{BigDecimal => JBigDecimal, MathContext, RoundingMode}
 import java.nio.charset.StandardCharsets.US_ASCII
 import java.util.Arrays
 
+import scala.annotation.switch
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -13,6 +15,7 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.EnvelopeSchema
+import graft.model.EnvelopeSchema.{BinaryK, DoubleK, IntK, LongK, StringK, StringsK, StructK, TagsK, ULongK}
 
 /** `envelope_json(envelope_struct)` — the canonical byte-exact JSON
   * serialization of an Envelope (operator O8).
@@ -32,9 +35,10 @@ import graft.model.EnvelopeSchema
   *    as `\u00XX`, U+2028/U+2029 escaped, broken UTF-8 → `�`.
   *
   * Codegen-able: the generated code makes one static call per row into
-  * [[EnvelopeJsonWriter.encode]], which addresses the struct by field
-  * index against [[EnvelopeSchema.schema]] — no per-row schema
-  * interpretation, no reflection, stays inside whole-stage codegen.
+  * [[EnvelopeJsonWriter.encode]], which walks [[EnvelopeSchema.layout]]
+  * (the field kinds shared with the decoder and the protobuf codec) by
+  * field index and dispatches on int kinds built at init — no per-row
+  * schema interpretation, no reflection, stays inside whole-stage codegen.
   */
 case class EnvelopeJson(child: Expression) extends UnaryExpression {
 
@@ -118,170 +122,59 @@ object EnvelopeJsonWriter {
   def encode(row: InternalRow): UTF8String = {
     val out = buffer.get()
     out.reset()
-    writeEnvelope(out, row)
+    writeStruct(out, EnvelopeSchema.layout, row)
     UTF8String.fromBytes(out.toByteArray)
   }
 
-  // --- structural writers (field indices match EnvelopeSchema) -------
+  // --- the one structural writer, walking EnvelopeSchema.layout -------
 
-  // Each struct's JSON keys, by field index: the schema's field names
-  // are the wire names. A key is stored as `,"name":`; the first field
-  // written into an object skips the comma.
-  private def keys(t: StructType): Array[Array[Byte]] =
-    t.fieldNames.map(name => s""","$name":""".getBytes(US_ASCII))
-  private val EnvelopeKeys = keys(EnvelopeSchema.schema)
-  private val HttpKeys = keys(EnvelopeSchema.httpStartStop)
-  private val LogKeys = keys(EnvelopeSchema.logMessage)
-  private val ValueKeys = keys(EnvelopeSchema.valueMetric)
-  private val CounterKeys = keys(EnvelopeSchema.counterEvent)
-  private val ErrorKeys = keys(EnvelopeSchema.error)
-  private val ContainerKeys = keys(EnvelopeSchema.containerMetric)
-  private val UuidKeys = keys(EnvelopeSchema.uuid)
+  // Each struct's JSON keys by field index, in an array indexed by layout
+  // id: the schema's field names are the wire names. A key is stored as
+  // `,"name":`; the first field written into an object skips the comma.
+  private val structKeys: Array[Array[Array[Byte]]] = EnvelopeSchema.layouts
+    .map(_.struct.fieldNames.map(name => s""","$name":""".getBytes(US_ASCII))).toArray
 
-  private def writeEnvelope(out: Buffer, r: InternalRow): Unit = {
-    val k = EnvelopeKeys
+  /** Every kind rule in one place: NULL fields are omitted, and so are
+    * empty binary, `array<string>` and map values; a present struct is
+    * written even when all its fields are NULL; uint64 prints unsigned.
+    * Fields go out in schema order, which is proto field order. */
+  private def writeStruct(out: Buffer, l: EnvelopeSchema.Layout, r: InternalRow): Unit = {
+    val k = structKeys(l.id)
     out.write('{')
     var first = true
-    first = strField(out, r, 0, k, first)
-    first = intField(out, r, 1, k, first)
-    first = longField(out, r, 2, k, first)
-    first = strField(out, r, 3, k, first)
-    first = strField(out, r, 4, k, first)
-    first = strField(out, r, 5, k, first)
-    first = strField(out, r, 6, k, first)
-    if (!r.isNullAt(7)) {
-      val m = r.getMap(7)
-      if (m.numElements() > 0) {
-        first = key(out, k(7), first)
-        writeTags(out, m)
+    var i = 0
+    while (i < l.size) {
+      if (!r.isNullAt(i)) (l.kind(i): @switch) match {
+        case IntK => first = key(out, k(i), first); out.writeLong(r.getInt(i))
+        case LongK => first = key(out, k(i), first); out.writeLong(r.getLong(i))
+        case ULongK => first = key(out, k(i), first); out.writeUnsignedLong(r.getLong(i))
+        case DoubleK =>
+          first = key(out, k(i), first)
+          out.write(goFloat(r.getDouble(i)).getBytes(US_ASCII))
+        case StringK => first = key(out, k(i), first); writeString(out, r.getUTF8String(i))
+        case StructK =>
+          // UUID stays {"low":…,"high":…}, never the dashed string
+          // (kafka_test.go:572)
+          val c = l.child(i)
+          first = key(out, k(i), first)
+          writeStruct(out, c, r.getStruct(i, c.size))
+        case BinaryK =>
+          val b = r.getBinary(i)
+          if (b.length > 0) {
+            first = key(out, k(i), first)
+            out.write('"')
+            out.write(java.util.Base64.getEncoder.encode(b))
+            out.write('"')
+          }
+        case StringsK =>
+          val a = r.getArray(i)
+          if (a.numElements() > 0) { first = key(out, k(i), first); writeStringArray(out, a) }
+        case TagsK =>
+          val m = r.getMap(i)
+          if (m.numElements() > 0) { first = key(out, k(i), first); writeTags(out, m) }
       }
+      i += 1
     }
-    if (!r.isNullAt(8)) {
-      first = key(out, k(8), first)
-      writeHttpStartStop(out, r.getStruct(8, 14))
-    }
-    if (!r.isNullAt(9)) {
-      first = key(out, k(9), first)
-      writeLogMessage(out, r.getStruct(9, 6))
-    }
-    if (!r.isNullAt(10)) {
-      first = key(out, k(10), first)
-      writeValueMetric(out, r.getStruct(10, 3))
-    }
-    if (!r.isNullAt(11)) {
-      first = key(out, k(11), first)
-      writeCounterEvent(out, r.getStruct(11, 3))
-    }
-    if (!r.isNullAt(12)) {
-      first = key(out, k(12), first)
-      writeError(out, r.getStruct(12, 3))
-    }
-    if (!r.isNullAt(13)) {
-      first = key(out, k(13), first)
-      writeContainerMetric(out, r.getStruct(13, 7))
-    }
-    out.write('}')
-  }
-
-  private def writeHttpStartStop(out: Buffer, r: InternalRow): Unit = {
-    val k = HttpKeys
-    out.write('{')
-    var first = true
-    first = longField(out, r, 0, k, first)
-    first = longField(out, r, 1, k, first)
-    if (!r.isNullAt(2)) { first = key(out, k(2), first); writeUuid(out, r.getStruct(2, 2)) }
-    first = intField(out, r, 3, k, first)
-    first = intField(out, r, 4, k, first)
-    first = strField(out, r, 5, k, first)
-    first = strField(out, r, 6, k, first)
-    first = strField(out, r, 7, k, first)
-    first = intField(out, r, 8, k, first)
-    first = longField(out, r, 9, k, first)
-    if (!r.isNullAt(10)) { first = key(out, k(10), first); writeUuid(out, r.getStruct(10, 2)) }
-    first = intField(out, r, 11, k, first)
-    first = strField(out, r, 12, k, first)
-    if (!r.isNullAt(13)) {
-      val a = r.getArray(13)
-      if (a.numElements() > 0) {
-        first = key(out, k(13), first)
-        writeStringArray(out, a)
-      }
-    }
-    out.write('}')
-  }
-
-  private def writeLogMessage(out: Buffer, r: InternalRow): Unit = {
-    val k = LogKeys
-    out.write('{')
-    var first = true
-    if (!r.isNullAt(0)) {
-      val b = r.getBinary(0)
-      if (b.length > 0) {
-        first = key(out, k(0), first)
-        out.write('"')
-        out.write(java.util.Base64.getEncoder.encode(b))
-        out.write('"')
-      }
-    }
-    first = intField(out, r, 1, k, first)
-    first = longField(out, r, 2, k, first)
-    first = strField(out, r, 3, k, first)
-    first = strField(out, r, 4, k, first)
-    first = strField(out, r, 5, k, first)
-    out.write('}')
-  }
-
-  private def writeValueMetric(out: Buffer, r: InternalRow): Unit = {
-    val k = ValueKeys
-    out.write('{')
-    var first = true
-    first = strField(out, r, 0, k, first)
-    first = doubleField(out, r, 1, k, first)
-    first = strField(out, r, 2, k, first)
-    out.write('}')
-  }
-
-  private def writeCounterEvent(out: Buffer, r: InternalRow): Unit = {
-    val k = CounterKeys
-    out.write('{')
-    var first = true
-    first = strField(out, r, 0, k, first)
-    first = ulongField(out, r, 1, k, first)
-    first = ulongField(out, r, 2, k, first)
-    out.write('}')
-  }
-
-  private def writeError(out: Buffer, r: InternalRow): Unit = {
-    val k = ErrorKeys
-    out.write('{')
-    var first = true
-    first = strField(out, r, 0, k, first)
-    first = intField(out, r, 1, k, first)
-    first = strField(out, r, 2, k, first)
-    out.write('}')
-  }
-
-  private def writeContainerMetric(out: Buffer, r: InternalRow): Unit = {
-    val k = ContainerKeys
-    out.write('{')
-    var first = true
-    first = strField(out, r, 0, k, first)
-    first = intField(out, r, 1, k, first)
-    first = doubleField(out, r, 2, k, first)
-    first = ulongField(out, r, 3, k, first)
-    first = ulongField(out, r, 4, k, first)
-    first = ulongField(out, r, 5, k, first)
-    first = ulongField(out, r, 6, k, first)
-    out.write('}')
-  }
-
-  private def writeUuid(out: Buffer, r: InternalRow): Unit = {
-    // UUID stays {"low":…,"high":…} with unsigned rendering — never the
-    // dashed string (kafka_test.go:572).
-    out.write('{')
-    var first = true
-    first = ulongField(out, r, 0, UuidKeys, first)
-    first = ulongField(out, r, 1, UuidKeys, first)
     out.write('}')
   }
 
@@ -313,37 +206,10 @@ object EnvelopeJsonWriter {
     out.write(']')
   }
 
-  // --- field helpers -------------------------------------------------
-
   private def key(out: Buffer, k: Array[Byte], first: Boolean): Boolean = {
     if (first) out.write(k, 1, k.length - 1) else out.write(k)
     false
   }
-
-  private def strField(out: Buffer, r: InternalRow, i: Int,
-      k: Array[Array[Byte]], first: Boolean): Boolean =
-    if (r.isNullAt(i)) first
-    else { key(out, k(i), first); writeString(out, r.getUTF8String(i)); false }
-
-  private def intField(out: Buffer, r: InternalRow, i: Int,
-      k: Array[Array[Byte]], first: Boolean): Boolean =
-    if (r.isNullAt(i)) first
-    else { key(out, k(i), first); out.writeLong(r.getInt(i)); false }
-
-  private def longField(out: Buffer, r: InternalRow, i: Int,
-      k: Array[Array[Byte]], first: Boolean): Boolean =
-    if (r.isNullAt(i)) first
-    else { key(out, k(i), first); out.writeLong(r.getLong(i)); false }
-
-  private def ulongField(out: Buffer, r: InternalRow, i: Int,
-      k: Array[Array[Byte]], first: Boolean): Boolean =
-    if (r.isNullAt(i)) first
-    else { key(out, k(i), first); out.writeUnsignedLong(r.getLong(i)); false }
-
-  private def doubleField(out: Buffer, r: InternalRow, i: Int,
-      k: Array[Array[Byte]], first: Boolean): Boolean =
-    if (r.isNullAt(i)) first
-    else { key(out, k(i), first); out.write(goFloat(r.getDouble(i)).getBytes(US_ASCII)); false }
 
   // --- Go-compatible float formatting --------------------------------
 

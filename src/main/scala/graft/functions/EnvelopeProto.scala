@@ -13,6 +13,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.EnvelopeSchema
+import graft.model.EnvelopeSchema.{BinaryK, DoubleK, IntK, LongK, StringK, StringsK, StructK, TagsK, ULongK}
 
 /** The dropsonde protobuf WIRE codec — the reference's true O2 input
   * format (`proto.Unmarshal`, noaa async.go:274-280), implemented
@@ -22,8 +23,9 @@ import graft.model.EnvelopeSchema
   *
   * The wire layout is one table, [[EnvelopeProto.fieldNumbers]]: the
   * sonde-go field number of every [[EnvelopeSchema]] field. Each
-  * field's wire type and conversion follow from its Catalyst type
-  * (Int/Long varint, Double fixed64, String/Binary/struct
+  * field's wire type and conversion follow from its kind in
+  * [[EnvelopeSchema.layout]], the field layout the JSON codec walks too
+  * (int32/int64/uint64 varint, double fixed64, string/bytes/message
   * length-delimited, `array<string>` a repeated string field,
   * `map<string,string>` repeated `{key=1, value=2}` entries), so one
   * generic encoder and one generic decoder serve all eight messages.
@@ -31,7 +33,8 @@ import graft.model.EnvelopeSchema
   * Decode skips unknown fields by wire type (forward compatible) and
   * returns NULL on any malformed frame — the reference's
   * silently-skip policy. uint64 fields ride Scala Long two's
-  * complement, same convention as the JSON codec.
+  * complement; the layout marks them, and only the JSON writer's
+  * unsigned printing tells them apart from int64.
   *
   * Round-trip law (tested): `proto_decode(envelope_proto(e)) == e`.
   */
@@ -119,52 +122,37 @@ object EnvelopeProto {
     // memoryBytesQuota diskBytesQuota (metric.pb.go)
     EnvelopeSchema.containerMetric -> Array(1, 2, 3, 4, 5, 6, 7))
 
-  // Field kinds, one per Catalyst type: Strings = array<string>,
-  // Tags = map<string,string>.
-  private final val IntK = 0; private final val LongK = 1
-  private final val DoubleK = 2; private final val StringK = 3
-  private final val BinaryK = 4; private final val StructK = 5
-  private final val StringsK = 6; private final val TagsK = 7
-  /** Wire type by kind: varint 0, fixed64 1, length-delimited 2. */
-  private val wireTypeOf = Array(0, 0, 1, 2, 2, 2, 2, 2)
+  /** Wire type by field kind: varint 0, fixed64 1, length-delimited 2.
+    * uint64 rides the same varint as int64. */
+  private def wireTypeOf(kind: Int): Int = (kind: @switch) match {
+    case IntK | LongK | ULongK => 0
+    case DoubleK => 1
+    case _ => 2
+  }
   /** proto map entry fields. */
   private final val EntryKey = 1; private final val EntryValue = 2
 
-  private def kindOf(dt: DataType): Int = dt match {
-    case IntegerType => IntK
-    case LongType => LongK
-    case DoubleType => DoubleK
-    case StringType => StringK
-    case BinaryType => BinaryK
-    case _: StructType => StructK
-    case ArrayType(StringType, _) => StringsK
-    case MapType(StringType, StringType, _) => TagsK
-    case other => throw new IllegalArgumentException(s"no wire kind for $other")
-  }
-
-  /** One message's dispatch, precomputed from its schema and its
-    * [[fieldNumbers]] row: per row index the field number, kind and
-    * nested layout; the row indices in ascending field-number order
-    * (the encode order); and field number → row index (-1 unknown). */
-  private final class Layout(schema: StructType) {
-    val number: Array[Int] = fieldNumbers(schema)
-    val size: Int = schema.length
-    require(number.length == size,
-      s"${number.length} field numbers for the ${size}-field ${schema.simpleString}")
-    require(number.distinct.length == size, s"duplicate field number in ${schema.simpleString}")
-    val kind: Array[Int] = schema.fields.map(f => kindOf(f.dataType))
-    val child: Array[Layout] = schema.fields.map(_.dataType match {
-      case s: StructType => new Layout(s)
-      case _ => null
-    })
+  /** One message's wire layout, precomputed from its [[fieldNumbers]]
+    * row (kinds and nesting come from the shared [[EnvelopeSchema.Layout]]):
+    * per row index the field number; the row indices in ascending
+    * field-number order (the encode order); and field number → row
+    * index (-1 unknown). */
+  private final class Wire(l: EnvelopeSchema.Layout) {
+    val number: Array[Int] = fieldNumbers(l.struct)
+    require(number.length == l.size,
+      s"${number.length} field numbers for the ${l.size}-field ${l.struct.simpleString}")
+    require(number.distinct.length == l.size, s"duplicate field number in ${l.struct.simpleString}")
     val order: Array[Int] = number.indices.sortBy(number(_)).toArray
     val slot: Array[Int] = Array.tabulate(number.max + 1)(number.indexOf(_))
-    /** Nesting levels, counting a tag entry as one. */
-    val depth: Int = 1 + (child.filter(_ != null).map(_.depth) ++
-      kind.filter(_ == TagsK).map(_ => 1)).maxOption.getOrElse(0)
   }
 
-  private val envelope = new Layout(EnvelopeSchema.schema)
+  /** Per layout id. */
+  private val wire: Array[Wire] = EnvelopeSchema.layouts.map(new Wire(_)).toArray
+
+  /** Nesting levels below `l`, counting a tag entry as one. */
+  private def depth(l: EnvelopeSchema.Layout): Int =
+    1 + (l.child.filter(_ != null).map(depth) ++ l.kind.filter(_ == TagsK).map(_ => 1))
+      .maxOption.getOrElse(0)
 
   // ---------------------------------------------------------------- encode
 
@@ -172,23 +160,25 @@ object EnvelopeProto {
   // payload or tag entry, UUID): a nested message is built one level
   // down, then copied in behind its length. reset() keeps capacity.
   private val buffers = ThreadLocal.withInitial[Array[EnvelopeJsonWriter.Buffer]](
-    () => Array.fill(envelope.depth)(new EnvelopeJsonWriter.Buffer))
+    () => Array.fill(depth(EnvelopeSchema.layout))(new EnvelopeJsonWriter.Buffer))
 
-  def encode(env: InternalRow): Array[Byte] = encodeMessage(envelope, env, buffers.get(), 0)
+  def encode(env: InternalRow): Array[Byte] =
+    encodeMessage(EnvelopeSchema.layout, env, buffers.get(), 0)
 
   /** Non-NULL fields in ascending field-number order; NULL ones are
     * omitted, present empty strings are written. */
-  private def encodeMessage(m: Layout, r: InternalRow,
+  private def encodeMessage(m: EnvelopeSchema.Layout, r: InternalRow,
       bufs: Array[EnvelopeJsonWriter.Buffer], depth: Int): Array[Byte] = {
+    val w = wire(m.id)
     val out = bufs(depth)
     out.reset()
     var j = 0
-    while (j < m.order.length) {
-      val i = m.order(j)
-      val f = m.number(i)
+    while (j < w.order.length) {
+      val i = w.order(j)
+      val f = w.number(i)
       if (!r.isNullAt(i)) (m.kind(i): @switch) match {
         case IntK => writeTag(out, f, 0); writeVarint(out, r.getInt(i).toLong)
-        case LongK => writeTag(out, f, 0); writeVarint(out, r.getLong(i))
+        case LongK | ULongK => writeTag(out, f, 0); writeVarint(out, r.getLong(i))
         case DoubleK =>
           writeTag(out, f, 1)
           val bits = java.lang.Double.doubleToLongBits(r.getDouble(i))
@@ -293,7 +283,7 @@ object EnvelopeProto {
   }
 
   def decodeOrNull(frame: Array[Byte]): InternalRow =
-    try decodeMessage(envelope, new Reader(frame, 0, frame.length))
+    try decodeMessage(EnvelopeSchema.layout, new Reader(frame, 0, frame.length))
     catch { case scala.util.control.NonFatal(_) => null }
 
   /** A known field must arrive with its kind's wire type, or the frame
@@ -301,21 +291,22 @@ object EnvelopeProto {
     * unknown fields skip by wire type. A repeated singular field
     * overwrites (last one wins); repeated `forwarded` / `tags` keep wire
     * order and are set only when non-empty. */
-  private def decodeMessage(m: Layout, r: Reader): InternalRow = {
+  private def decodeMessage(m: EnvelopeSchema.Layout, r: Reader): InternalRow = {
+    val slot = wire(m.id).slot
     val row = new GenericInternalRow(m.size)
     var repeated: Array[ArrayBuffer[Any]] = null // per row index, lazily
     while (r.hasMore) {
       val tag = r.varint()
       val field = (tag >>> 3).toInt
       val wt = (tag & 7).toInt
-      val i = if (field >= 0 && field < m.slot.length) m.slot(field) else -1
+      val i = if (field >= 0 && field < slot.length) slot(field) else -1
       if (i < 0) r.skip(wt)
       else {
         val k = m.kind(i)
         if (wt != wireTypeOf(k)) fail()
         (k: @switch) match {
           case IntK => row.update(i, r.varint().toInt)
-          case LongK => row.update(i, r.varint())
+          case LongK | ULongK => row.update(i, r.varint())
           case DoubleK => row.update(i, java.lang.Double.longBitsToDouble(r.fixed64()))
           case StringK => row.update(i, str(r, wt))
           case BinaryK => row.update(i, r.bytes())

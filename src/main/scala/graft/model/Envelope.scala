@@ -18,7 +18,8 @@ import org.apache.spark.sql.types._
   *
   * uint64 proto fields (CounterEvent.delta/total, UUID.low/high,
   * ContainerMetric.*Bytes*) land in Scala Long with UNSIGNED semantics;
-  * all formatting goes through unsigned rendering in the JSON writer.
+  * [[EnvelopeSchema.layout]] marks them, and the JSON writer prints them
+  * unsigned.
   */
 case class Uuid(low: Long, high: Long)
 
@@ -86,8 +87,9 @@ case class Envelope(
     error: Option[ErrorEvent],
     containerMetric: Option[ContainerMetric])
 
-/** Canonical StructType mirror of the case classes above. The JSON
-  * writer addresses fields BY INDEX against exactly this layout. */
+/** Canonical StructType mirror of the case classes above, and the one
+  * field [[EnvelopeSchema.Layout]] that every envelope codec (JSON
+  * writer, JSON decoder, protobuf wire codec) walks BY INDEX. */
 object EnvelopeSchema {
 
   val uuid: StructType = StructType(Seq(
@@ -158,6 +160,64 @@ object EnvelopeSchema {
     StructField("error", error),
     StructField("containerMetric", containerMetric)))
 
+  // Field kinds, one per field; the codecs dispatch on them with @switch.
+  final val IntK = 0; final val LongK = 1; final val ULongK = 2
+  final val DoubleK = 3; final val StringK = 4; final val BinaryK = 5
+  final val StructK = 6
+  final val StringsK = 7 // array<string>
+  final val TagsK = 8 // map<string,string>
+
+  /** The proto uint64 fields (metric.pb.go, uuid.pb.go): a LongType field
+    * named here is ULongK, every other one is int64 (LongK). */
+  private val uint64: Map[StructType, Set[String]] = Map(
+    counterEvent -> Set("delta", "total"),
+    uuid -> Set("low", "high"),
+    containerMetric -> Set("memoryBytes", "diskBytes", "memoryBytesQuota", "diskBytesQuota"))
+
+  private def kindOf(t: StructType, f: StructField): Int = f.dataType match {
+    case IntegerType => IntK
+    case LongType => if (uint64.getOrElse(t, Set.empty[String])(f.name)) ULongK else LongK
+    case DoubleType => DoubleK
+    case StringType => StringK
+    case BinaryType => BinaryK
+    case _: StructType => StructK
+    case ArrayType(StringType, _) => StringsK
+    case MapType(StringType, StringType, _) => TagsK
+    case other => throw new IllegalArgumentException(s"no field kind for $other")
+  }
+
+  /** One struct's field layout, built once at init: per field index its
+    * kind and, for a struct field, the nested layout. `id` is dense over
+    * [[layouts]], so a codec keeps its own per-struct tables in an array
+    * indexed by it. */
+  final class Layout private[EnvelopeSchema] (val id: Int, val struct: StructType,
+      val kind: Array[Int], val child: Array[Layout]) {
+    def size: Int = kind.length
+  }
+
+  /** Every envelope struct's layout, one per distinct StructType (both
+    * UUID fields share one), children before parents. */
+  val layouts: IndexedSeq[Layout] = {
+    val built = scala.collection.mutable.ArrayBuffer.empty[Layout]
+    def build(t: StructType): Layout = built.find(_.struct == t).getOrElse {
+      val child = t.fields.map(_.dataType match {
+        case s: StructType => build(s)
+        case _ => null
+      })
+      val l = new Layout(built.length, t, t.fields.map(kindOf(t, _)), child)
+      built += l
+      l
+    }
+    build(schema)
+    for ((t, names) <- uint64; n <- names)
+      require(built.exists(l => l.struct == t && l.kind(t.fieldIndex(n)) == ULongK),
+        s"uint64 field $n is not a LongType field of an envelope struct")
+    built.toIndexedSeq
+  }
+
+  /** The Envelope's own layout, the root every codec starts from. */
+  val layout: Layout = layouts.last
+
   private def nullOf(t: DataType): Column = lit(null).cast(t)
 
   /** Assemble a canonical Envelope struct ([[schema]] order) from the
@@ -198,8 +258,9 @@ object EnvelopeSchema {
       lit("DEA").as("source_type"),
       nullOf(StringType).as("source_instance"))
 
-  /** Structural equality ignoring nullability/metadata/case of nothing —
-    * names are case-sensitive in the JSON contract. */
+  /** Structural type equality: field names compare case-sensitively (they
+    * are the JSON contract's keys), types compare structurally, and
+    * nullability and metadata are ignored. */
   def compatible(a: DataType, b: DataType): Boolean = (a, b) match {
     case (x: StructType, y: StructType) =>
       x.length == y.length && x.fields.zip(y.fields).forall {
