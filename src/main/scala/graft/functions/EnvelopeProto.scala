@@ -297,9 +297,9 @@ object EnvelopeProto {
     var repeated: Array[ArrayBuffer[Any]] = null // per row index, lazily
     while (r.hasMore) {
       val tag = r.varint()
-      val field = (tag >>> 3).toInt
+      val field = fieldNumber(tag)
       val wt = (tag & 7).toInt
-      val i = if (field >= 0 && field < slot.length) slot(field) else -1
+      val i = if (field < slot.length) slot(field) else -1
       if (i < 0) r.skip(wt)
       else {
         val k = m.kind(i)
@@ -332,6 +332,16 @@ object EnvelopeProto {
     row
   }
 
+  /** The field number of a tag, compared in full: one above 2^31-1
+    * cannot come from a proto encoder and fails the frame, as protobuf-go's
+    * `protowire.DecodeTag` maps it to -1 and `ConsumeTag` rejects it (a
+    * truncating `toInt` would alias field 2^32+1 onto field 1). */
+  private def fieldNumber(tag: Long): Int = {
+    val field = tag >>> 3
+    if (field > Int.MaxValue) fail()
+    field.toInt
+  }
+
   private def str(r: Reader, wt: Int): UTF8String =
     if (wt != 2) fail() else UTF8String.fromBytes(r.bytes())
 
@@ -344,7 +354,7 @@ object EnvelopeProto {
     while (e.hasMore) {
       val t = e.varint()
       val wt = (t & 7).toInt
-      (t >>> 3).toInt match {
+      fieldNumber(t) match {
         case EntryKey => k = str(e, wt)
         case EntryValue => v = str(e, wt)
         case _ => e.skip(wt)

@@ -23,9 +23,11 @@ import graft.streaming.{Connector, NozzleReader}
   * connection (dial → upgrade with the TokenFetcher token →
   * idle-deadline reads → backoff re-dial → refresh-on-401), the
   * lifecycle of the reference consumer (noaa async.go:228-351,
-  * 372-406). Downstream applies `envelope_decode` (O2) exactly where
-  * the reference applies proto.Unmarshal — malformed frames become
-  * NULL rows to drop. A 1008 close counts one slow-consumer alert —
+  * 372-406). Downstream decodes each frame (O2) and malformed frames
+  * become NULL rows to drop: `envelope_decode` is the inverse of the
+  * canonical JSON these text frames carry, and `envelope_proto_decode`
+  * is the analogue of the reference's proto.Unmarshal over dropsonde
+  * protobuf frames. A 1008 close counts one slow-consumer alert —
   * the O4 side channel, go-nozzle detector.go:70-90 — and re-dials;
   * the stream reports its running alert count as the source metric
   * [[FirehoseSocketSource.SlowConsumerAlertsMetric]], which

@@ -38,7 +38,9 @@ import java.nio.charset.StandardCharsets.ISO_8859_1
   *  - malformed frames are the CONSUMER's problem (async.go:274-280
   *    skips frames that fail proto.Unmarshal and keeps the
   *    connection): the reader delivers raw frames; decode-and-drop
-  *    happens downstream via `envelope_decode` → NULL.
+  *    happens downstream → NULL, via `envelope_proto_decode` (the
+  *    proto.Unmarshal analogue) for dropsonde protobuf frames or
+  *    `envelope_decode` for canonical JSON ones.
   *
   * The reader is transport only — it feeds frames to `onFrame` and
   * stops after `maxFrames`, on `shouldStop`, or when the retry budget

@@ -166,7 +166,10 @@ class EnvelopeProtoSpec extends AnyFunSuite {
       Array[Byte](0x0a, 0x7f, 1, 2), // length past end
       Array[Byte](0x0f.toByte), // field 1, wire type 7 (invalid)
       Array.fill(6)(0xff.toByte), // unterminated varint / nonsense
-      good.dropRight(1)) // truncated tail
+      good.dropRight(1), // truncated tail
+      // field 2^32+1 (wire type 2, "x"): above 2^31-1, so not an alias of
+      // field 1 (origin) but a frame no proto encoder writes
+      Array[Byte](0x8a.toByte, 0x80.toByte, 0x80.toByte, 0x80.toByte, 0x80.toByte, 0x01, 0x01, 'x'))
     val decoded = bad.toDF("p")
       .select(Functions.envelope_proto_decode(col("p")).as("e"))
     assert(decoded.filter(col("e").isNull).count() === bad.length)
