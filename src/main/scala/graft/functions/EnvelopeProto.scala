@@ -332,13 +332,14 @@ object EnvelopeProto {
     row
   }
 
-  /** The field number of a tag, compared in full: one above 2^31-1
-    * cannot come from a proto encoder and fails the frame, as protobuf-go's
-    * `protowire.DecodeTag` maps it to -1 and `ConsumeTag` rejects it (a
-    * truncating `toInt` would alias field 2^32+1 onto field 1). */
+  /** The field number of a tag, compared in full: one outside
+    * 1..2^31-1 cannot come from a proto encoder and fails the frame, as
+    * protobuf-go's `protowire.ConsumeTag` rejects numbers below 1 and
+    * `DecodeTag` maps those above 2^31-1 to -1 (a truncating `toInt`
+    * would alias field 2^32+1 onto field 1). */
   private def fieldNumber(tag: Long): Int = {
     val field = tag >>> 3
-    if (field > Int.MaxValue) fail()
+    if (field < 1 || field > Int.MaxValue) fail()
     field.toInt
   }
 

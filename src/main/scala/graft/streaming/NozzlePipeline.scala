@@ -2,8 +2,9 @@ package graft.streaming
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, Observation, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types._
 
@@ -22,8 +23,8 @@ import graft.sources.FirehoseSocketSource
   *     + slow-consumer count (isTruncated)                  O4
   *   → route(eventType → topic, templating, drop rules)     O5/O6/O7
   *   → envelope_json canonical encoding                     O8
-  *   → sink: console (O16, debug) or foreachBatch with
-  *     bounded retry + DLQ accounting (O9/O10)
+  *   → sink: console (O16, debug) or a DSv2 streaming write
+  *     with bounded retry + per-epoch DLQ files (O9/O10)
   * }}}
   *
   * The whole pre-sink pipeline is narrow (map-only): no shuffle at any
@@ -246,55 +247,23 @@ object NozzlePipeline {
     * records land in the DLQ path with `publish_fail` accounting
     * instead of being silently dropped.
     *
-    * One publish pass per micro-batch. The retry pass is observed
-    * (`ok`/`failed` counts) and only its failed rows are kept, by one
-    * eager `localCheckpoint`, so a batch costs one Spark job when
-    * nothing fails and two otherwise (the second is the DLQ append).
-    * The counts are exact: observed metrics come from that one action,
-    * and the DLQ write reads the kept rows, never the publish pass.
-    * The DLQ path is touched only when a record failed. */
+    * A DSv2 streaming write ([[PublishSink]]): each micro-batch is one
+    * Spark job whether or not records fail, and the sink plans nothing
+    * of its own. Each task publishes its rows and writes the exhausted
+    * ones to `part-<epochId>-<partitionId>.parquet` under `dlqPath`
+    * when it commits, so a replayed epoch replaces its files and the
+    * DLQ path is touched only when a record failed. The counts are
+    * exact: `publish`/`publishFail` add the committed tasks' commit
+    * messages before the epoch's commit-log entry. */
   def startDlq(
       routed: DataFrame,
       checkpoint: String,
       publisher: Publisher,
       repartitionMax: Int,
       stats: Stats,
-      dlqPath: String): StreamingQuery = {
-    routed.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val outcome = new Observation()
-        val failed = batch.select("event_id", "topic", "payload")
-          .as[(Long, String, String)]
-          .mapPartitions { it =>
-            it.map { case (id, topic, payload) =>
-              var attempt = 0
-              var ok = false
-              while (!ok && attempt <= repartitionMax) {
-                try { publisher.publish(topic, payload); ok = true }
-                catch { case _: Exception => attempt += 1 }
-              }
-              // only failed rows are kept, so a delivered one drops its text
-              if (ok) (id, null, null, ok) else (id, topic, payload, ok)
-            }
-          }
-          .toDF("event_id", "topic", "payload", "ok")
-          .observe(outcome, count_if(col("ok")).as("ok"),
-            count_if(!col("ok")).as("failed"))
-          .filter(!col("ok")).drop("ok")
-          .localCheckpoint()
-        val counts = outcome.get
-        val failN = counts("failed").asInstanceOf[Long]
-        if (failN > 0) failed.write.mode("append").parquet(dlqPath)
-        stats.publish.addAndGet(counts("ok").asInstanceOf[Long])
-        stats.publishFail.addAndGet(failN)
-        ()
-      }
-      .start()
-  }
+      dlqPath: String): StreamingQuery =
+    Shims.startStream(routed, new PublishSink(routed.sparkSession, routed.schema,
+      publisher, repartitionMax, stats, dlqPath), checkpoint, Trigger.AvailableNow())
 
   /** Streaming counter listener (O12/O13/O17): folds each progress
     * event's observed metrics into [[Stats]] and ticks the per-second

@@ -29,4 +29,19 @@ object Shims {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Starts a streaming query that appends `df` to `sink`, a DSv2 table
+    * instance: the `private[sql]` path `foreachBatch` takes, so the sink
+    * object reaches the query as is, with no provider lookup. */
+  def startStream(df: org.apache.spark.sql.DataFrame,
+      sink: org.apache.spark.sql.connector.catalog.Table, checkpoint: String,
+      trigger: org.apache.spark.sql.streaming.Trigger)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    ds.sparkSession.sessionState.streamingQueryManager.startQuery(
+      userSpecifiedName = None, userSpecifiedCheckpointLocation = Some(checkpoint),
+      df = ds, extraOptions = Map.empty, sink = sink,
+      outputMode = org.apache.spark.sql.streaming.OutputMode.Append(),
+      useTempCheckpointLocation = false, trigger = trigger)
+  }
 }

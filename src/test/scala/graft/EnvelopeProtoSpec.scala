@@ -169,7 +169,10 @@ class EnvelopeProtoSpec extends AnyFunSuite {
       good.dropRight(1), // truncated tail
       // field 2^32+1 (wire type 2, "x"): above 2^31-1, so not an alias of
       // field 1 (origin) but a frame no proto encoder writes
-      Array[Byte](0x8a.toByte, 0x80.toByte, 0x80.toByte, 0x80.toByte, 0x80.toByte, 0x01, 0x01, 'x'))
+      Array[Byte](0x8a.toByte, 0x80.toByte, 0x80.toByte, 0x80.toByte, 0x80.toByte, 0x01, 0x01, 'x'),
+      // field 0 (wire type 2, "x"), then origin "o": protowire.ConsumeTag
+      // rejects field numbers below 1, so the frame is not a row
+      Array[Byte](0x02, 0x01, 'x', 0x0a, 0x01, 'o'))
     val decoded = bad.toDF("p")
       .select(Functions.envelope_proto_decode(col("p")).as("e"))
     assert(decoded.filter(col("e").isNull).count() === bad.length)

@@ -35,6 +35,24 @@ class FlakyPublisher(flaky: Set[String], dead: Set[String], failFirst: Int)
   }
 }
 
+/** Fails metric-topic for good and, once one of its records has
+  * exhausted repartitionMax = 5 retries, throws an AssertionError (not
+  * an Exception, so not retried) on the next record of another topic. */
+class DyingPublisher extends Publisher {
+  override def publish(topic: String, payload: String): Unit =
+    if (topic == "metric-topic") {
+      val n = TestPublishLog.attempts
+        .computeIfAbsent(payload, _ => new AtomicInteger).incrementAndGet()
+      if (n > 5) DyingPublisher.exhausted.set(true)
+      throw new RuntimeException("broker down")
+    } else if (DyingPublisher.exhausted.get) throw new AssertionError(DyingPublisher.message)
+}
+
+object DyingPublisher {
+  val message = "publisher bug"
+  val exhausted = new java.util.concurrent.atomic.AtomicBoolean
+}
+
 /** Counts Spark jobs per streaming micro-batch, keyed by the local
   * properties every job of a micro-batch carries (query id, batch id).
   * A marker job submitted after the query ends fences the listener bus:
@@ -185,14 +203,15 @@ class NozzlePipelineSpec extends AnyFunSuite {
       flaky = Set("counter-topic"), dead = Set("metric-topic"), failFirst = 2)
     val jobs = new StreamJobCounter
     spark.sparkContext.addSparkListener(jobs)
-    val perBatch = try {
+    val (perBatch, sink) = try {
       val q = NozzlePipeline.startDlq(routed, tmp("nozzle-ckpt3"), publisher,
         repartitionMax = 5, stats, dlqPath)
       q.awaitTermination()
-      jobs.perDataBatch(spark, q)
+      (jobs.perDataBatch(spark, q), q.lastProgress.sink.description)
     } finally spark.sparkContext.removeSparkListener(jobs)
-    // the publish pass plus the DLQ append, nothing else
-    assert(perBatch.forall(_ <= 2), s"jobs per micro-batch: $perBatch")
+    // one job publishes and writes the DLQ rows, nothing else
+    assert(perBatch.forall(_ == 1), s"jobs per micro-batch: $perBatch")
+    assert(!sink.contains("ForeachBatchSink"), sink)
 
     val batch = Tables.events(spark, sf)
     val views = batch.filter("event_type = 'view'").count()
@@ -212,6 +231,59 @@ class NozzlePipelineSpec extends AnyFunSuite {
     val joined = dlq.join(built, Seq("event_id"), "left")
     assert(joined.count() === views)
     assert(joined.filter(!(col("payload") <=> col("built"))).count() === 0)
+  }
+
+  /** DLQ event ids, in file order; empty when the DLQ path was never made. */
+  private def dlqIds(dlqPath: String): Seq[Long] =
+    if (!new java.io.File(dlqPath).exists()) Nil
+    else spark.read.parquet(dlqPath).select("event_id").collect().map(_.getLong(0)).toSeq
+
+  test("DLQ: a replayed epoch rewrites its DLQ rows instead of appending them again") {
+    val srcDir = tmp("nozzle-src4")
+    stageEventsFile(srcDir, "part-0.parquet")
+    val ckpt = tmp("nozzle-ckpt4")
+    val dlqPath = tmp("nozzle-dlq4") + "/dlq"
+    val dead = new FlakyPublisher(Set.empty, dead = Set("metric-topic"), 0)
+    def drain(): Unit = NozzlePipeline.startDlq(
+      NozzlePipeline.build(NozzlePipeline.source(spark, srcDir), cfg),
+      ckpt, dead, 5, new Stats(0), dlqPath).awaitTermination()
+    drain()
+    val first = dlqIds(dlqPath)
+    val views = Tables.events(spark, sf).filter("event_type = 'view'").count()
+    assert(first.size === views)
+    // the crash window: the batch ran but its commit-log entry is lost,
+    // so the restarted query runs the same epoch again
+    val commits = new java.io.File(ckpt, "commits")
+    val last = commits.listFiles().filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
+    assert(last.delete())
+    drain()
+    val again = dlqIds(dlqPath)
+    assert(again.size === again.distinct.size, "a replayed epoch duplicated DLQ rows")
+    assert(again.toSet === first.toSet)
+  }
+
+  test("DLQ: a task that dies on a non-Exception publishes nothing to the DLQ") {
+    val srcDir = tmp("nozzle-src5")
+    stageEventsFile(srcDir, "part-0.parquet")
+    val dlqPath = tmp("nozzle-dlq5") + "/dlq"
+    TestPublishLog.reset()
+    DyingPublisher.exhausted.set(false)
+    val stats = new Stats(0)
+    val q = NozzlePipeline.startDlq(
+      NozzlePipeline.build(NozzlePipeline.source(spark, srcDir), cfg),
+      tmp("nozzle-ckpt5"), new DyingPublisher, 5, stats, dlqPath)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination())
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[AssertionError] &&
+      c.getMessage == DyingPublisher.message), e)
+    // a record had failed for good, so the dying task had opened its DLQ file
+    assert(DyingPublisher.exhausted.get)
+    val dir = new java.io.File(dlqPath)
+    assert(dir.isDirectory)
+    val left = Option(dir.listFiles()).fold(Seq.empty[String])(_.map(_.getName).toSeq)
+    assert(!left.exists(n => n.startsWith("part-") || n.endsWith(".tmp")), left)
+    assert(stats.publish.get() === 0)
+    assert(stats.publishFail.get() === 0)
   }
 
   test("source: an empty replay dir gets the events schema; a corrupt footer fails in source()") {
