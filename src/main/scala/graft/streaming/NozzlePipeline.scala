@@ -4,7 +4,6 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types._
 
@@ -250,11 +249,15 @@ object NozzlePipeline {
     * A DSv2 streaming write ([[PublishSink]]): each micro-batch is one
     * Spark job whether or not records fail, and the sink plans nothing
     * of its own. Each task publishes its rows and writes the exhausted
-    * ones to `part-<epochId>-<partitionId>.parquet` under `dlqPath`
-    * when it commits, so a replayed epoch replaces its files and the
-    * DLQ path is touched only when a record failed. The counts are
-    * exact: `publish`/`publishFail` add the committed tasks' commit
-    * messages before the epoch's commit-log entry. */
+    * ones to `part-<queryId>-<epochId>-<partitionId>.parquet` under
+    * `dlqPath` when it commits (`queryId` is the id the checkpoint
+    * keeps), so queries sharing `dlqPath` keep each other's rows, and
+    * the DLQ path is touched only when a record failed. A restart that
+    * replays an uncommitted epoch replaces its files and, on the
+    * driver's first commit, deletes those of partitions the replay did
+    * not rewrite. The counts are exact: `publish`/`publishFail` add the
+    * committed tasks' commit messages before the epoch's commit-log
+    * entry. */
   def startDlq(
       routed: DataFrame,
       checkpoint: String,
@@ -262,8 +265,7 @@ object NozzlePipeline {
       repartitionMax: Int,
       stats: Stats,
       dlqPath: String): StreamingQuery =
-    Shims.startStream(routed, new PublishSink(routed.sparkSession, routed.schema,
-      publisher, repartitionMax, stats, dlqPath), checkpoint, Trigger.AvailableNow())
+    PublishSink.start(routed, checkpoint, publisher, repartitionMax, stats, dlqPath)
 
   /** Streaming counter listener (O12/O13/O17): folds each progress
     * event's observed metrics into [[Stats]] and ticks the per-second

@@ -30,6 +30,12 @@ object Shims {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** A fresh Hadoop conf carrying the session's settings, as Spark's own
+    * file writers build theirs: `SessionState` is `private[sql]`. */
+  def newHadoopConf(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
+
   /** Starts a streaming query that appends `df` to `sink`, a DSv2 table
     * instance: the `private[sql]` path `foreachBatch` takes, so the sink
     * object reaches the query as is, with no provider lookup. */

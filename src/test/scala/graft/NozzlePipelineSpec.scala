@@ -256,10 +256,44 @@ class NozzlePipelineSpec extends AnyFunSuite {
     val commits = new java.io.File(ckpt, "commits")
     val last = commits.listFiles().filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
     assert(last.delete())
+    // and the earlier run had a partition the replay will not have: its
+    // file (a copy of a real one) must not survive the replay
+    val written = new java.io.File(dlqPath).listFiles().map(_.getName)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    val (stem, part) = written.map { n =>
+      val i = n.lastIndexOf('-')
+      (n.take(i), n.slice(i + 1, n.length - ".parquet".length).toInt)
+    }.max
+    Files.copy(Paths.get(dlqPath, s"$stem-$part.parquet"),
+      Paths.get(dlqPath, s"$stem-${part + 1000}.parquet"))
+    assert(dlqIds(dlqPath).size > first.size)
     drain()
     val again = dlqIds(dlqPath)
     assert(again.size === again.distinct.size, "a replayed epoch duplicated DLQ rows")
     assert(again.toSet === first.toSet)
+  }
+
+  test("DLQ: queries that share a DLQ path keep each other's rows") {
+    val srcDir = tmp("nozzle-src6")
+    stageEventsFile(srcDir, "part-0.parquet")
+    val dlqPath = tmp("nozzle-dlq6") + "/dlq"
+    val dead = new FlakyPublisher(Set.empty, dead = Set("metric-topic"), 0)
+    val listeners = spark.streams.listListeners().length
+    // a fresh checkpoint each time: epoch ids start again at 0
+    def drain(): Unit = NozzlePipeline.startDlq(
+      NozzlePipeline.build(NozzlePipeline.source(spark, srcDir), cfg),
+      tmp("nozzle-ckpt6"), dead, 5, new Stats(0), dlqPath).awaitTermination()
+    drain()
+    val first = dlqIds(dlqPath)
+    val views = Tables.events(spark, sf).filter("event_type = 'view'").count()
+    assert(first.size === views)
+    drain()
+    val both = dlqIds(dlqPath)
+    assert(both.size === 2 * views)
+    assert(both.groupBy(identity).values.forall(_.size == 2))
+    assert(both.toSet === first.toSet)
+    // each query's sink is closed, and its listener removed, once it ends
+    eventually(spark.streams.listListeners().length == listeners)
   }
 
   test("DLQ: a task that dies on a non-Exception publishes nothing to the DLQ") {
