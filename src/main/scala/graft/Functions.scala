@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.graftshim.Shims
 
-import graft.functions.{EnvelopeDecode, EnvelopeJson, EnvelopeProtoDecode, EnvelopeProtoEncode, HllMode, HllSketch, KmvMins, MinHashAgg, RollingHash, SortedIntersectCount, UuidStr}
+import graft.functions.{EnvelopeDecode, EnvelopeJson, EnvelopeProtoDecode, EnvelopeProtoEncode, HllMode, HllSketch, KmvMins, MinHashAgg, RollingHash, SortedIntersectCount, SurrogateEnvelope, UuidStr}
 
 /** Custom scalar functions (native Catalyst expressions, codegen-able)
   * + their SQL registration. Column-API entry points below; SQL names
@@ -20,6 +20,14 @@ object Functions {
     * reference encoder.go:15-18 semantics. */
   def envelope_json(env: Column): Column =
     Shims.column(EnvelopeJson(Shims.expression(env)))
+
+  /** surrogate_envelope(event_id, ts_ns, user_id, event_type, value,
+    * props): one surrogate event as a canonical Envelope struct, built
+    * by one node (the nozzle's envelope assembly). */
+  def surrogate_envelope(eventId: Column, tsNs: Column, userId: Column,
+      eventType: Column, value: Column, props: Column): Column =
+    Shims.column(SurrogateEnvelope(
+      Seq(eventId, tsNs, userId, eventType, value, props).map(Shims.expression)))
 
   /** envelope_decode(json): parse canonical Envelope JSON back to the
     * struct; malformed → NULL (DROPMALFORMED, async.go:274-280). */

@@ -69,7 +69,7 @@ object IvfIndex {
   private def tombDir(path: String): String = s"$path/_tombstones"
 
   private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    p.getFileSystem(org.apache.spark.sql.graftshim.Shims.newHadoopConf(spark))
 
   /** Data files currently in the tombstone side-table. File-level (not
     * dir-level) listing so [[compact]] can snapshot exactly the set it

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.graftshim.Shims
 
 /** Exactly-once foreachBatch delivery to a file ledger.
   *
@@ -24,7 +25,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
   * Scale posture: the existence probe is one driver-side metadata
   * call per micro-batch; the write is the batch's own parallelism.
   * Works against any Hadoop filesystem (local, HDFS, object stores
-  * with a rename-consistent committer).
+  * with a rename-consistent committer). File systems open with the
+  * session's Hadoop conf, so Hadoop settings made on the session apply.
   */
 object IdempotentSink {
 
@@ -34,7 +36,7 @@ object IdempotentSink {
     (batch: Dataset[Row], batchId: Long) =>
       val target = new Path(s"$dir/batch_id=$batchId")
       val fs = target.getFileSystem(
-        batch.sparkSession.sparkContext.hadoopConfiguration)
+        Shims.newHadoopConf(batch.sparkSession))
       val complete = fs.exists(new Path(target, "_SUCCESS"))
       if (!complete)
         batch.write.mode("overwrite").parquet(target.toString)
@@ -57,7 +59,7 @@ object IdempotentSink {
     (batch: Dataset[Row], batchId: Long) =>
       val target = new Path(s"$dir/batch_id=$batchId")
       val fs = target.getFileSystem(
-        batch.sparkSession.sparkContext.hadoopConfiguration)
+        Shims.newHadoopConf(batch.sparkSession))
       val complete = fs.exists(new Path(target, "_SUCCESS"))
       if (!complete)
         graft.ops.OutputLayout.write(batch.toDF(), target.toString,
@@ -108,7 +110,7 @@ object IdempotentSink {
         inner(batch, batchId)
         val target = new Path(s"$dir/_sketches/batch_id=$batchId")
         val fs = target.getFileSystem(
-          batch.sparkSession.sparkContext.hadoopConfiguration)
+          Shims.newHadoopConf(batch.sparkSession))
         if (!fs.exists(new Path(target, "_SUCCESS")))
           batch.toDF()
             .groupBy(keys.map(col): _*)
@@ -133,7 +135,7 @@ object IdempotentSink {
     * not per row) and keep only marker-bearing directories. */
   def read(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = root.getFileSystem(Shims.newHadoopConf(spark))
     val committed = fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
       .filter(s => fs.exists(new Path(s.getPath, "_SUCCESS")))

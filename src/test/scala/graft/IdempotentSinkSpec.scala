@@ -8,6 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.IdempotentSink
 
+/** The local file system under a scheme of its own, `graftprobe:`, which
+  * resolves only where a Hadoop conf names this class for it. */
+class ProbeFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftprobe:///")
+  override def getScheme: String = "graftprobe"
+}
+
 /** Exactly-once side effects under batch replay: delete a batch's
   * commit marker from the checkpoint (the crash window between
   * execution and commit), restart, and the replayed batch must NOT
@@ -188,5 +195,22 @@ class IdempotentSinkSpec extends AnyFunSuite {
         leaves += 1)
     assert(leaves.toLong === planned,
       s"compacted leaves $leaves != planned shards $planned")
+  }
+
+  test("the sink opens its file system with the session's Hadoop conf") {
+    // set on the session only (a session conf reaches the Hadoop conf
+    // under its own name): the SparkContext's Hadoop conf knows no
+    // graftprobe scheme
+    val key = "fs.graftprobe.impl"
+    assert(spark.sparkContext.hadoopConfiguration.get("fs.graftprobe.impl") === null)
+    spark.conf.set(key, classOf[ProbeFileSystem].getName)
+    try {
+      val ledger = "graftprobe://" + tmp("idem-probe")
+      val batch = spark.range(5).toDF("event_id")
+      IdempotentSink.parquetWriter(ledger)(batch, 0L)
+      IdempotentSink.parquetWriter(ledger)(batch, 0L) // committed: skipped
+      val back = IdempotentSink.read(spark, ledger)
+      assert(back.select("event_id").collect().map(_.getLong(0)).sorted.toSeq === (0L until 5L))
+    } finally spark.conf.unset(key)
   }
 }

@@ -5,8 +5,12 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{NozzlePipeline, Stats}
@@ -147,6 +151,47 @@ class NozzlePipelineSpec extends AnyFunSuite {
       val snap = stats.json()
       assert(snap.contains("\"consume\":" + total))
     } finally spark.streams.removeListener(listener)
+  }
+
+  /** The optimized plan of a streaming frame's last micro-batch. */
+  private def batchPlan(df: org.apache.spark.sql.DataFrame) = {
+    val q = df.writeStream.format("noop").option("checkpointLocation", tmp("nozzle-ckpt-plan"))
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.optimizedPlan
+  }
+
+  /** The nozzle plan's shape: one `envelopes` node builds the envelope,
+    * and `CollectMetrics` reads only narrow columns. */
+  private def assertCompactPlan(df: org.apache.spark.sql.DataFrame,
+      envelopes: Expression => Boolean): Unit = {
+    val plan = batchPlan(df)
+    val exprs = plan.flatMap(_.expressions)
+    assert(exprs.flatMap(_.collect { case e if envelopes(e) => e }).size === 1, plan)
+    val observed = plan.collect { case c: CollectMetrics if c.name == "nozzle" => c }
+    assert(observed.size === 1, plan)
+    val wide = observed.head.child.output.filter(_.dataType.isInstanceOf[StructType])
+    assert(wide.isEmpty, s"struct columns cross observe: $wide")
+    val typeCases = exprs.flatMap(_.collect {
+      case c: CaseWhen if c.references.exists(_.name == "event_type") => c
+    })
+    assert(typeCases.isEmpty, s"CASE over event_type outside the envelope node: $typeCases")
+  }
+
+  test("plan: one envelope node, only narrow columns reach observe") {
+    val srcDir = tmp("nozzle-src-plan")
+    stageEventsFile(srcDir, "part-0.parquet")
+    assertCompactPlan(NozzlePipeline.build(NozzlePipeline.source(spark, srcDir), cfg),
+      _.isInstanceOf[graft.functions.SurrogateEnvelope])
+    // the protobuf frame adapter's path (DetectorSpec's shape)
+    val frames = tmp("nozzle-frames-plan")
+    NozzlePipeline.withEnvelope(Tables.events(spark, sf))
+      .select(col("event_id"), Functions.envelope_proto(col("envelope")).as("frame"))
+      .write.mode("overwrite").parquet(frames)
+    val stream = spark.readStream.schema(spark.read.parquet(frames).schema).parquet(frames)
+      .select(col("event_id"), Functions.envelope_proto_decode(col("frame")).as("envelope"))
+    assertCompactPlan(NozzlePipeline.fromEnvelopes(stream, cfg),
+      _.isInstanceOf[graft.functions.EnvelopeProtoDecode])
   }
 
   test("checkpoint recovery: restart processes only new files (O20)") {
