@@ -20,7 +20,14 @@ import org.apache.spark.sql.SparkSession
   *    logs) written through Spark's `FileSystemBasedCheckpointFileManager`
   *    instead of the `FileContext`-based default, which on a Hadoop
   *    build without native IO forks a `readlink` per link probe during
-  *    each rename (set in [[apply]]).
+  *    each rename (set in [[apply]]);
+  *  - `fs.file.impl` is [[InProcessLocalFileSystem]], which sets file
+  *    modes in-process where the stock local file system forks a
+  *    `chmod` for each file it creates (set in [[tune]]). It is a
+  *    SparkContext Hadoop conf (`spark.hadoop.`), not a session conf:
+  *    Hadoop caches `FileSystem` instances per scheme, authority and
+  *    user, not per conf, so the class must be named before the JVM's
+  *    first `file:` lookup, and only the builder conf is in place then.
   */
 object GraftSession {
 
@@ -34,6 +41,7 @@ object GraftSession {
     // tune() runs after the callers' own builder configs, so this
     // value wins over any shuffle.partitions they set
     .config("spark.sql.shuffle.partitions", cpus().toString)
+    .config("spark.hadoop.fs.file.impl", classOf[InProcessLocalFileSystem].getName)
 
   /** Local core count for the entry points' `local[N]` master:
     * `SPARK_GRAFT_CPUS`, default 32. Fails fast unless it is a positive

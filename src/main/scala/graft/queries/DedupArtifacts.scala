@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types.LongType
 
 import graft.Tables
@@ -80,7 +81,7 @@ object DedupArtifacts {
     s.sql(s"DROP TABLE IF EXISTS $table")
     val wh = new org.apache.hadoop.fs.Path(
       s.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-    val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = wh.getFileSystem(Shims.newHadoopConf(s))
     if (fs.exists(wh)) fs.delete(wh, true)
   }
 
@@ -155,7 +156,7 @@ object DedupArtifacts {
   // -------------------------------------------------------------------
 
   private def hadoopFs(s: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    p.getFileSystem(Shims.newHadoopConf(s))
 
   private def stageDir(s: SparkSession, d: String, op: String, opId: Long) =
     new org.apache.hadoop.fs.Path(

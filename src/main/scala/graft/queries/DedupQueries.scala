@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types._
 
 import graft.Tables
@@ -1398,7 +1399,7 @@ object DedupQueries {
         Bucketing.writeBucketed(survivors, table, "bkey", buckets)
         // remove exactly the snapshot consumed above; later-arriving
         // tombstone files stay pending in the side table
-        val conf = s.sparkContext.hadoopConfiguration
+        val conf = Shims.newHadoopConf(s)
         consumed.foreach { f =>
           val p = new org.apache.hadoop.fs.Path(f)
           p.getFileSystem(conf).delete(p, false)

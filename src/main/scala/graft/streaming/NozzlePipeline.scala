@@ -32,11 +32,14 @@ import graft.sources.FirehoseSocketSource
   * }}}
   *
   * The plan is kept small because a micro-batch's cost on small
-  * batches is mostly planning: the optimizer runs over this plan three
-  * times per micro-batch (once for the batch, then once for each of the
-  * two `SQLExecutionStart` plan descriptions Spark builds in the sink's
-  * `addBatch`). The envelope is one opaque node because Catalyst inlines
-  * a `named_struct` into each consumer: the router became a CASE of
+  * batches is mostly planning plus the sink's `addBatch`: the
+  * checkpoint log writes take ~1 ms each since file creates stopped
+  * forking `chmod` ([[graft.InProcessLocalFileSystem]]), and the
+  * optimizer runs over this plan three times per micro-batch (once for
+  * the batch, then once for each of the two `SQLExecutionStart` plan
+  * descriptions Spark builds in the sink's `addBatch`). The envelope
+  * is one opaque node because Catalyst inlines a `named_struct` into
+  * each consumer: the router became a CASE of
   * CASEs over the `event_type` string, re-planned and re-generated on
   * every batch. Only narrow columns cross `observe`, because
   * `CollectMetrics` is a stage boundary where a struct would be copied

@@ -1,8 +1,24 @@
 package graft
 
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.DedupArtifacts
+import graft.queries.{DedupArtifacts, DedupQueries}
+
+/** The local file system, recording the paths it deletes. A spec names
+  * it as `fs.file.impl` on the session only, with that scheme's cache
+  * off, so only lookups through the session's Hadoop conf reach it: the
+  * SparkContext's conf keeps resolving to the cached `file:` instance. */
+class DeleteRecordingFileSystem extends LocalFileSystem {
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    DeleteRecordingFileSystem.deleted.add(p.toUri.getPath)
+    super.delete(p, recursive)
+  }
+}
+
+object DeleteRecordingFileSystem {
+  val deleted = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
 
 /** Crash-safety of the two-table artifact maintenance ops
   * ([[DedupArtifacts.applyForget]]/[[DedupArtifacts.applyNewPairs]]):
@@ -14,7 +30,9 @@ import graft.queries.DedupArtifacts
   * IdempotentSinkSpec discipline applied to table maintenance.
   *
   * Also pins the landed-wins payload rule: resubmitting an edge with a
-  * different (inter, uni) never flips the landed artifact row.
+  * different (inter, uni) never flips the landed artifact row, and that
+  * the maintenance ops reach the file system through the session's
+  * Hadoop conf.
   */
 class MaintReplaySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -137,5 +155,41 @@ class MaintReplaySpec extends AnyFunSuite {
       assert(payloads === Set((2L, 11L, 5L, 20L)),
         s"landed payload must win over the resubmission: $payloads")
     } finally cleanup(tmp)
+  }
+
+  test("maintenance ops open their file systems with the session's Hadoop conf") {
+    val tmp = java.nio.file.Files.createTempDirectory("maintconf").toString
+    writeCorpus(tmp)
+    val hist = "maintconf_hist"
+    val s2 = spark
+    import s2.implicits._
+    // the pairs artifact's directory, as a previous JVM would leave it:
+    // the first land must delete it
+    val orphan = new Path(spark.conf.get("spark.sql.warehouse.dir"),
+      DedupArtifacts.pairsTable(tmp).toLowerCase).toUri.getPath
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(orphan, "stale"))
+    val keys = Map("fs.file.impl" -> classOf[DeleteRecordingFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    DeleteRecordingFileSystem.deleted.clear()
+    try {
+      DedupArtifacts.applyForget(spark, tmp, Seq(2L).toDF("doc_id"), opId = 3L)
+      DedupQueries.writeNearDupHistory(spark, tmp, hist)
+      DedupQueries.tombNearDupHistory(spark, hist, Seq(2L).toDF("doc_id"))
+      val tombs = spark.table(s"${hist}_tombs").inputFiles.map(new Path(_).toUri.getPath).toSet
+      assert(tombs.nonEmpty)
+      DedupQueries.compactNearDupHistory(spark, hist)
+      val deleted = DeleteRecordingFileSystem.deleted.toArray.map(_.toString).toSet
+      val stage = new Path(spark.conf.get("spark.sql.warehouse.dir"),
+        s"_graft_maint/${DedupArtifacts.slug(tmp)}/forget/op_id=3").toUri.getPath
+      assert(deleted.contains(orphan), "stale artifact dir") // DedupArtifacts.dropStale
+      assert(deleted.contains(stage), "consumed ledger entry") // DedupArtifacts.publish
+      assert(tombs.subsetOf(deleted), "consumed tombstones") // compactNearDupHistory
+    } finally {
+      keys.keys.foreach(spark.conf.unset)
+      spark.sql(s"DROP TABLE IF EXISTS $hist")
+      spark.sql(s"DROP TABLE IF EXISTS ${hist}_tombs")
+      cleanup(tmp)
+    }
   }
 }

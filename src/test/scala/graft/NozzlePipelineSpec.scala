@@ -4,15 +4,22 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.config.GraftConfig
 import graft.streaming.{NozzlePipeline, Stats}
 import graft.streaming.NozzlePipeline.{Publisher, TopicConfig}
 
@@ -55,6 +62,20 @@ class DyingPublisher extends Publisher {
 object DyingPublisher {
   val message = "publisher bug"
   val exhausted = new java.util.concurrent.atomic.AtomicBoolean
+}
+
+/** Counts optimizer passes over the nozzle plan (the one that carries
+  * `observe("nozzle", …)`), keyed by the micro-batch id the stream
+  * thread runs under. Add it to `extraOptimizations` before the query
+  * starts: a query optimizes with the rules its session had then. */
+class NozzlePassCounter(sc: SparkContext) extends Rule[LogicalPlan] {
+  val passes = new ConcurrentHashMap[String, AtomicInteger]()
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    if (plan.exists { case c: CollectMetrics => c.name == "nozzle"; case _ => false })
+      passes.computeIfAbsent(String.valueOf(sc.getLocalProperty("streaming.sql.batchId")),
+        _ => new AtomicInteger).incrementAndGet()
+    plan
+  }
 }
 
 /** Counts Spark jobs per streaming micro-batch, keyed by the local
@@ -248,14 +269,25 @@ class NozzlePipelineSpec extends AnyFunSuite {
       flaky = Set("counter-topic"), dead = Set("metric-topic"), failFirst = 2)
     val jobs = new StreamJobCounter
     spark.sparkContext.addSparkListener(jobs)
-    val (perBatch, sink) = try {
+    val optimizer = new NozzlePassCounter(spark.sparkContext)
+    spark.experimental.extraOptimizations :+= optimizer
+    val (perBatch, sink, batches) = try {
       val q = NozzlePipeline.startDlq(routed, tmp("nozzle-ckpt3"), publisher,
         repartitionMax = 5, stats, dlqPath)
       q.awaitTermination()
-      (jobs.perDataBatch(spark, q), q.lastProgress.sink.description)
-    } finally spark.sparkContext.removeSparkListener(jobs)
+      (jobs.perDataBatch(spark, q), q.lastProgress.sink.description,
+        q.recentProgress.filter(_.numInputRows > 0).map(_.batchId.toString).toSet)
+    } finally {
+      spark.sparkContext.removeSparkListener(jobs)
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations.filterNot(_ eq optimizer)
+    }
     // one job publishes and writes the DLQ rows, nothing else
     assert(perBatch.forall(_ == 1), s"jobs per micro-batch: $perBatch")
+    // the plan is optimized at most three times per micro-batch
+    val passes = optimizer.passes.asScala.map { case (b, n) => b -> n.get }.toMap
+    assert(passes.keySet === batches, passes)
+    assert(passes.values.forall(_ <= 3), s"optimizer passes per micro-batch: $passes")
     assert(!sink.contains("ForeachBatchSink"), sink)
 
     val batch = Tables.events(spark, sf)
@@ -276,6 +308,44 @@ class NozzlePipelineSpec extends AnyFunSuite {
     val joined = dlq.join(built, Seq("event_id"), "left")
     assert(joined.count() === views)
     assert(joined.filter(!(col("payload") <=> col("built"))).count() === 0)
+  }
+
+  test("a NozzleApp drain forks no process per micro-batch") {
+    val srcDir = tmp("nozzle-src-fork")
+    (0 until 4).foreach(i => stageEventsFile(srcDir, s"part-$i.parquet"))
+    val base = tmp("nozzle-app-fork")
+    val app = {
+      val basic = GraftConfig.load("fixtures/basic.toml").toOption.get
+      basic.copy(kafka = basic.kafka.copy(topic = cfg))
+    }
+    val source = NozzlePipeline.source(spark, srcDir)
+    val dead = new FlakyPublisher(Set.empty, dead = Set("metric-topic"), 0)
+    val recording = new Recording()
+    recording.enable("jdk.ProcessStart").withStackTrace()
+    recording.start()
+    val running = try {
+      val r = NozzleApp.start(spark, app, source, s"$base/ck", s"$base/dlq",
+        publisher = Some(dead), statsIntervalMs = 0)
+      r.awaitTermination()
+      r
+    } finally recording.stop()
+    val jfr = Files.createTempFile("nozzle-fork", ".jfr")
+    val events = try {
+      running.shutdown()
+      recording.dump(jfr)
+      RecordingFile.readAllEvents(jfr).asScala.toSeq
+    } finally {
+      recording.close()
+      Files.delete(jfr)
+    }
+    assert(running.query.recentProgress.count(_.numInputRows > 0) === 4)
+    // the failed records went to DLQ files
+    val views = Tables.events(spark, sf).filter("event_type = 'view'").count()
+    assert(spark.read.parquet(s"$base/dlq").count() === 4 * views)
+    val forks = events.filter(e => e.getEventType.getName == "jdk.ProcessStart" &&
+      Option(e.getStackTrace).exists(_.getFrames.asScala.exists(
+        _.getMethod.getType.getName == "org.apache.hadoop.util.Shell"))).map(_.getString("command"))
+    assert(forks.isEmpty, s"${forks.size} Hadoop shell forks")
   }
 
   /** DLQ event ids, in file order; empty when the DLQ path was never made. */
